@@ -78,11 +78,6 @@ def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Col
     return F.when(n > 0, stopword_count(col, sw) / n).otherwise(F.lit(0.0))
 
 
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    """Per-language stopword-hit scores for heuristic language ID."""
-    return {lang: stopword_count(col, words) for lang, words in STOPWORDS.items()}
-
-
 def predicted_lang_from_tokens(lowered_tokens: Column) -> Column:
     """Argmax language over an ALREADY-LOWERED token array — the
     shared core of :func:`predicted_lang`, shaped as ONE fold over the
@@ -140,74 +135,9 @@ def predicted_lang(col: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def mean_word_length(col: Column | str) -> Column:
-    """Mean characters per whitespace token (NULL-safe: 0-token docs
-    yield NULL, callers treat that as a length-rule failure)."""
-    toks = whitespace_tokens(col)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    n = F.size(toks)
-    return F.when(n > 0, total / n)
-
-
-def symbol_word_ratio(col: Column | str) -> Column:
-    """Fraction of tokens containing a hash or ellipsis symbol — the
-    Gopher symbol-to-word screen for tag/link spam."""
-    toks = whitespace_tokens(col)
-    hits = F.size(
-        F.filter(
-            toks,
-            lambda t: t.contains("#") | t.contains("...") | t.contains("…"),
-        )
-    )
-    n = F.size(toks)
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
-def alpha_word_ratio(col: Column | str) -> Column:
-    """Fraction of tokens containing at least one alphabetic character
-    (Gopher requires >= 0.8 — screens numeric/markup soup)."""
-    toks = whitespace_tokens(col)
-    hits = F.size(F.filter(toks, lambda t: t.rlike("[A-Za-z]")))
-    n = F.size(toks)
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
 def _lines(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(c, "\n"), lambda x: F.trim(x) != "")
-
-
-def bullet_line_ratio(col: Column | str) -> Column:
-    """Fraction of non-blank lines starting with a bullet marker."""
-    lines = _lines(col)
-    hits = F.size(F.filter(lines, lambda x: F.trim(x).rlike(r"^[-*•]")))
-    n = F.size(lines)
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
-def ellipsis_line_ratio(col: Column | str) -> Column:
-    """Fraction of non-blank lines ending in an ellipsis (truncated
-    scrape symptom)."""
-    lines = _lines(col)
-    hits = F.size(
-        F.filter(
-            lines, lambda x: F.trim(x).rlike(r"(\.\.\.|…)$")
-        )
-    )
-    n = F.size(lines)
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
-def duplicate_line_fraction(col: Column | str) -> Column:
-    """1 - distinct/total over non-blank lines — the within-document
-    repetition screen (boilerplate, scraper loops)."""
-    lines = _lines(col)
-    n = F.size(lines)
-    return F.when(
-        n > 0, (n - F.size(F.array_distinct(lines))) / n
-    ).otherwise(F.lit(0.0))
 
 
 def _gopher_counters(col: Column | str) -> Column:
@@ -361,44 +291,6 @@ def char_fingerprint(col: Column | str, modulus: int = 1_000_000_007) -> Column:
         F.lit(0).cast("long"),
         lambda acc, ch: (acc * 31 + F.ascii(ch)) % modulus,
     )
-
-
-def winnowing_fingerprints(
-    col: Column | str, k: int = 8, window: int = 4, modulus: int = 1_000_000_007
-) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS algorithm): hash every k-char gram with a
-    base-31 polynomial, then keep the MIN hash of each sliding window
-    of ``window`` consecutive grams, distinct. Guarantees any shared
-    substring of length >= k + window - 1 yields a shared fingerprint —
-    the positional robustness plain char_fingerprint lacks.
-
-    Array-expression form — fine for SHORT payloads (config strings,
-    titles). For document corpora use the relational formulation in
-    queries.q_winnow_fingerprints (posexplode + lead-polynomial +
-    window min): interpreted lambda evaluation re-splits the text per
-    gram here, measured ~22x slower at 300-char docs and O(n^2) in
-    document length. Short documents (< k chars) fingerprint as their
-    whole-text hash.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    chars = F.split(c, "")
-    # gram_hash(i) = poly hash of chars[i..i+k-1], 1-based i
-    gram_hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.aggregate(
-            F.slice(chars, i, k),
-            F.lit(0).cast("long"),
-            lambda acc, ch: (acc * 31 + F.ascii(ch)) % modulus,
-        ),
-    )
-    n_grams = F.greatest(n - (k - 1), F.lit(1))
-    windows = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_grams - (window - 1), F.lit(1))),
-        lambda i: F.array_min(F.slice(gram_hashes, i, window)),
-    )
-    return F.array_sort(F.array_distinct(windows))
 
 
 def with_gopher_signals(df, text_col: str = "text", out_col: str = "gsig"):

@@ -80,69 +80,6 @@ def cdc_apply(
     return joined.where(survives).select(*out_cols)
 
 
-def streaming_cdc_apply(
-    stream: DataFrame,
-    snapshot_path: str,
-    checkpoint: str,
-    key_cols: Sequence[str],
-    ver_col: str = "ver",
-    op_col: str = "op",
-    trigger_available_now: bool = True,
-):
-    """Maintain the parquet snapshot at ``snapshot_path`` from a CDC
-    change STREAM: each micro-batch applies through :func:`cdc_apply`
-    and atomically swaps the snapshot (write-staging-then-rename, the
-    compaction sink's idiom). The first batch bootstraps an empty
-    snapshot from the batch schema minus the CDC columns.
-
-    Replay safety: cdc_apply is idempotent for U/D ops but an 'I' of a
-    key deleted in a LATER already-applied batch would resurrect it on
-    replay — so, like plans/ivm.streaming_additive_mart, an
-    epoch-marker directory turns replayed batches into no-ops (marker
-    written after the swap; the residual crash window between swap and
-    marker is the usual non-transactional two-store gap).
-    Returns the StreamingQuery.
-    """
-    from ..sources.sinks import _hadoop_fs, _swap_into, recover_swap
-
-    def _apply(batch: DataFrame, epoch: int) -> None:
-        spark = batch.sparkSession
-        fs, _ = _hadoop_fs(spark, snapshot_path.rstrip("/") + "__epochs")
-        marker = spark._jvm.org.apache.hadoop.fs.Path(
-            snapshot_path.rstrip("/") + "__epochs", str(epoch)
-        )
-        staging = snapshot_path.rstrip("/") + "__cdc_staging"
-        # adopt the surviving snapshot if a prior apply died mid-swap —
-        # BEFORE the marker early-return (r10 ADVICE): a REPLAYED epoch
-        # arriving after a different epoch crashed mid-swap used to
-        # no-op here and leave the snapshot path missing until the next
-        # new epoch, failing readers even though a complete copy sat in
-        # staging/__old. Any batch, replay included, now repairs first.
-        recover_swap(spark, staging, snapshot_path)
-        if fs.exists(marker):
-            return
-        out_cols = [c for c in batch.columns if c not in (ver_col, op_col)]
-        try:
-            snap = spark.read.parquet(snapshot_path)
-        except Exception as exc:
-            if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-                raise
-            snap = batch.select(*out_cols).limit(0)
-        nxt = cdc_apply(snap, batch, list(key_cols), ver_col, op_col)
-        nxt.write.mode("overwrite").parquet(staging)
-        _swap_into(spark, staging, snapshot_path)
-        fs.mkdirs(marker)
-
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def cdc_apply_versioned(
     spark,
     root: str,
@@ -153,56 +90,25 @@ def cdc_apply_versioned(
     epoch: int | None = None,
     keep_versions: int = 2,
 ) -> int | None:
-    """EXACTLY-ONCE CDC batch apply into a versioned snapshot: the
-    batch epoch rides INSIDE the atomic commit marker (the
-    plans/ivm.maintain_additive_mart_versioned protocol), so the
-    epoch-directory variant's residual window — a crash between the
-    snapshot swap and the marker mkdir replays an 'I' whose key a
-    later batch deleted — does not exist: publication and replay-guard
-    are one rename. Returns the committed version, or None when
-    ``epoch`` is already committed (replay)."""
-    from ..sources.sinks import (
-        _commit_payload,
-        _gc_data_dirs,
-        _hadoop_fs,
-        _publish_commit,
-        _versioned_data_dir,
-        current_version,
-    )
-
-    cur = current_version(spark, root)
-    committed_epoch = None
-    if cur is not None:
-        payload = _commit_payload(spark, root, cur) or ""
-        for line in payload.splitlines():
-            if line.startswith("epoch="):
-                committed_epoch = int(line[len("epoch="):])
-    if (
-        epoch is not None
-        and committed_epoch is not None
-        and epoch <= committed_epoch
-    ):
-        return None
+    """EXACTLY-ONCE CDC batch apply into a versioned snapshot (the
+    sources/sinks commit protocol, versioned form): the batch epoch
+    rides INSIDE the atomic commit marker, so a replayed batch — whose
+    'I' of a key a later batch deleted would otherwise resurrect it —
+    is a committed no-op. The first batch bootstraps an empty snapshot
+    from the batch schema minus the CDC columns. Returns the committed
+    version, or None when ``epoch`` is already committed (replay)."""
+    from ..sources.sinks import _commit_versioned
 
     out_cols = [c for c in batch.columns if c not in (ver_col, op_col)]
-    if cur is None:
-        snap = batch.select(*out_cols).limit(0)
-        nxt = 1
-    else:
-        snap = spark.read.parquet(_versioned_data_dir(root, cur))
-        nxt = cur + 1
-    result = cdc_apply(snap, batch, list(key_cols), ver_col, op_col)
-    data_dir = _versioned_data_dir(root, nxt)
-    fs, jdata = _hadoop_fs(spark, data_dir)
-    if fs.exists(jdata):  # orphan of a crashed writer
-        fs.delete(jdata, True)
-    result.write.parquet(data_dir)
-    payload = f"v{nxt:08d}\n"
-    if epoch is not None:
-        payload += f"epoch={epoch}\n"
-    _publish_commit(spark, root, nxt, payload)
-    _gc_data_dirs(spark, root, nxt - keep_versions)
-    return nxt
+
+    def apply(snap: DataFrame | None) -> DataFrame:
+        if snap is None:
+            snap = batch.select(*out_cols).limit(0)
+        return cdc_apply(snap, batch, list(key_cols), ver_col, op_col)
+
+    return _commit_versioned(
+        spark, root, apply, epoch=epoch, keep_versions=keep_versions
+    )
 
 
 def streaming_cdc_apply_versioned(
@@ -214,7 +120,7 @@ def streaming_cdc_apply_versioned(
     op_col: str = "op",
     trigger_available_now: bool = True,
 ):
-    """The EXACTLY-ONCE form of :func:`streaming_cdc_apply`: each
+    """Maintain a snapshot from a CDC change STREAM, exactly once: each
     micro-batch applies through :func:`cdc_apply_versioned` with its
     epoch recorded atomically with the snapshot publication. Readers
     use sinks.read_versioned(root) and never observe a partial apply;

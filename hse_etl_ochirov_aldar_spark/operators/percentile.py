@@ -140,10 +140,6 @@ def percentile_clamp(
     return out.withColumn(value_col, clamped).drop("p_lo", "p_hi")
 
 
-def trim_predicate(value_col: str) -> Column:
-    return F.col(value_col).between(F.col("p_lo"), F.col("p_hi"))
-
-
 def grouped_percentile_trim(
     df: DataFrame,
     value_col: str,

@@ -112,6 +112,9 @@ def prefix_filter_jaccard_pairs_postings(
     # admits true similarities half an ulp below it — the lemma must
     # cover those too or a knife-edge pair would be provably missed
     t_cand = threshold - 0.5 * 10**-scale
+    # the 1e-9 slack (as in the length prune below) keeps a float
+    # product just above an integer — 0.545 * 200 = 109.00000000000001
+    # — from ceiling one token too high and shortening the prefix
     prefix = (
         ex.join(dfreq, "tok")
         .repartition(target, "id")
@@ -123,7 +126,7 @@ def prefix_filter_jaccard_pairs_postings(
         )
         .where(
             F.col("__pos")
-            <= F.col("__n") - F.ceil(F.lit(t_cand) * F.col("__n")) + 1
+            <= F.col("__n") - F.ceil(F.lit(t_cand) * F.col("__n") - 1e-9) + 1
         )
         .select("id", "tok", "__n")
     )

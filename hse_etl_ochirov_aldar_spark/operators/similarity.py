@@ -528,18 +528,6 @@ def micro_vec(vec: Column, scale: int = 6) -> Column:
     )
 
 
-def _int_l2sq(vcol: Column, cent: list[int]) -> Column:
-    """Exact squared L2 between a BIGINT micro-vector column and a
-    literal centroid. Bounds: |component| <= ~1e6 micro-units, so each
-    square <= ~4e12 and a 64-dim sum <= ~3e14 — far inside BIGINT."""
-    arr = F.lit([int(c) for c in cent])
-    return F.aggregate(
-        F.zip_with(vcol, arr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _cell_ranks(vcol: Column, cents: list[list[int]]) -> Column:
     """Array of cell ids sorted by (exact distance, cell_id) — struct
     ordering gives the deterministic tie-break for free.

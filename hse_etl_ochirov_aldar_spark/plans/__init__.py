@@ -1,4 +1,3 @@
-from .pipeline import Pipeline, Stage
 from .quality import (
     expect_check,
     expect_nonempty,
@@ -8,8 +7,6 @@ from .quality import (
 )
 
 __all__ = [
-    "Pipeline",
-    "Stage",
     "expect_check",
     "expect_nonempty",
     "expect_unique_key",

@@ -6,7 +6,7 @@ re-scans the window). For distributive aggregates — SUM and COUNT, and
 anything derived from them downstream (AVG = sum/count, rates, shares)
 — the mart can instead absorb each new fact batch WITHOUT touching
 fact history: aggregate the delta alone, combine it with the existing
-mart by per-group addition, swap atomically. Cost per refresh is
+mart by per-group addition, commit atomically. Cost per refresh is
 O(delta + mart), not O(history) — at 100 TB of facts with a
 groups-sized mart, that is the difference between a per-batch job and
 an impossible one.
@@ -17,12 +17,17 @@ reversed orders). Groups whose count reaches zero are dropped from the
 mart. min/max are deliberately NOT supported — they are not
 subtractable, which is exactly why this module is named *additive*.
 
-Write path: aggregate-combine into a staging dir, then the same
-atomic swap the compaction sink uses — a crashed refresh leaves the
-old mart intact, and re-running a refresh with the same delta is NOT
-idempotent (additive semantics); pair with the pipeline runner's
-exactly-once batch bookkeeping (streaming/joins.write_stream_upsert's
-checkpoint idiom) when the source can redeliver.
+Write path: every refresh commits through the versioned form of the
+one commit protocol (sources/sinks module docstring): the combined
+mart is staged in ``v<n+1>`` and published by one ``_log/<n+1>.commit``
+rename that also records the refresh's EPOCH. Publication and replay
+guard are one atomic step, so a batch redelivered under the same epoch
+(Structured Streaming replays, a rerun scheduler task) is a committed
+no-op, and a crash anywhere leaves the previous mart readable. Each
+refresh deletes a crashed writer's unpublished ``v<n+1>`` before it
+reads. Readers use ``sources.sinks.read_versioned`` and never see a
+partial refresh; a refresh without an epoch is NOT idempotent
+(additive semantics).
 """
 
 from __future__ import annotations
@@ -32,7 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.sinks import _hadoop_fs, _swap_into, recover_swap
+from ..sources.sinks import _commit_versioned
 
 
 def aggregate_delta(
@@ -65,96 +70,6 @@ def combine_marts(
     return combined.where(F.col("n_rows") != 0)
 
 
-def maintain_additive_mart(
-    spark: SparkSession,
-    mart_path: str,
-    delta: DataFrame,
-    group_cols: Sequence[str],
-    sum_cols: Sequence[str],
-    weight_col: str | None = None,
-) -> None:
-    """Refresh the parquet mart at ``mart_path`` with one delta batch:
-    aggregate the delta, add it to the existing mart (first call
-    bootstraps), atomically swap. O(delta + mart) per refresh."""
-    delta_agg = aggregate_delta(delta, group_cols, sum_cols, weight_col)
-    staging = mart_path.rstrip("/") + "__ivm_staging"
-    # adopt the surviving copy if a prior refresh died mid-swap —
-    # otherwise this run bootstraps from one delta and the staging
-    # overwrite below destroys the only remaining mart copy
-    recover_swap(spark, staging, mart_path)
-    try:
-        current = spark.read.parquet(mart_path)
-        exists = True
-    except Exception as exc:  # first refresh bootstraps the mart
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        exists = False
-    out = (
-        combine_marts(current, delta_agg, group_cols)
-        if exists
-        else delta_agg.where(F.col("n_rows") != 0)
-    )
-    out.write.mode("overwrite").parquet(staging)
-    _swap_into(spark, staging, mart_path)
-
-
-def streaming_additive_mart(
-    stream: DataFrame,
-    mart_path: str,
-    checkpoint: str,
-    group_cols: Sequence[str],
-    sum_cols: Sequence[str],
-    weight_col: str | None = None,
-    trigger_available_now: bool = True,
-):
-    """Maintain the additive mart from a STREAM: each micro-batch is
-    one delta refresh (foreachBatch + maintain_additive_mart), so the
-    mart tracks the feed at O(batch + mart) per trigger.
-
-    Replay safety: foreachBatch alone is at-least-once — a batch whose
-    refresh succeeded but whose checkpoint commit did not is replayed,
-    and an additive merge applied twice double-counts. An epoch-marker
-    directory beside the mart makes replays no-ops: the marker is
-    written AFTER the mart swap, so the only residual double-apply
-    window is a crash between swap and marker — the same window every
-    non-transactional two-store commit has.
-    :func:`streaming_additive_mart_versioned` closes that window by
-    recording the epoch INSIDE the atomic commit; prefer it when the
-    extra full-snapshot write per refresh is acceptable. Returns the
-    StreamingQuery."""
-
-    def _refresh(batch: DataFrame, epoch: int) -> None:
-        spark = batch.sparkSession
-        fs, root = _hadoop_fs(spark, mart_path.rstrip("/") + "__epochs")
-        marker_path = spark._jvm.org.apache.hadoop.fs.Path(
-            mart_path.rstrip("/") + "__epochs", str(epoch)
-        )
-        # repair a mid-swap crash BEFORE the replay no-op (r10 ADVICE,
-        # same fix as cdc.streaming_cdc_apply): a replayed
-        # marker-present epoch arriving after a DIFFERENT epoch died
-        # mid-swap would otherwise return here with the mart path
-        # missing, failing readers until the next new epoch even
-        # though a complete copy survives in staging/__old.
-        recover_swap(
-            spark, mart_path.rstrip("/") + "__ivm_staging", mart_path
-        )
-        if fs.exists(marker_path):
-            return  # replayed batch: already applied
-        maintain_additive_mart(
-            spark, mart_path, batch, group_cols, sum_cols, weight_col
-        )
-        fs.mkdirs(marker_path)
-
-    writer = (
-        stream.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def maintain_additive_mart_versioned(
     spark: SparkSession,
     root: str,
@@ -164,70 +79,27 @@ def maintain_additive_mart_versioned(
     weight_col: str | None = None,
     epoch: int | None = None,
     keep_versions: int = 2,
-    _crash_before_commit: bool = False,
 ) -> int | None:
-    """EXACTLY-ONCE additive-mart refresh: one delta batch applied into
-    the versioned table at ``root``, with the batch EPOCH recorded
-    INSIDE the atomic commit marker — publication and replay-guard are
-    one filesystem rename, so the epoch-directory variant's residual
-    "crash between swap and marker double-applies the batch" window
-    (streaming_additive_mart docstring) does not exist here.
-
-    Protocol (sinks.versioned_upsert's single-writer commit log):
-    read the CURRENT committed snapshot (+ its committed epoch from
-    the marker payload); if ``epoch`` <= the committed epoch the batch
-    is a replay — return None without touching anything; otherwise
-    combine, write the merged mart to the next invisible data dir, and
-    publish data + epoch with one ``_log/<n>.commit`` rename. A crash
-    before the rename leaves an orphan data dir: the replayed batch
-    recomputes from the last COMMITTED snapshot (orphans are invisible
-    and reclaimed), so the merge applies exactly once no matter where
-    the crash lands. Returns the committed version, or None on replay.
+    """EXACTLY-ONCE additive-mart refresh: aggregate one delta batch,
+    add it to the current committed mart (the first call bootstraps)
+    and commit the result with ``epoch`` in the same marker. If
+    ``epoch`` <= the committed epoch the batch is a replay: it is not
+    applied and None is returned. A crash before the marker
+    rename leaves only an unpublished data dir, so the replayed batch
+    recomputes from the last COMMITTED mart and applies exactly once
+    wherever the crash lands. Returns the committed version, or None
+    on replay. O(delta + mart) per refresh.
     """
-    from ..sources.sinks import (
-        _commit_payload,
-        _gc_data_dirs,
-        _hadoop_fs,
-        _publish_commit,
-        _versioned_data_dir,
-        current_version,
-    )
-
-    cur = current_version(spark, root)
-    committed_epoch = None
-    if cur is not None:
-        payload = _commit_payload(spark, root, cur) or ""
-        for line in payload.splitlines():
-            if line.startswith("epoch="):
-                committed_epoch = int(line[len("epoch="):])
-    if (
-        epoch is not None
-        and committed_epoch is not None
-        and epoch <= committed_epoch
-    ):
-        return None  # replayed batch: its effect is already committed
-
     delta_agg = aggregate_delta(delta, group_cols, sum_cols, weight_col)
-    if cur is None:
-        out = delta_agg.where(F.col("n_rows") != 0)
-        nxt = 1
-    else:
-        mart = spark.read.parquet(_versioned_data_dir(root, cur))
-        out = combine_marts(mart, delta_agg, group_cols)
-        nxt = cur + 1
-    data_dir = _versioned_data_dir(root, nxt)
-    fs, jdata = _hadoop_fs(spark, data_dir)
-    if fs.exists(jdata):  # orphan of a crashed writer at this version
-        fs.delete(jdata, True)
-    out.write.parquet(data_dir)
-    if _crash_before_commit:  # test hook: die with data written, unpublished
-        raise RuntimeError("simulated crash before commit rename")
-    payload = f"v{nxt:08d}\n"
-    if epoch is not None:
-        payload += f"epoch={epoch}\n"
-    _publish_commit(spark, root, nxt, payload)
-    _gc_data_dirs(spark, root, nxt - keep_versions)
-    return nxt
+
+    def combine(mart: DataFrame | None) -> DataFrame:
+        if mart is None:
+            return delta_agg.where(F.col("n_rows") != 0)
+        return combine_marts(mart, delta_agg, group_cols)
+
+    return _commit_versioned(
+        spark, root, combine, epoch=epoch, keep_versions=keep_versions
+    )
 
 
 def streaming_additive_mart_versioned(
@@ -239,16 +111,13 @@ def streaming_additive_mart_versioned(
     weight_col: str | None = None,
     trigger_available_now: bool = True,
 ):
-    """The EXACTLY-ONCE form of :func:`streaming_additive_mart`:
-    foreachBatch feeds :func:`maintain_additive_mart_versioned` with
-    the micro-batch epoch, which the commit marker records atomically
-    with the data publication — Structured Streaming replays a batch
-    under the SAME epoch id, the versioned refresh sees
-    epoch <= committed and no-ops, and there is no window in which the
-    mart is updated but the guard is not (the two-store gap the
-    epoch-directory variant documents). Readers use
-    sinks.read_versioned(root) and never observe a partial refresh.
-    Returns the StreamingQuery."""
+    """Maintain the additive mart from a STREAM, exactly once: each
+    micro-batch is one :func:`maintain_additive_mart_versioned` refresh
+    under its epoch id. Structured Streaming replays a batch under the
+    SAME epoch, the refresh sees epoch <= committed and no-ops, and
+    there is no window in which the mart is updated but the guard is
+    not. Readers use sinks.read_versioned(root) and never observe a
+    partial refresh. Returns the StreamingQuery."""
 
     def _refresh(batch: DataFrame, epoch: int) -> None:
         maintain_additive_mart_versioned(

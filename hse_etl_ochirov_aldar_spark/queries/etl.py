@@ -1511,8 +1511,8 @@ def q_warehouse_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The medallion maintenance story end-to-end, driver-visible as
     ONE query (VERDICT r4 stretch): raw events -> clean layer
     (_events_base) -> ADDITIVE mart maintained over three delta batches
-    (plans/ivm.maintain_additive_mart — the O(delta + mart) refresh the
-    reference's drop-and-refill rebuild cannot do,
+    (plans/ivm.maintain_additive_mart_versioned — the O(delta + mart)
+    refresh the reference's drop-and-refill rebuild cannot do,
     build_analytical_marts.py:24-138) -> every refreshed state
     committed through the versioned atomic-commit sink
     (sources/sinks.versioned_upsert, the plain-parquet Delta-log idiom)
@@ -1529,8 +1529,8 @@ def q_warehouse_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Known boundary (deliberate): the keep-newest snapshot commit
     cannot propagate a FULL group retraction — a key absent from the
     new snapshot survives with its prior version's row (upserts carry
-    no tombstones). maintain_additive_mart itself drops zero-count
-    groups correctly; a production pipeline whose groups can fully
+    no tombstones). The mart refresh itself drops zero-count groups
+    correctly; a production pipeline whose groups can fully
     retract must commit through delete-aware snapshots (overwrite or
     CDC MERGE with deletes, operators/cdc.py) rather than the upsert
     sink. Here retractions are a strict subset per type, so the
@@ -1541,7 +1541,7 @@ def q_warehouse_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from .._stage import stage_root
-    from ..plans.ivm import maintain_additive_mart
+    from ..plans.ivm import maintain_additive_mart_versioned
     from ..sources.sinks import read_versioned, versioned_upsert
 
     base = _events_base(spark, sf_dir).select(
@@ -1571,10 +1571,10 @@ def q_warehouse_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     mart = os.path.join(tmp, "mart")
     vroot = os.path.join(tmp, "versioned")
     for ver, batch in enumerate((b1, b2, b3), start=1):
-        maintain_additive_mart(
+        maintain_additive_mart_versioned(
             spark, mart, batch, ["event_type"], ["v_u"], weight_col="wt"
         )
-        snap = spark.read.parquet(mart).withColumn("ver", F.lit(ver))
+        snap = read_versioned(spark, mart).withColumn("ver", F.lit(ver))
         versioned_upsert(
             spark, snap, vroot, ["event_type"], "ver", keep_versions=2
         )

@@ -780,7 +780,8 @@ def q_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-executes the FULL upstream chain per reference, multiplying the
     # segment-transform cost ~4x (measured 8.1s -> 4.5s at sf0.1). At
     # 100 TB these are the persisted clean-layer parquet artifacts
-    # (plans/pipeline.py); persist() is the in-session stand-in.
+    # (sources/sinks.write_overwrite); persist() is the in-session
+    # stand-in.
     cleaned = segment_boilerplate_removal(
         docs.select("doc_id", "text", "lang"), chunk_words=10, min_docs=2
     ).persist()
@@ -1107,8 +1108,9 @@ def q_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc join) and bucketing (bounds + data) each re-reference it, and
     # without a barrier the whole substring-removal pipeline re-executes
     # per reference (34s -> ~8s at sf0.1). The medallion answer at
-    # 100 TB is writing the clean layer to storage (plans/pipeline.py
-    # does exactly that); persist() is its in-session equivalent.
+    # 100 TB is writing the clean layer to storage
+    # (sources/sinks.write_overwrite); persist() is its in-session
+    # equivalent.
     cleaned = remove_duplicate_spans(seeded, span_tokens=5, min_docs=2).persist()
     scored = unigram_logprob_scores(cleaned)
     bucketed = perplexity_buckets(scored, ["lang"])

@@ -211,13 +211,3 @@ def gen_moderation_queue(
             F.date_format(submitted, "yyyy-MM-dd'T'HH:mm:ss"), F.lit("Z")
         ).alias("submitted_at"),
     )
-
-
-def gen_all(spark: SparkSession) -> dict[str, DataFrame]:
-    return {
-        "user_sessions": gen_user_sessions(spark),
-        "event_logs": gen_event_logs(spark),
-        "support_tickets": gen_support_tickets(spark),
-        "user_recommendations": gen_user_recommendations(spark),
-        "moderation_queue": gen_moderation_queue(spark),
-    }

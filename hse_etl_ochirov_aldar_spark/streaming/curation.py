@@ -265,24 +265,19 @@ def streaming_decontaminate(
     foreachBatch is AT-LEAST-ONCE: a crash between the parquet write
     and the checkpoint commit replays the batch, so a blind append
     would duplicate every row of the replayed batch. Each batch
-    therefore writes its own ``batch_epoch=<id>`` partition with
-    dynamic partition overwrite — a replay rewrites the identical
+    therefore replaces its own ``batch_epoch=<id>`` partition
+    (sources/sinks.overwrite_window) — a replay rewrites the identical
     partition instead of appending a second copy, which is the
     standard idempotent-by-epoch foreachBatch sink idiom (the
     exactly-once guarantee is the PAIR checkpoint + idempotent
     write, never the checkpoint alone)."""
+    from ..sources.sinks import overwrite_window
 
     def _clean(batch: DataFrame, epoch: int) -> None:
-        (
-            ngram_decontaminate(
-                batch, eval_df, n=n, id_col=id_col, text_col=text_col
-            )
-            .withColumn("batch_epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_epoch")
-            .parquet(out_path)
-        )
+        cleaned = ngram_decontaminate(
+            batch, eval_df, n=n, id_col=id_col, text_col=text_col
+        ).withColumn("batch_epoch", F.lit(epoch))
+        overwrite_window(batch.sparkSession, cleaned, out_path, "batch_epoch")
 
     writer = (
         stream.writeStream.foreachBatch(_clean)

@@ -156,9 +156,9 @@ def hll_daily_state_merge(
     The state table is one binary sketch row per key (days, not rows —
     tiny); the merge reads it, unions the batch's per-key sketches
     (``hll_union_agg`` refuses mismatched lgK rather than silently
-    degrading), writes to a staging dir and swaps in via FS rename
-    (sinks._swap_into — the read completes during the staging write,
-    before the target is touched).
+    degrading) and commits the merged table as one whole-table unit
+    (the sources/sinks commit protocol, which first rolls forward or
+    discards whatever a crashed merge left behind).
 
     Replay safety: foreachBatch is AT-LEAST-ONCE, and additive state
     (counts, sums) double-counts on replay. HLL registers take MAX, so
@@ -166,19 +166,12 @@ def hll_daily_state_merge(
     at-least-once seam is exactly-once for sketch state, with no epoch
     bookkeeping (pinned in tests/test_streaming_and_incremental.py).
     """
-    from ..sources.sinks import _hadoop_fs, _swap_into, recover_swap
+    from ..sources.sinks import _commit, _hadoop_fs, _recover
 
     batch_sk = batch.groupBy(key_col).agg(
         F.hll_sketch_agg(id_col, F.lit(lg_k)).alias("sk")
     )
-    staging = state_path + "__stage"
-    # Crash-mid-swap recovery (r10 ADVICE): if a prior merge died
-    # between _swap_into's renames, the only complete copy of the
-    # sketch history may sit in staging/target__old while the target
-    # is missing — without this, the merge would rebuild state from
-    # just the current batch and the staging overwrite below would
-    # destroy the surviving history.
-    recover_swap(spark, staging, state_path)
+    _recover(spark, state_path)
     fs, jpath = _hadoop_fs(spark, state_path)
     if fs.exists(jpath):
         merged = (
@@ -189,8 +182,7 @@ def hll_daily_state_merge(
         )
     else:
         merged = batch_sk
-    merged.write.mode("overwrite").parquet(staging)
-    _swap_into(spark, staging, state_path)
+    _commit(spark, merged.write, state_path)
 
 
 def streaming_hll_uniques(

@@ -10,9 +10,10 @@ single-source batches).
   window: state size is O(events in window), not O(stream).
 - ``write_stream_upsert``: production sink idiom — ``foreachBatch``
   hands each micro-batch to the BATCH upsert sink
-  (sources.sinks.upsert_keep_newest), giving exactly-once-per-batch
-  keyed upserts on plain Parquet. The same hook swaps to Delta MERGE
-  unchanged.
+  (sources.sinks.upsert_keep_newest, committed through the sinks'
+  commit protocol); keep-newest is idempotent on (key, version), so a
+  replayed batch converges to the same table. The same hook swaps to
+  Delta MERGE unchanged.
 """
 
 from __future__ import annotations
@@ -106,8 +107,9 @@ def write_stream_versioned_upsert(
     """foreachBatch keyed upsert into the ATOMIC versioned sink
     (sources.sinks.versioned_upsert): each micro-batch commits a new
     all-or-nothing snapshot, so a reader concurrent with the stream
-    never observes a partially-merged table — the guarantee the plain
-    write_stream_upsert (rename swap) cannot give across partitions.
+    never observes a partially-merged table — the guarantee a plain
+    Parquet reader of write_stream_upsert's target does not get while
+    a commit is being applied.
 
     Single writer by construction: Structured Streaming serializes
     foreachBatch invocations within a query, matching the sink's

@@ -548,6 +548,34 @@ def test_prefix_filter_equals_brute_force(spark, sets, t):
     assert got == expected
 
 
+def test_prefix_filter_knife_edge_prefix_length(spark):
+    """t=0.55 at scale 2 gives a candidate threshold of 0.545, and
+    0.545 * 200 is 109.00000000000001 in floating point: an unslacked
+    ceil makes the 200-token record's prefix one token too short. Its
+    91 own tokens are unique (document frequency 1), so they rank
+    first and the dropped 92nd slot is the only common token the
+    prefix could hold — the pair (Jaccard 109/200 = 0.545 -> 0.55)
+    vanishes unless the prefix length carries the same 1e-9 slack as
+    the length prune."""
+    from hse_etl_ochirov_aldar_spark.operators.setsim import (
+        prefix_filter_jaccard_pairs,
+    )
+
+    shared = [f"s{i:03d}" for i in range(109)]
+    a = [f"a{i:03d}" for i in range(91)] + shared
+    df = spark.createDataFrame(
+        [(0, a), (1, shared)], "doc_id LONG, sh ARRAY<STRING>"
+    )
+    got = {
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in prefix_filter_jaccard_pairs(
+            df, "sh", threshold=0.55, scale=2
+        ).collect()
+    }
+    assert round(len(shared) / len(a), 2) >= 0.55  # brute force keeps it
+    assert got == {(0, 1, 0.55)}
+
+
 @settings(**_SETTINGS)
 @given(
     st.lists(

@@ -35,6 +35,8 @@ from hse_etl_ochirov_aldar_spark.streaming.daily import (
     streaming_daily_avg,
 )
 
+from .fault_fs import crash
+
 
 @pytest.fixture()
 def tmpdir():
@@ -126,48 +128,38 @@ def test_overwrite_window_does_not_mutate_session_conf(spark, tmpdir):
     assert rows == {("2024-03", 7)}
 
 
-def test_upsert_leftover_staging_contract(spark, tmpdir):
-    """Leftover staging semantics (changed by the r10 crash-recovery
-    work): a COMPLETE staging dir with NO target is indistinguishable
-    from a crash between a finished merge write and its swap — its
-    data phase completed, so recovery ADOPTS it (at-least-once; a
-    retried batch dedups through keep-newest). With the target intact
-    the leftover is pre-swap garbage and is overwritten as before.
-    Either way staging is cleaned up afterwards."""
+def test_upsert_leftover_staging_contract(spark, tmpdir, monkeypatch):
+    """Leftovers of a crashed upsert: an UNPUBLISHED staging dir (crash
+    before the marker rename) is discarded, never merged — with or
+    without a target; a PUBLISHED commit is rolled forward by the next
+    upsert before it reads. Nothing is left beside the table."""
     import os
 
-    # no target: complete staging is adopted, then merged with the batch
-    path = f"{tmpdir}/u2"
-    staging = path + "__staging"
-    spark.createDataFrame([("z", 9, 99.0)], ["k", "ver", "val"]).write.parquet(staging)
-    first = spark.createDataFrame([("a", 1, 10.0)], ["k", "ver", "val"])
-    upsert_keep_newest(spark, first, path, ["k"], "ver")
-    rows = {(r.k, r.ver, r.val) for r in spark.read.parquet(path).collect()}
-    assert rows == {("a", 1, 10.0), ("z", 9, 99.0)}
-    assert not os.path.exists(staging)
+    cols = ["k", "ver", "val"]
 
-    # target intact: the leftover staging is discarded, never merged
+    def upsert(path, rows):
+        upsert_keep_newest(
+            spark, spark.createDataFrame(rows, cols), path, ["k"], "ver"
+        )
+
+    # no target: the crashed first write's staged rows never appear
+    path = f"{tmpdir}/u2"
+    crash(monkeypatch, lambda: upsert(path, [("z", 9, 99.0)]), 0)
+    assert os.path.exists(path + ".staged") and not os.path.exists(path)
+    upsert(path, [("a", 1, 10.0)])
+    rows = {(r.k, r.ver, r.val) for r in spark.read.parquet(path).collect()}
+    assert rows == {("a", 1, 10.0)}
+    assert sorted(os.listdir(tmpdir)) == ["u2"]
+
+    # target intact, commit published but not applied: rolled forward
     path3 = f"{tmpdir}/u3"
-    upsert_keep_newest(
-        spark,
-        spark.createDataFrame([("a", 1, 10.0)], ["k", "ver", "val"]),
-        path3,
-        ["k"],
-        "ver",
-    )
-    spark.createDataFrame([("q", 5, 50.0)], ["k", "ver", "val"]).write.parquet(
-        path3 + "__staging"
-    )
-    upsert_keep_newest(
-        spark,
-        spark.createDataFrame([("b", 1, 20.0)], ["k", "ver", "val"]),
-        path3,
-        ["k"],
-        "ver",
-    )
+    upsert(path3, [("a", 1, 10.0)])
+    crash(monkeypatch, lambda: upsert(path3, [("b", 1, 20.0)]), 2)
+    assert os.path.exists(path3 + ".commit")
+    upsert(path3, [("c", 1, 30.0)])
     rows3 = {(r.k, r.ver, r.val) for r in spark.read.parquet(path3).collect()}
-    assert rows3 == {("a", 1, 10.0), ("b", 1, 20.0)}
-    assert not os.path.exists(path3 + "__staging")
+    assert rows3 == {("a", 1, 10.0), ("b", 1, 20.0), ("c", 1, 30.0)}
+    assert sorted(os.listdir(tmpdir)) == ["u2", "u3"]
 
 
 def test_upsert_propagates_target_read_errors(spark, tmpdir):
@@ -747,14 +739,12 @@ def test_versioned_upsert_atomic_merge(spark, tmpdir):
     assert os.path.exists(f"{root}/_log/00000001.commit")
 
 
-def test_versioned_upsert_crash_between_write_and_commit(spark, tmpdir):
+def test_versioned_upsert_crash_between_write_and_commit(spark, tmpdir, monkeypatch):
     """The atomicity claim (VERDICT r2 #6): a writer that dies AFTER
     writing the new data directory but BEFORE the commit rename leaves
     readers on the previous version — the target is never observably
     partial — and the next upsert reclaims the version number with the
     correct merged result."""
-    import pytest as _pytest
-
     from hse_etl_ochirov_aldar_spark.sources.sinks import (
         current_version,
         read_versioned,
@@ -768,11 +758,16 @@ def test_versioned_upsert_crash_between_write_and_commit(spark, tmpdir):
         root, ["k"], "ver",
     )
 
-    with _pytest.raises(RuntimeError, match="simulated crash"):
-        versioned_upsert(
+    # mutations: orphan delete, marker create, marker rename <- crash
+    steps = crash(
+        monkeypatch,
+        lambda: versioned_upsert(
             spark, spark.createDataFrame([("a", 2, 99)], cols),
-            root, ["k"], "ver", _crash_before_commit=True,
-        )
+            root, ["k"], "ver",
+        ),
+        2,
+    )
+    assert steps[-1] == "create 00000002.commit.tmp"
     # reader sees version 1, complete and unchanged — the orphan v2 data
     # dir exists on disk but is invisible without its commit marker
     import os
@@ -992,8 +987,11 @@ def test_ivm_batches_equal_full_aggregate(spark, sf_dir, tmpdir):
     """Maintaining the mart with three fact batches must equal one full
     aggregate over everything — the IVM contract, O(delta+mart) per
     refresh instead of O(history)."""
-    from hse_etl_ochirov_aldar_spark.plans.ivm import maintain_additive_mart
+    from hse_etl_ochirov_aldar_spark.plans.ivm import (
+        maintain_additive_mart_versioned,
+    )
     from hse_etl_ochirov_aldar_spark.sources.readers import load_table
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -1003,12 +1001,12 @@ def test_ivm_batches_equal_full_aggregate(spark, sf_dir, tmpdir):
     mart = f"{tmpdir}/mart"
     for i in range(3):
         batch = ev.where(F.col("event_id") % 3 == i)
-        maintain_additive_mart(
+        maintain_additive_mart_versioned(
             spark, mart, batch, ["user_id"], ["value"]
         )
     got = {
         r.user_id: (r.n_rows, round(r.sum_value, 6))
-        for r in spark.read.parquet(mart).collect()
+        for r in read_versioned(spark, mart).collect()
     }
     want = {
         r.user_id: (r.n_rows, round(r.sum_value, 6))
@@ -1024,21 +1022,24 @@ def test_ivm_batches_equal_full_aggregate(spark, sf_dir, tmpdir):
 def test_ivm_retraction_undoes_a_batch(spark, tmpdir):
     """A weight=-1 replay of batch 2 must leave exactly batches 1+3;
     fully-retracted groups disappear from the mart."""
-    from hse_etl_ochirov_aldar_spark.plans.ivm import maintain_additive_mart
+    from hse_etl_ochirov_aldar_spark.plans.ivm import (
+        maintain_additive_mart_versioned,
+    )
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
 
     mart = f"{tmpdir}/mart_r"
     b1 = spark.createDataFrame([("a", 10.0), ("b", 5.0)], ["k", "value"])
     b2 = spark.createDataFrame([("a", 7.0), ("c", 2.0)], ["k", "value"])
     b3 = spark.createDataFrame([("b", 1.0)], ["k", "value"])
     for b in (b1, b2, b3):
-        maintain_additive_mart(spark, mart, b, ["k"], ["value"])
+        maintain_additive_mart_versioned(spark, mart, b, ["k"], ["value"])
     retract = b2.withColumn("weight", F.lit(-1))
-    maintain_additive_mart(
+    maintain_additive_mart_versioned(
         spark, mart, retract, ["k"], ["value"], weight_col="weight"
     )
     got = {
         r.k: (r.n_rows, r.sum_value)
-        for r in spark.read.parquet(mart).collect()
+        for r in read_versioned(spark, mart).collect()
     }
     # c fully retracted -> gone; a back to batch-1 state; b has 1+3
     assert got == {"a": (1, 10.0), "b": (2, 6.0)}
@@ -1089,10 +1090,19 @@ def test_streaming_sliding_counts_equals_batch(spark, sf_dir, tmpdir):
 
 def test_streaming_ivm_equals_batch_aggregate(spark, sf_dir, tmpdir):
     """The streaming additive mart after an availableNow pass over the
-    events feed must equal one full batch aggregate."""
+    events feed must equal one full batch aggregate, with one committed
+    version per micro-batch."""
+    import os
+
     from pyspark.sql import types as T
 
-    from hse_etl_ochirov_aldar_spark.plans.ivm import streaming_additive_mart
+    from hse_etl_ochirov_aldar_spark.plans.ivm import (
+        streaming_additive_mart_versioned,
+    )
+    from hse_etl_ochirov_aldar_spark.sources.sinks import (
+        current_version,
+        read_versioned,
+    )
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -1101,6 +1111,7 @@ def test_streaming_ivm_equals_batch_aggregate(spark, sf_dir, tmpdir):
     )
     src = f"{tmpdir}/ivm_src"
     ev.repartition(4).write.parquet(src)  # several files -> several batches
+    n_files = sum(f.endswith(".parquet") for f in os.listdir(src))
     schema = T.StructType(
         [
             T.StructField("user_id", T.LongType()),
@@ -1113,13 +1124,14 @@ def test_streaming_ivm_equals_batch_aggregate(spark, sf_dir, tmpdir):
         .parquet(src)
     )
     mart = f"{tmpdir}/ivm_mart"
-    q = streaming_additive_mart(
+    q = streaming_additive_mart_versioned(
         stream, mart, f"{tmpdir}/ivm_ckpt", ["user_id"], ["value"]
     )
     q.awaitTermination()
+    assert current_version(spark, mart) == n_files
     got = {
         r.user_id: (r.n_rows, round(r.sum_value, 6))
-        for r in spark.read.parquet(mart).collect()
+        for r in read_versioned(spark, mart).collect()
     }
     want = {
         r.user_id: (r.n_rows, round(r.sum_value, 6))
@@ -1132,29 +1144,22 @@ def test_streaming_ivm_equals_batch_aggregate(spark, sf_dir, tmpdir):
 
 def test_streaming_ivm_replayed_epoch_is_noop(spark, tmpdir):
     """A replayed micro-batch (same epoch id) must not double-count —
-    the epoch-marker makes the foreachBatch refresh idempotent."""
-    from hse_etl_ochirov_aldar_spark.plans.ivm import maintain_additive_mart
-    from hse_etl_ochirov_aldar_spark.sources.sinks import _hadoop_fs
+    the epoch recorded in the commit marker makes the refresh
+    idempotent."""
+    from hse_etl_ochirov_aldar_spark.plans.ivm import (
+        maintain_additive_mart_versioned,
+    )
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
 
     mart = f"{tmpdir}/replay_mart"
     b = spark.createDataFrame([("a", 10.0)], ["k", "value"])
-    # simulate the foreachBatch body twice with the same epoch
-    from hse_etl_ochirov_aldar_spark.plans import ivm as ivm_mod
-
-    class FakeStream:
-        pass
-
-    # call the inner logic via streaming_additive_mart's closure shape:
-    # replicate marker protocol directly
-    fs, _ = _hadoop_fs(spark, mart + "__epochs")
-    marker = spark._jvm.org.apache.hadoop.fs.Path(mart + "__epochs", "7")
-    assert not fs.exists(marker)
-    maintain_additive_mart(spark, mart, b, ["k"], ["value"])
-    fs.mkdirs(marker)
-    # replay: guard must skip
-    if not fs.exists(marker):
-        maintain_additive_mart(spark, mart, b, ["k"], ["value"])
-    got = spark.read.parquet(mart).collect()[0]
+    assert maintain_additive_mart_versioned(
+        spark, mart, b, ["k"], ["value"], epoch=7
+    ) == 1
+    assert maintain_additive_mart_versioned(
+        spark, mart, b, ["k"], ["value"], epoch=7
+    ) is None
+    got = read_versioned(spark, mart).collect()[0]
     assert (got.n_rows, got.sum_value) == (1, 10.0)
 
 
@@ -1165,8 +1170,9 @@ def test_streaming_cdc_apply_maintains_snapshot(spark, tmpdir):
 
     from hse_etl_ochirov_aldar_spark.operators.cdc import (
         cdc_apply,
-        streaming_cdc_apply,
+        streaming_cdc_apply_versioned,
     )
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
 
     changes = [
         (1, "a", 10, 1, "I"),
@@ -1195,9 +1201,9 @@ def test_streaming_cdc_apply_maintains_snapshot(spark, tmpdir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = streaming_cdc_apply(stream, snap, f"{tmpdir}/cdc_ckpt", ["k"])
+    q = streaming_cdc_apply_versioned(stream, snap, f"{tmpdir}/cdc_ckpt", ["k"])
     q.awaitTermination()
-    got = {(r.k, r.name, r.v) for r in spark.read.parquet(snap).collect()}
+    got = {(r.k, r.name, r.v) for r in read_versioned(spark, snap).collect()}
 
     full = cdc_apply(
         spark.createDataFrame([], "k LONG, name STRING, v LONG"),
@@ -1209,18 +1215,21 @@ def test_streaming_cdc_apply_maintains_snapshot(spark, tmpdir):
     assert got == {(1, "a2", 11), (3, "c", 30)}
 
 
-def test_streaming_cdc_replayed_epoch_repairs_crashed_swap(spark, tmpdir):
-    """r10 ADVICE: a REPLAYED (marker-present) epoch arriving after a
-    different epoch crashed mid-swap must repair the snapshot before
-    its no-op return — the old order checked the marker first, so the
-    replay left the snapshot path missing (readers fail) even though a
-    complete copy sat in staging."""
+def test_streaming_cdc_replayed_epoch_repairs_crashed_swap(spark, tmpdir, monkeypatch):
+    """A REPLAYED (already committed) epoch arriving after a different
+    epoch crashed mid-commit must clean up the crashed writer's
+    unpublished data dir before its no-op return, and leave readers on
+    the last committed snapshot."""
     import os
     import shutil
 
     from pyspark.sql import types as T
 
-    from hse_etl_ochirov_aldar_spark.operators.cdc import streaming_cdc_apply
+    from hse_etl_ochirov_aldar_spark.operators.cdc import (
+        cdc_apply_versioned,
+        streaming_cdc_apply_versioned,
+    )
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
 
     schema = T.StructType(
         [
@@ -1234,31 +1243,44 @@ def test_streaming_cdc_replayed_epoch_repairs_crashed_swap(spark, tmpdir):
     spark.createDataFrame([(1, 10, 1, "I"), (2, 20, 1, "I")], schema).write.parquet(src)
     snap = f"{tmpdir}/cdc_rsnap"
     stream = spark.readStream.schema(schema).parquet(src)
-    streaming_cdc_apply(stream, snap, f"{tmpdir}/cdc_rckpt1", ["k"]).awaitTermination()
-    want = {(r.k, r.v) for r in spark.read.parquet(snap).collect()}
+    streaming_cdc_apply_versioned(
+        stream, snap, f"{tmpdir}/cdc_rckpt1", ["k"]
+    ).awaitTermination()
+    want = {(r.k, r.v) for r in read_versioned(spark, snap).collect()}
     assert want == {(1, 10), (2, 20)}
-    # a later epoch dies mid-swap: target gone, full copy in staging
-    os.rename(snap, snap + "__cdc_staging")
-    # fresh checkpoint replays epoch 0, whose marker already exists
+    # a later epoch dies just before its marker rename
+    later = spark.createDataFrame([(1, None, 2, "D")], schema)
+    crash(
+        monkeypatch,
+        lambda: cdc_apply_versioned(spark, snap, later, ["k"], epoch=1),
+        2,
+    )
+    assert os.path.exists(f"{snap}/v00000002")
+    # fresh checkpoint replays epoch 0, which is already committed
     shutil.rmtree(f"{tmpdir}/cdc_rckpt1")
     stream2 = spark.readStream.schema(schema).parquet(src)
-    streaming_cdc_apply(stream2, snap, f"{tmpdir}/cdc_rckpt2", ["k"]).awaitTermination()
-    # the replay itself must have restored the snapshot (no new epoch ran)
-    got = {(r.k, r.v) for r in spark.read.parquet(snap).collect()}
+    streaming_cdc_apply_versioned(
+        stream2, snap, f"{tmpdir}/cdc_rckpt2", ["k"]
+    ).awaitTermination()
+    got = {(r.k, r.v) for r in read_versioned(spark, snap).collect()}
     assert got == want
-    assert not os.path.exists(snap + "__cdc_staging")
+    assert not os.path.exists(f"{snap}/v00000002")
 
 
-def test_streaming_ivm_replayed_epoch_repairs_crashed_swap(spark, tmpdir):
-    """Same marker-ordering fix for the additive mart: the replayed
-    epoch repairs the mid-swap crash, and stays a no-op for the merge
-    itself (no double-count)."""
+def test_streaming_ivm_replayed_epoch_repairs_crashed_swap(spark, tmpdir, monkeypatch):
+    """Same for the additive mart: the replayed epoch removes the
+    crashed refresh's unpublished data dir, and stays a no-op for the
+    merge itself (no double-count)."""
     import os
     import shutil
 
     from pyspark.sql import types as T
 
-    from hse_etl_ochirov_aldar_spark.plans.ivm import streaming_additive_mart
+    from hse_etl_ochirov_aldar_spark.plans.ivm import (
+        maintain_additive_mart_versioned,
+        streaming_additive_mart_versioned,
+    )
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
 
     schema = T.StructType(
         [
@@ -1270,25 +1292,33 @@ def test_streaming_ivm_replayed_epoch_repairs_crashed_swap(spark, tmpdir):
     spark.createDataFrame([("a", 10.0), ("b", 5.0)], schema).write.parquet(src)
     mart = f"{tmpdir}/ivm_rmart"
     stream = spark.readStream.schema(schema).parquet(src)
-    streaming_additive_mart(
+    streaming_additive_mart_versioned(
         stream, mart, f"{tmpdir}/ivm_rckpt1", ["k"], ["value"]
     ).awaitTermination()
     want = {
         (r.k, r.n_rows, r.sum_value)
-        for r in spark.read.parquet(mart).collect()
+        for r in read_versioned(spark, mart).collect()
     }
-    os.rename(mart, mart + "__ivm_staging")
+    more = spark.createDataFrame([("a", 1.0)], schema)
+    crash(
+        monkeypatch,
+        lambda: maintain_additive_mart_versioned(
+            spark, mart, more, ["k"], ["value"], epoch=1
+        ),
+        2,
+    )
+    assert os.path.exists(f"{mart}/v00000002")
     shutil.rmtree(f"{tmpdir}/ivm_rckpt1")
     stream2 = spark.readStream.schema(schema).parquet(src)
-    streaming_additive_mart(
+    streaming_additive_mart_versioned(
         stream2, mart, f"{tmpdir}/ivm_rckpt2", ["k"], ["value"]
     ).awaitTermination()
     got = {
         (r.k, r.n_rows, r.sum_value)
-        for r in spark.read.parquet(mart).collect()
+        for r in read_versioned(spark, mart).collect()
     }
     assert got == want  # repaired AND not double-counted
-    assert not os.path.exists(mart + "__ivm_staging")
+    assert not os.path.exists(f"{mart}/v00000002")
 
 
 def test_partition_scoped_upsert_preserves_null_partition(spark, tmpdir):
@@ -1399,9 +1429,10 @@ def test_streaming_dedup_null_keys_pass_through(spark, tmpdir):
 
 
 def test_streaming_decontaminate_epoch_replay_idempotent(spark, sf_dir, tmpdir):
-    """The decontaminate sink writes per-epoch partitions with dynamic
-    overwrite, so replaying a batch (at-least-once foreachBatch)
-    rewrites its partition instead of appending duplicates."""
+    """The decontaminate sink replaces its per-epoch partition
+    (overwrite_window), so replaying a batch (at-least-once
+    foreachBatch) rewrites its partition instead of appending
+    duplicates."""
     from pyspark.sql import functions as F
 
     from hse_etl_ochirov_aldar_spark.sources.readers import load_table
@@ -1412,14 +1443,10 @@ def test_streaming_decontaminate_epoch_replay_idempotent(spark, sf_dir, tmpdir):
         .where(F.col("doc_id") < 30)
         .select("doc_id", "text")
     )
-    # simulate the sink's per-batch write twice with the SAME epoch
+    # the sink's per-batch write, twice with the SAME epoch
     for _ in range(2):
-        (
-            docs.withColumn("batch_epoch", F.lit(7))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_epoch")
-            .parquet(out)
+        overwrite_window(
+            spark, docs.withColumn("batch_epoch", F.lit(7)), out, "batch_epoch"
         )
     assert spark.read.parquet(out).count() == 30
 
@@ -1678,43 +1705,11 @@ def test_tws_sessionize_equals_apply_in_pandas_and_batch(spark, sf_dir, tmpdir):
     assert len(streamed) > 0
 
 
-def test_hll_state_merge_recovers_from_leftover_staging(spark, tmpdir):
-    """A merge that died after writing its staging dir but before the
-    swap must not corrupt the next merge: the staging path is
-    mode=overwrite so garbage (or a complete-but-unswapped result) is
-    simply replaced, and the swap installs the fresh merge."""
-    from hse_etl_ochirov_aldar_spark.streaming.daily import (
-        hll_daily_state_merge,
-        hll_uniques_estimates,
-    )
-    import datetime as dt
-
-    state = f"{tmpdir}/hll_state"
-    d0 = dt.date(2024, 1, 1)
-    b1 = spark.createDataFrame(
-        [(d0, i) for i in range(500)], "day date, user_id long"
-    )
-    hll_daily_state_merge(spark, b1, state)
-    # simulate a crashed merge: stale garbage where staging goes
-    import os
-
-    os.makedirs(state + "__stage", exist_ok=True)
-    with open(state + "__stage/garbage.txt", "w") as f:
-        f.write("not parquet")
-    b2 = spark.createDataFrame(
-        [(d0, i) for i in range(400, 900)], "day date, user_id long"
-    )
-    hll_daily_state_merge(spark, b2, state)
-    est = {str(r.day): r.n_users_est for r in hll_uniques_estimates(spark, state).collect()}
-    assert abs(est[str(d0)] - 900) <= max(2, 0.05 * 900)
-
-
-def test_hll_state_merge_recovers_from_crash_mid_swap(spark, tmpdir):
-    """Crash BETWEEN _swap_into's renames (r10 ADVICE): the target is
-    missing and the only copy of the merged history is a complete
-    staging dir (Spark _SUCCESS marker). The next merge must adopt it
-    — not rebuild state from the current batch and then destroy the
-    survivor with the staging overwrite."""
+def test_hll_state_merge_recovers_from_leftover_staging(spark, tmpdir, monkeypatch):
+    """A merge that died after staging its result but before the marker
+    rename must not leak into the state: the next merge discards the
+    unpublished staging dir and commits its own batch on the old
+    history."""
     from hse_etl_ochirov_aldar_spark.streaming.daily import (
         hll_daily_state_merge,
         hll_uniques_estimates,
@@ -1724,30 +1719,37 @@ def test_hll_state_merge_recovers_from_crash_mid_swap(spark, tmpdir):
 
     state = f"{tmpdir}/hll_state"
     d0 = dt.date(2024, 1, 1)
-    b1 = spark.createDataFrame(
-        [(d0, i) for i in range(600)], "day date, user_id long"
-    )
-    hll_daily_state_merge(spark, b1, state)
-    # simulate: a merge completed its staging write, then crashed with
-    # the target already moved aside — staging is the ONLY full copy
-    os.rename(state, state + "__stage")
-    assert os.path.exists(state + "__stage/_SUCCESS")
-    b2 = spark.createDataFrame(
-        [(d0, i) for i in range(600, 900)], "day date, user_id long"
-    )
-    hll_daily_state_merge(spark, b2, state)
-    est = {
-        str(r.day): r.n_users_est
-        for r in hll_uniques_estimates(spark, state).collect()
-    }
-    assert abs(est[str(d0)] - 900) <= max(2, 0.05 * 900)
-    assert not os.path.exists(state + "__stage")
+
+    def merge(lo, hi):
+        hll_daily_state_merge(
+            spark,
+            spark.createDataFrame(
+                [(d0, i) for i in range(lo, hi)], "day date, user_id long"
+            ),
+            state,
+        )
+
+    def estimate():
+        return {
+            str(r.day): r.n_users_est
+            for r in hll_uniques_estimates(spark, state).collect()
+        }[str(d0)]
+
+    merge(0, 600)
+    # commit mutations: marker create, marker rename <- crash
+    crash(monkeypatch, lambda: merge(5000, 6000), 1)
+    assert os.path.exists(state + ".staged")
+    merge(600, 900)
+    assert abs(estimate() - 900) <= max(2, 0.05 * 900)
+    assert sorted(os.listdir(tmpdir)) == ["hll_state"]
 
 
-def test_hll_state_merge_recovers_from_old_aside(spark, tmpdir):
-    """Crash AFTER the target moved aside but with an INCOMPLETE
-    staging (no _SUCCESS): recovery restores the __old copy — history
-    survives, the garbage staging is overwritten by the next merge."""
+def test_hll_state_merge_recovers_from_crash_mid_swap(spark, tmpdir, monkeypatch):
+    """Crash after the commit was published and the old state deleted,
+    before the staged state was renamed in: the state path is missing
+    and the only copy of the merged history is the staging dir. The
+    next merge must roll the commit forward — not rebuild state from
+    its own batch."""
     from hse_etl_ochirov_aldar_spark.streaming.daily import (
         hll_daily_state_merge,
         hll_uniques_estimates,
@@ -1757,40 +1759,93 @@ def test_hll_state_merge_recovers_from_old_aside(spark, tmpdir):
 
     state = f"{tmpdir}/hll_state"
     d0 = dt.date(2024, 1, 1)
-    b1 = spark.createDataFrame(
-        [(d0, i) for i in range(600)], "day date, user_id long"
-    )
-    hll_daily_state_merge(spark, b1, state)
-    os.rename(state, state + "__old")
-    os.makedirs(state + "__stage", exist_ok=True)
-    with open(state + "__stage/part-garbage", "w") as f:
-        f.write("not parquet, no _SUCCESS")
-    b2 = spark.createDataFrame(
-        [(d0, i) for i in range(600, 900)], "day date, user_id long"
-    )
-    hll_daily_state_merge(spark, b2, state)
-    est = {
-        str(r.day): r.n_users_est
-        for r in hll_uniques_estimates(spark, state).collect()
-    }
-    assert abs(est[str(d0)] - 900) <= max(2, 0.05 * 900)
-    assert not os.path.exists(state + "__old")
+
+    def merge(lo, hi):
+        hll_daily_state_merge(
+            spark,
+            spark.createDataFrame(
+                [(d0, i) for i in range(lo, hi)], "day date, user_id long"
+            ),
+            state,
+        )
+
+    def estimate():
+        return {
+            str(r.day): r.n_users_est
+            for r in hll_uniques_estimates(spark, state).collect()
+        }[str(d0)]
+
+    merge(0, 600)
+    # commit mutations: marker create, marker rename, delete old state,
+    # rename staged state <- crash
+    crash(monkeypatch, lambda: merge(600, 900), 3)
+    assert not os.path.exists(state)
+    merge(0, 100)  # already-counted ids: a no-op on the estimate
+    assert abs(estimate() - 900) <= max(2, 0.05 * 900)
+    assert sorted(os.listdir(tmpdir)) == ["hll_state"]
 
 
-def test_ivm_mart_recovers_from_crash_mid_swap(spark, tmpdir):
-    """Same crash-mid-swap seam for the additive-mart refresh: a
-    complete orphaned staging dir is adopted, so the next delta adds
-    to the merged history instead of bootstrapping from scratch."""
-    from hse_etl_ochirov_aldar_spark.plans.ivm import maintain_additive_mart
+def test_hll_state_merge_recovers_from_old_aside(spark, tmpdir, monkeypatch):
+    """Crash right after the commit was published, with the old state
+    still in place: a plain reader sees the old history, and the next
+    merge rolls the published commit forward before reading."""
+    from hse_etl_ochirov_aldar_spark.streaming.daily import (
+        hll_daily_state_merge,
+        hll_uniques_estimates,
+    )
+    import datetime as dt
     import os
+
+    state = f"{tmpdir}/hll_state"
+    d0 = dt.date(2024, 1, 1)
+
+    def merge(lo, hi):
+        hll_daily_state_merge(
+            spark,
+            spark.createDataFrame(
+                [(d0, i) for i in range(lo, hi)], "day date, user_id long"
+            ),
+            state,
+        )
+
+    def estimate():
+        return {
+            str(r.day): r.n_users_est
+            for r in hll_uniques_estimates(spark, state).collect()
+        }[str(d0)]
+
+    merge(0, 600)
+    crash(monkeypatch, lambda: merge(600, 900), 2)
+    assert abs(estimate() - 600) <= max(2, 0.05 * 600)
+    merge(0, 100)
+    assert abs(estimate() - 900) <= max(2, 0.05 * 900)
+    assert sorted(os.listdir(tmpdir)) == ["hll_state"]
+
+
+def test_ivm_mart_recovers_from_crash_mid_swap(spark, tmpdir, monkeypatch):
+    """Crash just before the mart's marker rename: readers stay on the
+    previous version, and the redelivered batch adds to the committed
+    history exactly once instead of bootstrapping from scratch."""
+    from hse_etl_ochirov_aldar_spark.plans.ivm import (
+        maintain_additive_mart_versioned,
+    )
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
 
     mart = f"{tmpdir}/mart"
     d1 = spark.createDataFrame([("a", 10.0), ("b", 5.0)], ["k", "v"])
-    maintain_additive_mart(spark, mart, d1, ["k"], ["v"])
-    os.rename(mart, mart + "__ivm_staging")
+    maintain_additive_mart_versioned(spark, mart, d1, ["k"], ["v"], epoch=0)
     d2 = spark.createDataFrame([("a", 1.0)], ["k", "v"])
-    maintain_additive_mart(spark, mart, d2, ["k"], ["v"])
-    rows = {(r.k, r.sum_v, r.n_rows) for r in spark.read.parquet(mart).collect()}
+
+    def refresh():
+        return maintain_additive_mart_versioned(
+            spark, mart, d2, ["k"], ["v"], epoch=1
+        )
+
+    crash(monkeypatch, refresh, 2)
+    rows = {(r.k, r.sum_v, r.n_rows) for r in read_versioned(spark, mart).collect()}
+    assert rows == {("a", 10.0, 1), ("b", 5.0, 1)}
+    assert refresh() == 2
+    rows = {(r.k, r.sum_v, r.n_rows) for r in read_versioned(spark, mart).collect()}
     assert rows == {("a", 11.0, 2), ("b", 5.0, 1)}
 
 
@@ -1837,29 +1892,36 @@ def test_rolling_hll_accuracy_tight_bound(spark):
         )
 
 
-def test_upsert_recovers_from_crash_mid_swap(spark, tmpdir):
-    """Non-partitioned upsert crash-mid-swap: target gone, merged copy
-    complete in staging — the next upsert must adopt it, not rebuild
-    the table from one batch."""
+def test_upsert_recovers_from_crash_mid_swap(spark, tmpdir, monkeypatch):
+    """Non-partitioned upsert crash mid-commit: the target deleted, the
+    merged copy complete in staging — the next upsert must roll it
+    forward, not rebuild the table from one batch."""
     from hse_etl_ochirov_aldar_spark.sources.sinks import upsert_keep_newest
     import os
 
+    cols = ["k", "ver", "val"]
     path = f"{tmpdir}/t"
-    b1 = spark.createDataFrame(
-        [("a", 1, 10.0), ("b", 1, 20.0)], ["k", "ver", "val"]
-    )
+    b1 = spark.createDataFrame([("a", 1, 10.0), ("b", 1, 20.0)], cols)
     upsert_keep_newest(spark, b1, path, ["k"], "ver")
-    os.rename(path, path + "__staging")
-    b2 = spark.createDataFrame([("b", 2, 25.0)], ["k", "ver", "val"])
-    upsert_keep_newest(spark, b2, path, ["k"], "ver")
+    b2 = spark.createDataFrame([("b", 2, 25.0)], cols)
+    # commit mutations: marker create, marker rename, delete target,
+    # rename staged <- crash
+    crash(
+        monkeypatch,
+        lambda: upsert_keep_newest(spark, b2, path, ["k"], "ver"),
+        3,
+    )
+    assert not os.path.exists(path)
+    b3 = spark.createDataFrame([("c", 1, 30.0)], cols)
+    upsert_keep_newest(spark, b3, path, ["k"], "ver")
     rows = {(r.k, r.ver, r.val) for r in spark.read.parquet(path).collect()}
-    assert rows == {("a", 1, 10.0), ("b", 2, 25.0)}
+    assert rows == {("a", 1, 10.0), ("b", 2, 25.0), ("c", 1, 30.0)}
 
 
-def test_compact_recovers_from_crash_mid_swap(spark, tmpdir):
-    """Compaction crash-mid-swap leaves the identical-content compacted
-    copy in staging; the next compact adopts it instead of failing on
-    the missing target path."""
+def test_compact_recovers_from_crash_mid_swap(spark, tmpdir, monkeypatch):
+    """Compaction crash mid-commit leaves the identical-content
+    compacted copy in staging and no target; the next compact rolls it
+    forward instead of failing on the missing target path."""
     from hse_etl_ochirov_aldar_spark.sources.sinks import compact_parquet
     import os
 
@@ -1867,21 +1929,19 @@ def test_compact_recovers_from_crash_mid_swap(spark, tmpdir):
     spark.range(1000).selectExpr("id", "id * 2 AS v").repartition(
         8
     ).write.parquet(path)
-    compact_parquet(spark, path)
-    os.rename(path, path + "__compacting")
+    crash(monkeypatch, lambda: compact_parquet(spark, path), 3)
+    assert not os.path.exists(path)
     n = compact_parquet(spark, path)
     assert n >= 1
     assert spark.read.parquet(path).count() == 1000
-    assert not os.path.exists(path + "__compacting")
+    assert sorted(os.listdir(tmpdir)) == ["t"]
 
 
-def test_versioned_mart_exactly_once_epochs(spark, tmpdir):
+def test_versioned_mart_exactly_once_epochs(spark, tmpdir, monkeypatch):
     """maintain_additive_mart_versioned: epochs recorded inside the
     atomic commit — a replayed epoch is a no-op, a crash before the
     commit rename leaves the committed snapshot untouched and the
     replay applies the batch exactly once."""
-    import pytest
-
     from hse_etl_ochirov_aldar_spark.plans.ivm import (
         maintain_additive_mart_versioned,
     )
@@ -1912,10 +1972,13 @@ def test_versioned_mart_exactly_once_epochs(spark, tmpdir):
     # crash BEFORE the commit rename: data dir written, nothing
     # published — readers still see v2; the replay applies exactly once
     d3 = spark.createDataFrame([("b", 2.0)], ["k", "v"])
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        maintain_additive_mart_versioned(
-            spark, root, d3, ["k"], ["v"], epoch=2, _crash_before_commit=True
-        )
+    crash(
+        monkeypatch,
+        lambda: maintain_additive_mart_versioned(
+            spark, root, d3, ["k"], ["v"], epoch=2
+        ),
+        2,
+    )
     got_after_crash = {
         (r.k, r.sum_v, r.n_rows) for r in read_versioned(spark, root).collect()
     }
@@ -1928,7 +1991,7 @@ def test_versioned_mart_exactly_once_epochs(spark, tmpdir):
         (r.k, r.sum_v, r.n_rows) for r in read_versioned(spark, root).collect()
     }
     assert got3 == {("a", 11.0, 2), ("b", 7.0, 2)}
-    # and the double-apply that the epoch-dir variant cannot rule out:
+    # and the double-apply a marker written after the data would allow:
     # replaying epoch 2 after its commit is a no-op here
     assert (
         maintain_additive_mart_versioned(spark, root, d3, ["k"], ["v"], epoch=2)
