@@ -15,8 +15,8 @@ same arithmetic:
   dot products / L2 terms are integer matmuls, with the exact
   float64-dgemm fast path under the 2^53 bound — PERF findings 24/28/
   29). These are not tolerance-close twins: they are test-pinned
-  BIT-IDENTICAL (tests/test_arrow_twins.py, tests/test_minhash_arrow.py),
-  so flipping between families can never move an oracle hash.
+  BIT-IDENTICAL (tests/test_arrow_twins.py), so flipping between
+  families can never move an oracle hash.
 
 Measured at r8 (PERF.md): IVF/cluster labeling 3.2x at 200k vectors,
 3.9x at 1M; SRP signatures 3.3x composed. Since the outputs are
@@ -52,12 +52,11 @@ def default_kernel() -> str:
 def resolve_kernel(choice: str | None, auto: str = "arrow") -> str:
     """An operator's explicit kernel argument wins; None defers to
     $SPARK_GRAFT_KERNEL if set, else to ``auto`` — the family's
-    measured-best default. ``auto`` is 'arrow' for the matmul-bound
-    families (labeling, SRP — 2-3x wins at sf0.1) and 'expr' for
-    MinHash banding, which is shingling/IO-bound at every hash count
-    measured (16/64/128 at sf0.1, r9) so an Arrow stage only adds a
-    serialization boundary. Centralized so every dual-path operator
-    validates identically."""
+    measured-best default ('arrow' for the matmul-bound families:
+    labeling, SRP — 2-3x wins at sf0.1). MinHash banding has no Arrow
+    twin: its expression fold measured faster once shingling went
+    linear. Centralized so every dual-path operator validates
+    identically."""
     if choice is not None:
         if choice not in _VALID:
             raise ValueError(

@@ -30,6 +30,20 @@ STOPWORDS: dict[str, list[str]] = {
 BPE_TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
+def bind_once(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Spark's higher-order functions are interpreted and get no common-
+    subexpression elimination, so a free expression captured inside a
+    per-element lambda (``slice(toks, i, n)`` over a position sequence)
+    re-runs for EVERY element: tokenizing inside a shingle lambda is
+    O(tokens^2) per document. Routing the value through a one-element
+    ``transform`` binds it to a lambda variable, which the inner lambdas
+    then read for free.
+    """
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def whitespace_tokens(col: Column | str) -> Column:
     """Whitespace tokenization, empty tokens removed.
 
@@ -261,19 +275,24 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct n-word shingles (the MinHash/Jaccard input set).
 
     transform over an index sequence + slice keeps this a pure array
-    expression; short documents yield the whole-document shingle.
+    expression; short documents yield the whole-document shingle. The
+    token array is bound once per row (``bind_once``), so the document
+    is tokenized once and shingling is linear in its length.
     """
-    toks = whitespace_tokens(col)
-    k = F.size(toks)
-    return F.when(
-        k >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), k - F.lit(n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
+
+    def body(toks):
+        k = F.size(toks)
+        return F.when(
+            k >= n,
+            F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(1), k - F.lit(n - 1)),
+                    lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+                )
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", toks)))
+
+    return bind_once(whitespace_tokens(col), body)
 
 
 def char_fingerprint(col: Column | str, modulus: int = 1_000_000_007) -> Column:
@@ -335,11 +354,10 @@ def word_shingle_postings(
     Same shingle set as ``word_shingles`` + array_distinct + explode —
     including the short-document rule: a document with fewer than
     ``n`` tokens yields its whole token sequence as one shingle
-    (concat_ws skips the NULL leads past the end). The array twin
-    re-evaluates its interpreted slice-lambda's free ``toks``
-    subexpression PER ELEMENT — O(tokens^2) work per document per
-    reference (PERF finding 22) — where this form is one explode and
-    one window regardless of how many consumers read it.
+    (concat_ws skips the NULL leads past the end). Both forms are
+    linear in the document length (the array twin binds its tokens
+    once, ``bind_once``); this one yields posting ROWS directly and is
+    one explode and one window however many consumers read it.
     """
     from pyspark.sql import Window
 

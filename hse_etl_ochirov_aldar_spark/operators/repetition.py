@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import whitespace_tokens
+from ..functions.text import bind_once, whitespace_tokens
 
 
 def word_ngrams(col, n: int = 2):
@@ -28,15 +28,18 @@ def word_ngrams(col, n: int = 2):
     word_shingles, multiplicity matters here). Documents shorter than
     ``n`` tokens yield no n-grams."""
     c = F.col(col) if isinstance(col, str) else col
-    toks = whitespace_tokens(F.lower(c))
-    k = F.size(toks)
-    return F.when(
-        k >= n,
-        F.transform(
-            F.sequence(F.lit(1), k - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+
+    def body(toks):
+        k = F.size(toks)
+        return F.when(
+            k >= n,
+            F.transform(
+                F.sequence(F.lit(1), k - F.lit(n - 1)),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return bind_once(whitespace_tokens(F.lower(c)), body)
 
 
 def top_ngram_coverage(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import whitespace_tokens, word_shingles
+from ..functions.text import bind_once, whitespace_tokens, word_shingles
 from .dedup import dedup_keep_first
 from ._plan import spread_small_input
 
@@ -53,266 +53,71 @@ def _spread(df: DataFrame) -> DataFrame:
     return spread_small_input(df)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Adds ``minhash`` (array<bigint> of length num_hashes).
+def _minhash_fold(shingles, num_hashes: int):
+    """The MinHash signature of a shingle-string array column.
 
     minhash_j(doc) = min over shingles of hash_j(shingle). Computed as
     ONE fold over the shingle-hash array: each shingle STRING is
     xxhash64'd exactly once, and the j-th family member is the cheap
     long-hash xxhash64(h, j). The naive form — num_hashes separate
     array_min(transform(shingles, xxhash64(s, j))) expressions — gets
-    inlined by CollapseProject into num_hashes full re-tokenizations +
+    inlined by CollapseProject into num_hashes full re-shinglings +
     string re-hashes per row (~60x slower measured at sf0.1); the
-    single-fold shape is what keeps this linear.
-
-    Per-row array math, no shuffle, no UDF.
+    single-fold shape is what keeps this linear. Zero shingles keep the
+    init (LONG_MAX repeated).
     """
     seeds = F.array(*[F.lit(j) for j in range(num_hashes)])
-    shingle_hashes = F.transform(
-        word_shingles(F.col(text_col), shingle_n), lambda s: F.xxhash64(s)
-    )
-    sig = F.aggregate(
-        shingle_hashes,
+    return F.aggregate(
+        F.transform(shingles, lambda s: F.xxhash64(s)),
         F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_hashes),
         lambda acc, h: F.zip_with(acc, seeds, lambda m, j: F.least(m, F.xxhash64(h, j))),
     )
-    return df.withColumn("minhash", sig)
 
 
-def _np_xxh64_long(v, seed):
-    """numpy uint64 twin of Spark XXH64.hashLong (an 8-byte xxHash64
-    block): identical constants and rotations, wraparound arithmetic
-    via uint64. Empirically pinned bit-equal to ``F.xxhash64(<long>)``
-    (seed 42) and to the (long, int) chain below over random inputs
-    (tests/test_minhash_arrow.py)."""
-    import numpy as np
-
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P4 = np.uint64(0x85EBCA77C2B2AE63)
-    P5 = np.uint64(0x27D4EB2F165667C5)
-    h = seed + P5 + np.uint64(8)
-    k1 = v * P2
-    k1 = ((k1 << np.uint64(31)) | (k1 >> np.uint64(33))) * P1
-    h = h ^ k1
-    h = ((h << np.uint64(27)) | (h >> np.uint64(37))) * P1 + P4
-    return _np_xxh64_fmix(h)
-
-
-def _np_xxh64_int(v, seed):
-    """numpy uint64 twin of Spark XXH64.hashInt (a 4-byte tail block);
-    ``v`` must be non-negative < 2^31 (the seed indices used here)."""
-    import numpy as np
-
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    P5 = np.uint64(0x27D4EB2F165667C5)
-    h = seed + P5 + np.uint64(4)
-    h = h ^ ((v & np.uint64(0xFFFFFFFF)) * P1)
-    h = ((h << np.uint64(23)) | (h >> np.uint64(41))) * P2 + P3
-    return _np_xxh64_fmix(h)
-
-
-def _np_xxh64_fmix(h):
-    import numpy as np
-
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    h = h ^ (h >> np.uint64(33))
-    h = h * P2
-    h = h ^ (h >> np.uint64(29))
-    h = h * P3
-    h = h ^ (h >> np.uint64(32))
-    return h
-
-
-def _np_minhash_fold(seeds, flat, lens, chunk: int = 8192):
-    """Segmented min over hashInt(j, stage1_s) for every (row, j) —
-    the (shingles x num_hashes) grid evaluated in row-blocks whose
-    flat span is <= ``chunk`` so the working set stays cache-sized.
-    The naive broadcast form materializes ~10 full-grid temporaries
-    per XXH64 step; at 32 concurrent Arrow workers that is DRAM-
-    bandwidth-bound and measured 5x slower than this kernel even
-    single-threaded. In-place ops throughout; bit-identical to
-    _np_xxh64_int by construction (same op chain, pinned in tests).
-
-    seeds: (k,) uint64; flat: (total_shingles,) uint64 stage-1 hashes;
-    lens: (rows,) int64 per-row shingle counts (zero-length rows must
-    be filtered out by the caller). Returns (rows, k) int64.
-    """
-    import numpy as np
-
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    P5 = np.uint64(0x27D4EB2F165667C5)
-    k = len(seeds)
-    k1 = (seeds & np.uint64(0xFFFFFFFF)) * P1
-    h0 = flat + (P5 + np.uint64(4))
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    out = np.empty((len(lens), k), dtype=np.int64)
-    m_buf = np.empty((chunk, k), dtype=np.uint64)
-    t_buf = np.empty((chunk, k), dtype=np.uint64)
-    i = 0
-    while i < len(lens):
-        j = i
-        while j < len(lens) and ends[j] - starts[i] <= chunk:
-            j += 1
-        if j == i:  # one row wider than the chunk: take it alone
-            j = i + 1
-        lo, hi = starts[i], ends[j - 1]
-        nn = hi - lo
-        if nn <= chunk:
-            mm, tt = m_buf[:nn], t_buf[:nn]
-        else:
-            mm = np.empty((nn, k), dtype=np.uint64)
-            tt = np.empty((nn, k), dtype=np.uint64)
-        np.bitwise_xor(h0[lo:hi, None], k1[None, :], out=mm)
-        np.left_shift(mm, np.uint64(23), out=tt)
-        np.right_shift(mm, np.uint64(41), out=mm)
-        np.bitwise_or(mm, tt, out=mm)
-        np.multiply(mm, P2, out=mm)
-        np.add(mm, P3, out=mm)
-        np.right_shift(mm, np.uint64(33), out=tt)
-        np.bitwise_xor(mm, tt, out=mm)
-        np.multiply(mm, P2, out=mm)
-        np.right_shift(mm, np.uint64(29), out=tt)
-        np.bitwise_xor(mm, tt, out=mm)
-        np.multiply(mm, P3, out=mm)
-        np.right_shift(mm, np.uint64(32), out=tt)
-        np.bitwise_xor(mm, tt, out=mm)
-        local_starts = (starts[i:j] - lo).astype(np.int64)
-        out[i:j] = np.minimum.reduceat(
-            mm.view(np.int64), local_starts, axis=0
-        )
-        i = j
-    return out
-
-
-def minhash_signature_frame(
+def minhash_signatures(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 16,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, minhash) via an Arrow-batched numpy fold — the exact twin
-    of ``minhash_signatures`` (finding-24/25 pattern, test-pinned
-    BIT-IDENTICAL, not tolerance-close).
-
-    The plan split keeps each engine on its strength: shingling and the
-    per-shingle STRING hash stay JVM-side (codegen'd xxhash64 over
-    UTF-8), and only the (shingles x num_hashes) integer min-fold —
-    the term that dominates at corpus scale, interpreted zip_with
-    lambdas per element in the expression path — moves to numpy, where
-    it is two vectorized XXH64 block functions and a segmented min.
-    Bit-identity holds because Spark's xxhash64(h, j) over a LONG and
-    an INT is hashInt(j, hashLong(h, 42)) — pure uint64 wraparound
-    arithmetic replicated exactly by _np_xxh64_long/_np_xxh64_int.
-
-    Null text (null shingle array) yields a null signature; a doc with
-    zero shingles keeps the fold's init (LONG_MAX repeated) — both
-    matching the expression fold's semantics exactly.
-
-    Opt-in scale path (``signature="arrow"`` on the LSH entry points);
-    the driver-checked catalog entries keep the Python-free default,
-    per the repo's convention.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    hashes = F.transform(
-        word_shingles(F.col(text_col), shingle_n), lambda s: F.xxhash64(s)
+    """Adds ``minhash`` (array<bigint> of length num_hashes): the
+    ``_minhash_fold`` of the document's word shingles. Per-row array
+    math, no shuffle, no UDF."""
+    return df.withColumn(
+        "minhash",
+        _minhash_fold(word_shingles(F.col(text_col), shingle_n), num_hashes),
     )
-    src = df.select(F.col(id_col).alias("id"), hashes.alias("hs"))
-    seeds = np.arange(num_hashes, dtype=np.uint64)
-    long_max = np.uint64(_LONG_MAX)
-
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pd.DataFrame({"id": [], "minhash": []})
-                continue
-            rows = pdf["hs"]
-            lens = np.fromiter(
-                (0 if r is None else len(r) for r in rows), np.int64, n
-            )
-            flat = np.concatenate(
-                [np.asarray(r, dtype=np.int64) for r in rows if r is not None and len(r)]
-                or [np.empty(0, dtype=np.int64)]
-            ).view(np.uint64)
-            # chain stage 1 once per shingle, then the segmented
-            # (shingle x j) min-fold via the chunked grid kernel
-            a = _np_xxh64_long(flat, np.uint64(42))
-            sigs: list = []
-            nz = lens > 0
-            if nz.any():
-                mins = _np_minhash_fold(seeds, a, lens[nz])
-            k = 0
-            for i in range(n):
-                if rows.iloc[i] is None:
-                    sigs.append(None)
-                elif lens[i] == 0:
-                    sigs.append([int(long_max)] * num_hashes)
-                else:
-                    sigs.append(mins[k].tolist())
-                    k += 1
-            yield pd.DataFrame({"id": pdf["id"], "minhash": sigs})
-
-    return src.mapInPandas(gen, f"id {id_type}, minhash array<bigint>")
 
 
-def banded_minhash_keys(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_n: int = 3,
-    signature: str | None = None,
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> DataFrame:
-    """(id, band, bucket) banded LSH keys: one row per (doc, band),
-    bucket = hash of the band's signature slice. Docs agreeing on ALL
-    hashes within a band share its bucket.
+    """(id, sh): each document's distinct word shingles, one row per
+    document. The one shingle pass that both the signatures
+    (``_band_keys``) and the exact-Jaccard verify
+    (``_verify_jaccard``) read; spread first, since shingling is the
+    per-row CPU term."""
+    return _spread(df).select(
+        F.col(id_col).alias("id"),
+        word_shingles(F.col(text_col), shingle_n).alias("sh"),
+    )
 
-    The band INDEX is exploded first and the bucket hash derived above
-    the Generate: the Generate node is a projection barrier, so the
-    signature is materialized once per doc. Banding below the explode
-    (an array of per-band structs) lets CollapseProject inline the
-    whole fold into every band slice — ``bands``x recomputation.
 
-    ``signature``: None defers to $SPARK_GRAFT_KERNEL if set, else
-    'expr' — unlike the matmul-bound labeling/SRP families, MinHash
-    banding is shingling/IO-bound (measured r9 at sf0.1: expr vs arrow
-    within noise at 16, 64, AND 128 hashes), so the Arrow XXH64 fold
-    (minhash_signature_frame, bit-identical, test-pinned) stays the
-    explicit-opt-in path here. The mapInPandas node is itself a
-    projection barrier, so the explode-above-barrier property holds on
-    both paths.
+def _band_keys(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, band, bucket) banded LSH keys of an (id, sh) shingle-set
+    frame: one row per (doc, band), bucket = hash of the band's
+    signature slice.
+
+    The signature is projected first and the band INDEX exploded above
+    it: the Generate node is a projection barrier, so the fold runs
+    once per doc. Banding in the same projection as the fold (an array
+    of per-band slices) lets CollapseProject inline the whole fold into
+    every band slice — ``bands``x recomputation.
     """
-    from .._kernels import resolve_kernel
-
-    signature = resolve_kernel(signature, auto="expr")
     rows_per_band = num_hashes // bands
-    if signature == "arrow":
-        sigs = minhash_signature_frame(
-            _spread(df), id_col, text_col, num_hashes, shingle_n
-        )
-    else:
-        sigs = minhash_signatures(
-            _spread(df), text_col, num_hashes, shingle_n
-        ).select(F.col(id_col).alias("id"), "minhash")
     return (
-        sigs.select(
+        sh.select("id", _minhash_fold(F.col("sh"), num_hashes).alias("minhash"))
+        .select(
             "id",
             "minhash",
             F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
@@ -337,6 +142,22 @@ def banded_minhash_keys(
     )
 
 
+def banded_minhash_keys(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 16,
+    bands: int = 8,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """(id, band, bucket) banded LSH keys: one row per (doc, band),
+    bucket = hash of the band's signature slice. Docs agreeing on ALL
+    hashes within a band share its bucket."""
+    return _band_keys(
+        _shingle_sets(df, id_col, text_col, shingle_n), num_hashes, bands
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -345,7 +166,6 @@ def minhash_lsh_candidates(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int = 1024,
-    signature: str | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded LSH.
 
@@ -371,7 +191,7 @@ def minhash_lsh_candidates(
     quadratically explode.
     """
     banded = banded_minhash_keys(
-        df, id_col, text_col, num_hashes, bands, shingle_n, signature
+        df, id_col, text_col, num_hashes, bands, shingle_n
     )
     return _bucket_pairs(banded, max_bucket_size)
 
@@ -379,9 +199,9 @@ def minhash_lsh_candidates(
 def _bucket_pairs(banded: DataFrame, max_bucket_size: int = 1024) -> DataFrame:
     """Candidate pairs (id_a < id_b) from a prebuilt (id, band, bucket)
     keys frame — the bucket-combination stage of
-    ``minhash_lsh_candidates``, factored out (r13) so a caller holding
-    a PERSISTED keys frame (incremental_minhash_dedup's within-batch
-    stage) reuses it instead of paying a second signature fold."""
+    ``minhash_lsh_candidates``, factored out for callers that already
+    hold the keys (minhash_dedup, and incremental_minhash_dedup's
+    PERSISTED batch keys) instead of paying a second signature fold."""
     buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
@@ -428,10 +248,9 @@ def ngram_jaccard_pairs(
     |A ∩ B| / |A ∪ B| with array expressions. Only candidate pairs pay
     the set math — the LSH stage already killed the quadratic blowup.
     """
-    sh = _spread(df).select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), shingle_n).alias("sh")
+    return _verify_jaccard(
+        _shingle_sets(df, id_col, text_col, shingle_n), candidates, threshold
     )
-    return _verify_jaccard(sh, candidates, threshold)
 
 
 def _verify_jaccard(
@@ -439,9 +258,9 @@ def _verify_jaccard(
 ) -> DataFrame:
     """Exact-Jaccard verification over a prebuilt (id, sh) shingle-set
     frame — the join+set-math stage of ``ngram_jaccard_pairs``,
-    factored out (r13) so a caller holding a PERSISTED shingle frame
-    (incremental_minhash_dedup) reuses it for both verify passes
-    instead of re-shingling the batch per consumer."""
+    factored out so callers verify against the same shingle frame their
+    signatures came from (minhash_dedup; incremental_minhash_dedup's
+    PERSISTED batch sets) instead of re-shingling per consumer."""
     joined = (
         candidates.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
@@ -560,10 +379,49 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame
     return reps.unionByName(self_only)
 
 
+# Pair graphs up to this many undirected pairs are clustered on the driver.
+_COLLECT_THRESHOLD = 100_000
+
+
+def _collect_at_most(pairs: DataFrame, limit: int) -> list | None:
+    """``pairs`` collected to the driver when it holds at most
+    ``limit`` rows, else None — one bounded collect (``limit(k+1)``).
+    The pair frames this sees end in a distinct, so every expensive
+    stage runs as a fully parallel shuffle stage and only the final
+    post-shuffle read is taken partition-wave by partition-wave."""
+    if not limit:
+        return None
+    rows = pairs.limit(limit + 1).collect()
+    return rows if len(rows) <= limit else None
+
+
+def _union_find(rows) -> dict:
+    """{id: component minimum} over collected (id_a, id_b) rows."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:  # union by min so rep is the component minimum
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {x: find(x) for x in parent}
+
+
 def connected_components_min(
     pairs: DataFrame,
     max_iter: int = 25,
-    collect_threshold: int = 100_000,
+    collect_threshold: int = _COLLECT_THRESHOLD,
     algorithm: str = "star",
 ) -> DataFrame:
     """(id, rep) for every id in the pair graph: ``rep`` is the minimum
@@ -582,13 +440,10 @@ def connected_components_min(
     upgrade if 100 TB corpora ever produce deep chains.
 
     Small graphs (<= ``collect_threshold`` undirected pairs) skip the
-    loop entirely: the pair list is persisted and counted — ONE fully
-    parallel job (a ``limit(k+1)`` probe executes as CollectLimit's
-    incremental partition waves, serializing the expensive verify stage
-    on a near-idle cluster; measured 2x slower cold at sf0.1) — then
-    either collected for a driver union-find (replacing 2-3 rounds x
+    loop entirely: one bounded collect (``_collect_at_most``) brings
+    the pair list to a driver union-find, replacing 2-3 rounds x
     (shuffle join + checkpoint + convergence count) of fixed per-job
-    overhead) or handed to the distributed path. Set
+    overhead; larger graphs take the distributed path. Set
     ``collect_threshold=0`` to force the distributed path.
 
     ``algorithm`` picks the distributed path: ``"star"`` (default) is
@@ -599,35 +454,14 @@ def connected_components_min(
     cheaper per round on the shallow clusters near-dedup usually
     produces.
     """
-    und = pairs.select("id_a", "id_b").distinct().persist()
-    n_pairs = und.count()
-    if collect_threshold and n_pairs <= collect_threshold:
-        probe = und.collect()
-        und.unpersist()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in probe:
-            a, b = row.id_a, row.id_b
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:  # union by min so rep is the component minimum
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        out = [(x, find(x)) for x in parent]
+    und = pairs.select("id_a", "id_b").distinct()
+    rows = _collect_at_most(und, collect_threshold)
+    if rows is not None:
         id_type = pairs.schema["id_a"].dataType.simpleString()
         return pairs.sparkSession.createDataFrame(
-            out, f"id {id_type}, rep {id_type}"
+            list(_union_find(rows).items()), f"id {id_type}, rep {id_type}"
         )
+    und = und.persist()
     if algorithm == "star":
         try:
             return connected_components_star(und, max_iter=max_iter * 2)
@@ -692,46 +526,75 @@ def minhash_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.7,
-    **lsh_kwargs,
+    num_hashes: int = 16,
+    bands: int = 8,
+    shingle_n: int = 3,
+    max_bucket_size: int = 1024,
 ) -> DataFrame:
     """End-to-end near-dedup: LSH candidates -> Jaccard verify ->
     connected components -> keep the minimum id of each dup cluster.
 
-    Clustering runs min-propagation to FIXPOINT (connected_components_min),
-    so transitive chains collapse: A~B~C with A≁C keeps only A — the
+    Clustering runs to FIXPOINT (connected_components_min), so
+    transitive chains collapse: A~B~C with A≁C keeps only A — the
     reference's keep-one-per-cluster contract
     (mongo_to_postgres_replication.py:35-39). Docs in no verified pair
-    are untouched (anti-join against cluster losers only).
+    are untouched.
+
+    One (id, sh) shingle-set frame feeds the signature fold and both
+    sides of the exact-string Jaccard verify, and the verified pair
+    graph reaches the driver in one bounded collect when it is small:
+    one query plus the caller's write. The frame is not persisted:
+    shingling is linear, the spread exchange under it is reused by all
+    three consumers, and caching it would add a cache-fill job per
+    reference (measured 11 jobs vs 8, same wall time).
     """
-    verified = ngram_jaccard_pairs(
-        df, minhash_lsh_candidates(df, id_col, text_col, **lsh_kwargs),
-        id_col, text_col, threshold=threshold,
+    sh = _shingle_sets(df, id_col, text_col, shingle_n)
+    return _keep_component_minimum(
+        df,
+        _verified_pairs(sh, threshold, num_hashes, bands, max_bucket_size),
+        id_col,
     )
-    comp = connected_components_min(verified.select("id_a", "id_b"))
-    return _drop_losers(df, comp, id_col)
 
 
-def _drop_losers(df: DataFrame, comp: DataFrame, id_col: str) -> DataFrame:
-    """Drop every non-representative member of ``comp`` (id, rep) from
-    ``df`` — the keep-minimum tail of ``minhash_dedup``, factored out
-    (r13) for callers that assemble the verified pair graph from
-    persisted intermediates (incremental_minhash_dedup)."""
-    if comp.isLocal():
-        # small-graph path returned a driver-local frame: push the loser
-        # set into the scan as an isin filter instead of a join — one
-        # predicate, no build side, no exchange
-        loser_ids = [r.id for r in comp.collect() if r.rep != r.id]
-        # NULL ids never appear in pairs (they can't equal anything), so
-        # they are always keepers — but ~isin() evaluates to NULL for
-        # them and would silently drop the rows; the isNull guard keeps
-        # parity with the distributed left_anti path below.
-        return df.where(
-            F.col(id_col).isNull() | ~F.col(id_col).isin(loser_ids)
+def _verified_pairs(
+    sh: DataFrame,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    max_bucket_size: int,
+) -> DataFrame:
+    """Verified near-dup pairs of an (id, sh) shingle-set frame: LSH
+    candidates from its signatures, exact Jaccard on the same sets."""
+    cands = _bucket_pairs(_band_keys(sh, num_hashes, bands), max_bucket_size)
+    return _verify_jaccard(sh, cands, threshold)
+
+
+def _keep_component_minimum(
+    df: DataFrame,
+    verified: DataFrame,
+    id_col: str,
+) -> DataFrame:
+    """``df`` minus every member of the ``verified`` pair graph that is
+    not its component's minimum id.
+
+    A small graph is clustered on the driver after one bounded collect
+    and its losers are pushed into the scan as one ``isin`` filter (no
+    build side, no exchange); a larger one goes through the distributed
+    connected_components_min and a left-anti join.
+    """
+    und = verified.select("id_a", "id_b").distinct()
+    rows = _collect_at_most(und, _COLLECT_THRESHOLD)
+    if rows is None:
+        comp = connected_components_min(und, collect_threshold=0)
+        losers = comp.where(F.col("rep") != F.col("id")).select(
+            F.col("id").alias(id_col)
         )
-    losers = comp.where(F.col("rep") != F.col("id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
+        return df.join(losers, id_col, "left_anti")
+    loser_ids = [x for x, rep in _union_find(rows).items() if x != rep]
+    # NULL ids never appear in pairs (they can't equal anything), so
+    # they are always keepers — but ~isin() evaluates to NULL for them
+    # and would silently drop the rows
+    return df.where(F.col(id_col).isNull() | ~F.col(id_col).isin(loser_ids))
 
 
 def md5_hash32(t):
@@ -832,18 +695,21 @@ def text_segments(
     c = F.col(col) if isinstance(col, str) else col
     if chunk_words is None:
         return F.filter(F.split(c, delimiter), lambda s: F.trim(s) != "")
-    toks = whitespace_tokens(c)
-    n = F.size(toks)
-    nch = F.ceil(n / F.lit(float(chunk_words))).cast("int")
-    return F.when(
-        n > 0,
-        F.transform(
-            F.sequence(F.lit(1), nch),
-            lambda i: F.concat_ws(
-                " ", F.slice(toks, (i - 1) * chunk_words + 1, chunk_words)
+
+    def body(toks):
+        n = F.size(toks)
+        nch = F.ceil(n / F.lit(float(chunk_words))).cast("int")
+        return F.when(
+            n > 0,
+            F.transform(
+                F.sequence(F.lit(1), nch),
+                lambda i: F.concat_ws(
+                    " ", F.slice(toks, (i - 1) * chunk_words + 1, chunk_words)
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+        ).otherwise(F.array().cast("array<string>"))
+
+    return bind_once(whitespace_tokens(c), body)
 
 
 def segment_boilerplate_removal(
@@ -992,16 +858,19 @@ def remove_duplicate_spans(
     toks = whitespace_tokens(F.col(text_col))
     n = F.size(toks)
     k = span_tokens
-    span_structs = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.struct(
-                i.alias("spos"),
-                F.xxhash64(F.concat_ws(" ", F.slice(toks, i, k))).alias("__h"),
+    span_structs = bind_once(
+        toks,
+        lambda t: F.when(
+            F.size(t) >= k,
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - k + 1),
+                lambda i: F.struct(
+                    i.alias("spos"),
+                    F.xxhash64(F.concat_ws(" ", F.slice(t, i, k))).alias("__h"),
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<struct<spos:int,__h:bigint>>"))
+        ).otherwise(F.array().cast("array<struct<spos:int,__h:bigint>>")),
+    )
     pos_spans = docs.select(
         id_col, F.explode(span_structs).alias("__s")
     ).select(id_col, F.col("__s.spos").alias("__spos"), F.col("__s.__h").alias("__h"))
@@ -1024,22 +893,10 @@ def remove_duplicate_spans(
             )
         )
     )
-    # sequence(1, 0) counts DOWN in Spark — gate the position range on
-    # non-empty token arrays
+    # null text keeps the empty-array result
     kept = F.when(
         n > 0,
-        F.transform(
-            F.filter(
-                F.transform(
-                    F.sequence(F.lit(1), n),
-                    lambda p: F.struct(
-                        p.alias("p"), F.element_at(toks, p).alias("t")
-                    ),
-                ),
-                lambda s: ~F.array_contains(covered, s["p"]),
-            ),
-            lambda s: s["t"],
-        ),
+        F.filter(toks, lambda t, i: ~F.array_contains(covered, i + 1)),
     ).otherwise(F.array().cast("array<string>"))
     return (
         docs.join(starts, id_col, "left")
@@ -1062,7 +919,6 @@ def incremental_minhash_dedup(
     max_bucket_size: int = 1024,
     corpus_keys: DataFrame | None = None,
     persisted_out: list | None = None,
-    signature: str | None = None,
 ) -> DataFrame:
     """NEAR-duplicate dedup of an ingest batch against a large corpus:
     drop batch docs whose n-gram Jaccard vs ANY corpus doc reaches
@@ -1103,23 +959,25 @@ def incremental_minhash_dedup(
     # core (the spread probe cannot fire there: persist substitutes an
     # InMemoryRelation leaf it refuses to trust). r12 fix.
     new_batch = _spread(new_batch)
-    lshkw = dict(
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        signature=signature,
-    )
+    # the batch's shingle sets feed its signatures, the cross-corpus
+    # verify AND both sides of the within-batch verify below — persist
+    # them once instead of re-shingling the batch per consumer
+    bsh = _shingle_sets(new_batch, id_col, text_col, shingle_n).persist()
+    if persisted_out is not None:
+        persisted_out.append(bsh)
     # the batch's banded keys feed BOTH the broadcast probe and the
     # candidate join — batch-bounded, so persist them like `cand` and
     # `fresh` below rather than re-running the signature fold per
     # consumer (r12)
-    bkeys = banded_minhash_keys(new_batch, id_col, text_col, **lshkw).persist()
+    bkeys = _band_keys(bsh, num_hashes, bands).persist()
     if persisted_out is not None:
         persisted_out.append(bkeys)
     ckeys = (
         corpus_keys
         if corpus_keys is not None
-        else banded_minhash_keys(corpus, id_col, text_col, **lshkw)
+        else banded_minhash_keys(
+            corpus, id_col, text_col, num_hashes, bands, shingle_n
+        )
     )
     probe = bkeys.select("band", "bucket").distinct()
     chits = ckeys.join(F.broadcast(probe), ["band", "bucket"], "left_semi")
@@ -1138,22 +996,6 @@ def incremental_minhash_dedup(
     )
     if persisted_out is not None:
         persisted_out.append(cand)
-    # the batch's shingle sets feed the cross-corpus verify AND both
-    # sides of the within-batch verify below — persist them once (r13)
-    # instead of re-running the shingle transform per consumer. Spread
-    # BEFORE the shingle expression: the transform is the per-row CPU
-    # term and otherwise runs on the scan's 1-2 partitions (r12;
-    # duplicate_span_stats fix, same shape). No-op at real scale.
-    bsh = (
-        _spread(new_batch.select(id_col, text_col))
-        .select(
-            F.col(id_col).alias("id"),
-            word_shingles(F.col(text_col), shingle_n).alias("sh"),
-        )
-        .persist()
-    )
-    if persisted_out is not None:
-        persisted_out.append(bsh)
     matched = cand.select(F.col("id_b").alias(id_col)).distinct()
     # spread the corpus SCAN (file leaf), not the joined frame: the
     # probe only trusts all-file-leaf plans, and `matched` rides on the
@@ -1197,8 +1039,7 @@ def incremental_minhash_dedup(
     verified = _verify_jaccard(
         fsh, _bucket_pairs(fkeys, max_bucket_size), threshold
     )
-    comp = connected_components_min(verified.select("id_a", "id_b"))
-    return _drop_losers(fresh, comp, id_col)
+    return _keep_component_minimum(fresh, verified, id_col)
 
 
 def duplicate_span_stats(
@@ -1405,7 +1246,10 @@ def minhash_dedup_keep_best(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.7,
-    **lsh_kwargs,
+    num_hashes: int = 16,
+    bands: int = 8,
+    shingle_n: int = 3,
+    max_bucket_size: int = 1024,
 ) -> DataFrame:
     """Near-dedup keeping the HIGHEST-QUALITY member of each dup
     cluster instead of the smallest id — the production keep rule
@@ -1422,11 +1266,10 @@ def minhash_dedup_keep_best(
     pair-graph-sized either way).
     """
     score = F.col(score_col) if isinstance(score_col, str) else score_col
-    verified = ngram_jaccard_pairs(
-        df, minhash_lsh_candidates(df, id_col, text_col, **lsh_kwargs),
-        id_col, text_col, threshold=threshold,
+    sh = _shingle_sets(df, id_col, text_col, shingle_n)
+    comp = connected_components_min(
+        _verified_pairs(sh, threshold, num_hashes, bands, max_bucket_size)
     )
-    comp = connected_components_min(verified.select("id_a", "id_b"))
     # private column names: df may legitimately carry a "rep" column
     membership = comp.select(
         F.col("id").alias(id_col), F.col("rep").alias("__kb_rep")

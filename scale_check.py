@@ -53,78 +53,39 @@ def main() -> None:
         )
         return sessionize_batch(ev, gap_seconds=600).count()
 
-    # 2) MinHash LSH candidates over 300k synthetic ~32-word docs —
-    #    both signature paths (expr = driver-checked default, arrow =
-    #    the r8 vectorized-XXH64 twin, test-pinned bit-identical);
-    #    candidate counts must agree exactly.
+    # 2) MinHash LSH candidates over 300k synthetic ~32-word docs.
+    def _minhash_docs():
+        words = F.transform(
+            F.sequence(F.lit(1), F.lit(32)),
+            lambda i: F.concat(
+                F.lit("w"), (F.pmod(F.xxhash64(F.col("id"), i), 5000)).cast("string")
+            ),
+        )
+        return spark.range(300_000).select(
+            F.col("id").alias("doc_id"),
+            F.concat_ws(" ", words).alias("text"),
+        )
+
     def minhash_300k():
         from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
             minhash_lsh_candidates,
         )
 
-        words = F.transform(
-            F.sequence(F.lit(1), F.lit(32)),
-            lambda i: F.concat(
-                F.lit("w"), (F.pmod(F.xxhash64(F.col("id"), i), 5000)).cast("string")
-            ),
-        )
-        docs = spark.range(300_000).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(" ", words).alias("text"),
-        )
-        out = {}
-        for sig in ("expr", "arrow"):
-            t0 = time.perf_counter()
-            out[sig] = {
-                "candidates": minhash_lsh_candidates(
-                    docs, signature=sig
-                ).count(),
-                "seconds": round(time.perf_counter() - t0, 2),
-            }
-        out["identical_count"] = (
-            out["expr"]["candidates"] == out["arrow"]["candidates"]
-        )
-        return out
+        return minhash_lsh_candidates(_minhash_docs()).count()
 
     # 2b) signature stage ONLY, 64 hashes (fine-threshold / 0.8-Jaccard
-    #    operating points): at 16 hashes the fold is small next to
-    #    shingling+string-hash (both JVM) and the bucket join, so the
-    #    arrow twin's end-to-end win is Amdahl-capped (~8%); at 64
-    #    hashes the per-(shingle, j) interpreted zip_with work is 4x
-    #    while the vectorized path grows only the reduceat width.
+    #    operating points): the per-(shingle, j) fold work is 4x that
+    #    of the 16-hash default.
     def minhash_sig64_300k():
         from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
-            minhash_signature_frame,
             minhash_signatures,
         )
 
-        words = F.transform(
-            F.sequence(F.lit(1), F.lit(32)),
-            lambda i: F.concat(
-                F.lit("w"), (F.pmod(F.xxhash64(F.col("id"), i), 5000)).cast("string")
-            ),
-        )
-        docs = spark.range(300_000).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(" ", words).alias("text"),
-        )
-        out = {}
-        t0 = time.perf_counter()
-        expr_n = (
-            minhash_signatures(docs, "text", 64, 3)
+        return (
+            minhash_signatures(_minhash_docs(), "text", 64, 3)
             .select(F.sum(F.element_at("minhash", 1)).alias("s"))
             .collect()[0]["s"]
         )
-        out["expr_seconds"] = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        arrow_n = (
-            minhash_signature_frame(docs, "doc_id", "text", 64, 3)
-            .select(F.sum(F.element_at("minhash", 1)).alias("s"))
-            .collect()[0]["s"]
-        )
-        out["arrow_seconds"] = round(time.perf_counter() - t0, 2)
-        out["identical_checksum"] = expr_n == arrow_n
-        return out
 
     # 3) hot-key join, 5M facts with 50% on one key: plain vs salted
     def _skewed_sides():

@@ -118,10 +118,9 @@ def test_ivf_kmeans_exact_topk_identical_across_kernels(spark):
 
 
 def test_minhash_family_auto_default_is_expr(spark, monkeypatch):
-    """MinHash banding is shingling/IO-bound (r9 measurement: expr vs
-    arrow within noise at 16/64/128 hashes, sf0.1), so its unset-env
-    default stays the Python-free plan — while an explicitly set
-    $SPARK_GRAFT_KERNEL still forces the family either way."""
+    """MinHash banding has one kernel family, the expression fold (it
+    beat the Arrow twin once shingling went linear), so its plan is
+    Python-free whether or not $SPARK_GRAFT_KERNEL is set."""
     from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
         banded_minhash_keys,
     )
@@ -131,18 +130,16 @@ def test_minhash_family_auto_default_is_expr(spark, monkeypatch):
         F.concat(F.lit("alpha beta gamma delta epsilon zeta "),
                  F.col("id").cast("string")).alias("text"),
     )
-    monkeypatch.delenv(KERNEL_ENV, raising=False)
-    plan_auto = (
-        banded_minhash_keys(docs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInPandas" not in plan_auto
-    monkeypatch.setenv(KERNEL_ENV, "arrow")
-    plan_forced = (
-        banded_minhash_keys(docs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInPandas" in plan_forced
+    for env in (None, "arrow"):
+        if env is None:
+            monkeypatch.delenv(KERNEL_ENV, raising=False)
+        else:
+            monkeypatch.setenv(KERNEL_ENV, env)
+        plan = (
+            banded_minhash_keys(docs)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "MapInPandas" not in plan
 
 
 def test_resolve_kernel_auto_param():

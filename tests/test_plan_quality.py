@@ -615,3 +615,39 @@ def test_srp_verify_is_broadcast_with_staged_bands(spark, sf_dir):
     assert plan.count("hse_srp_") >= 2  # both self-join sides read the stage
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_word_shingles_tokenizes_once(spark):
+    """The token array is bound once per row, so one word_shingles call
+    splits the text once — not once per shingle position (the free
+    token expression inside the slice lambda made shingling
+    O(tokens^2))."""
+    from hse_etl_ochirov_aldar_spark.functions.text import word_shingles
+
+    df = spark.createDataFrame([(1, "a b c d e")], "id long, text string")
+    plan = (
+        df.select(word_shingles("text", 3).alias("sh"))
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("split(") == 1
+
+
+def test_minhash_dedup_small_graph_drops_losers_in_the_scan(spark):
+    """A small verified pair graph is clustered on the driver, and its
+    losers reach the output as one isin filter over the input scan:
+    no join, no exchange in the deduped frame's plan."""
+    from pyspark.sql import functions as F
+
+    from hse_etl_ochirov_aldar_spark.operators.text_dedup import minhash_dedup
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.range(6).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") < 3, F.concat(F.lit(base + " "), F.col("id").cast("string")))
+        .otherwise(F.concat(F.lit("other words "), F.col("id").cast("string")))
+        .alias("text"),
+    )
+    kept = minhash_dedup(docs, threshold=0.7)
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan
+    assert sorted(r.doc_id for r in kept.collect()) == [0, 3, 4, 5]

@@ -5,6 +5,7 @@ property collects its generated rows into a single DataFrame pass."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -13,7 +14,7 @@ from hse_etl_ochirov_aldar_spark.functions.cleaning import (
     coalesce_multi_format_timestamp,
     decimal_comma_to_double,
 )
-from hse_etl_ochirov_aldar_spark.functions.text import token_count
+from hse_etl_ochirov_aldar_spark.functions.text import token_count, word_shingles
 from hse_etl_ochirov_aldar_spark.operators.dedup import dedup_keep_first
 
 _SETTINGS = dict(
@@ -813,3 +814,50 @@ def test_auto_skew_safe_membership_invariant(spark, groups, quota, thresh):
     finally:
         S.SKEW_SAFE_GROUP_ROWS = old
     assert got[None] == got[True] == got[False]
+
+
+def _ref_shingles(text, n):
+    """Plain-Python word_shingles: ASCII-whitespace tokens, distinct
+    n-token shingles in first-occurrence order; fewer than n tokens
+    (and NULL text) give the whole token sequence as one shingle."""
+    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text or "") if t]
+    if len(toks) < n:
+        return [" ".join(toks)]
+    return list(dict.fromkeys(
+        " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
+    ))
+
+
+_SHINGLE_TEXTS = st.one_of(
+    st.none(),
+    st.sampled_from(["", " ", " \t\n \r"]),
+    # a 4-word vocabulary repeats shingles; mixed separators and a
+    # trailing space exercise the split/trim/empty-token filter
+    st.lists(
+        st.tuples(
+            st.sampled_from([" ", "  ", "\t", "\n", " \r\n "]),
+            st.sampled_from(["a", "b", "c", "dd"]),
+        ),
+        max_size=14,
+    ).map(lambda parts: "".join(w + t for w, t in parts) + " "),
+)
+
+
+@settings(**_SETTINGS)
+@given(st.lists(_SHINGLE_TEXTS, min_size=1, max_size=25))
+def test_word_shingles_match_python_reference(spark, texts):
+    """word_shingles (n = 3 and 8) equals the Python reference on NULL,
+    empty, whitespace-only, shorter-than-n and repetitive texts."""
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    got = {
+        r.i: (r.s3, r.s8)
+        for r in df.select(
+            "i",
+            word_shingles("text", 3).alias("s3"),
+            word_shingles("text", 8).alias("s8"),
+        ).collect()
+    }
+    assert got == {
+        i: (_ref_shingles(t, 3), _ref_shingles(t, 8))
+        for i, t in enumerate(texts)
+    }
