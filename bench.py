@@ -172,7 +172,7 @@ def main() -> None:
             # drop them so one query's leftover cache can't distort the
             # next query's timing or accumulate executor memory
             spark.catalog.clearCache()
-        # staged parquet (setsim postings, SRP bands, streaming replay
+        # staged parquet (setsim postings, streaming replay
         # sources) accumulates per pass; all staged frames are consumed
         # within their own query, so reclaim between passes
         from hse_etl_ochirov_aldar_spark._stage import purge_stage_root

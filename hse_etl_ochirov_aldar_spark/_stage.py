@@ -1,9 +1,9 @@
 """Session-scoped scratch staging with lifecycle (r7 verdict task #4,
 ADVICE r7 medium).
 
-Several operators materialize a small intermediate ONCE through a
+Some operators materialize a small intermediate ONCE through a
 parquet stage so a multi-consumer subplan is not re-executed per
-consumer (PERF findings 22/23: setsim postings, SRP band rows), and
+consumer (PERF finding 22: setsim postings), and
 the streaming catalog entries need a replay source + checkpoint
 directory. Before r8 each call site did its own ``tempfile.mkdtemp``:
 the dirs were never cleaned up (disk leak per call — including bench
@@ -112,7 +112,7 @@ def stage_parquet(
 
     This is the multi-consumer seam (PERF finding 22): Spark
     re-executes a non-cached subplan per consumer, so an expensive
-    small relation feeding a self-join (band rows, postings) is
+    small relation feeding a self-join (setsim postings) is
     computed once here and each consumer pays only a parquet scan.
     ``coalesce`` bounds the file count — these relations arrive in
     shuffle-partition granularity (~200 tiny files otherwise) and

@@ -36,7 +36,6 @@ from .sampling import (
 )
 from .similarity import (
     brute_force_topk,
-    brute_force_topk_arrow,
     cosine,
     embedding_near_dedup,
     embedding_near_dup_ids,
@@ -83,7 +82,6 @@ __all__ = [
     "normalize_nutrition_xml",
     "normalize_pets_json",
     "global_percentile_bounds",
-    "brute_force_topk_arrow",
     "profile_table",
     "skew_report",
     "correlation_matrix",

@@ -91,7 +91,10 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     than the session has cores (estimated bytes < cores x
     maxPartitionBytes). At real scale the estimate is huge and this is
     a no-op — it never collapses a large scan; unknown-size sources
-    (estimate = Long.Max) are likewise left untouched.
+    (estimate = Long.Max) are likewise left untouched. Without it, a
+    corpus read from one small parquet file runs per-row CPU work on a
+    single core: measured 6.4x slower for signature folds and 18x for
+    broadcast-join vector scoring at sf0.1 on 32 cores.
 
     Known trade vs the old RDD probe: bytes/maxPartitionBytes only
     approximates the partition count for SPLITTABLE sources. A large

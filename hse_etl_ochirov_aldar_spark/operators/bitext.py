@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _dot, _norm, _spread
+from ._plan import spread_small_input
+from .similarity import _dot, _norm
 
 
 def margin_bitext_mine(
@@ -75,7 +76,7 @@ def margin_bitext_mine(
         0,
     ).cast("long")
     scored = (
-        _spread(a)
+        spread_small_input(a)
         .crossJoin(F.broadcast(b))
         .select("a_id", "b_id", cos6u.alias("cos6u"))
     )

@@ -257,12 +257,12 @@ def semantic_decontaminate_arrow(
 ) -> DataFrame:
     """Opt-in Arrow scale path of :func:`semantic_decontaminate`: one
     vectorized numpy matmul per Arrow batch (corpus_chunk @ evals.T)
-    instead of the interpreted per-element HOF fold — the
-    brute_force_topk_arrow pattern, NOT the bit-identical kernel
-    family: numpy reorders the float sum, so the last ulp can differ
-    from the expression path's ordered fold, and per module policy
-    (_kernels) float-aggregation twins stay explicit opt-in scale
-    paths with tolerance tests, never the driver-checked entry.
+    instead of the interpreted per-element HOF fold. Unlike the
+    exact integer kernels (cell_labels_frame, srp_signature_frame) it
+    is a float twin: numpy reorders the float sum, so the last ulp can
+    differ from the expression path's ordered fold, and
+    float-aggregation twins stay explicit opt-in scale paths with
+    tolerance tests, never the driver-checked entry.
 
     When it matters: the expression path pays |evals| x dims
     interpreted multiply-adds per corpus row (~ms/row at 64-dim x

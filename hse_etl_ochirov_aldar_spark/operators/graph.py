@@ -1,11 +1,11 @@
 """Graph analytics over relational edge lists: degree census and
 deterministic integer PageRank.
 
-Connected components live in text_dedup (star contraction / min-label
-/ union-find — the dedup clustering engine); this module adds the
-centrality side. Everything runs on an undirected pair list
-``(id_a, id_b)`` — the same shape the dedup and co-purchase queries
-already produce.
+Connected components live in text_dedup (star contraction, or a
+driver union-find for small graphs — the dedup clustering engine);
+this module adds the centrality side. Everything runs on an
+undirected pair list ``(id_a, id_b)`` — the same shape the dedup and
+co-purchase queries already produce.
 
 PageRank here is EXACT-INTEGER: ranks are BIGINT micro-units, the
 damping factor is the exact rational 85/100, and each node's

@@ -754,8 +754,6 @@ def cluster_balanced_sample(
     vec_col: str = "embedding",
     scale: int = 6,
     centroids: list[list[int]] | None = None,
-    labeler: str | None = None,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Diversity-balanced sampling over LEARNED clusters — the D4-style
     coreset draw (Tirumala et al. 2023): fit the deterministic integer
@@ -770,8 +768,8 @@ def cluster_balanced_sample(
     in-cluster pick is md5-hash-order rank — the whole draw is a pure
     function of the data, recomputable by any engine.
 
-    Scale shape (100 TB): labeling is a row-local argmin expression
-    (no join); the only shuffle is the quota window on cluster_id
+    Scale shape (100 TB): labeling is a row-local argmin (no join); the
+    only shuffle is the quota window on cluster_id
     (n_cells values — AQE splits the big cells); per-cluster counts
     collect to the driver bounded by n_cells. Returns sampled rows
     with a ``cluster_id`` column.
@@ -782,52 +780,23 @@ def cluster_balanced_sample(
     exact_kmeans_centroids, reuse per draw. Without it every call pays
     ``iters`` extra full scans, which at 100 TB dwarfs the draw itself.
 
-    ``labeler``: None defers to the session kernel default
-    ($SPARK_GRAFT_KERNEL, 'arrow' since r9) — similarity.
-    cell_labels_frame's int64 Arrow matmul is BIT-IDENTICAL to the
-    expression path (the finding-24 exact-integer pattern, so no
-    tolerance caveat) at ~2 orders of magnitude less per-row cost, and
-    with ``passthrough`` the labeled rows come straight out of the
-    Arrow stage (no label join — r9, the join was the old arrow
-    path's scale blemish). 'expr' forces the Python-free plan.
+    Labels come from similarity.cell_labels_frame, the int64 Arrow
+    argmin with column passthrough, so the labeled rows come straight
+    out of the Arrow stage (no label join). ``labeled`` feeds two
+    consumers (the quota count-collect and the rank window) and is
+    deliberately not persisted: relabeling is cheaper than the cache
+    build (1M-vector draw on local[32]: 20.2 s, 21.9 s with persist).
     """
-    from .._kernels import resolve_kernel
-    from .similarity import (
-        _cell_ranks,
-        _spread,
-        cell_labels_frame,
-        exact_kmeans_centroids,
-        micro_vec,
-    )
+    from ._plan import spread_small_input
+    from .similarity import cell_labels_frame, exact_kmeans_centroids
 
     cents = centroids if centroids is not None else exact_kmeans_centroids(
-        vectors, n_cells, iters, id_col, vec_col, scale, labeler=labeler
+        vectors, n_cells, iters, id_col, vec_col, scale
     )
-    if resolve_kernel(labeler) == "arrow":
-        labeled = cell_labels_frame(
-            _spread(vectors), cents, id_col=id_col, vec_col=vec_col,
-            scale=scale, passthrough=True,
-        )
-    else:
-        labeled = vectors.withColumn(
-            "cluster_id",
-            F.element_at(_cell_ranks(micro_vec(F.col(vec_col), scale), cents), 1),
-        )
-        # labeled feeds TWO consumers (the quota count-collect and the
-        # rank window) and Spark re-executes a non-cached subplan per
-        # consumer. Under the EXPR kernel the interpreted 64-cell
-        # argmin dominates, so paying it twice is the operator's whole
-        # cost — persist halves the 1M-vector draw (92.7s -> 43.0s,
-        # r9). Under the arrow kernel relabeling is CHEAPER than the
-        # cache build (20.2s -> 21.9s with persist), so that path
-        # deliberately recomputes. Eviction spills/recomputes, never
-        # corrupts. persisted_out: per-batch callers pass a list and
-        # unpersist after their terminal action (the
-        # incremental_minhash_dedup contract); bench/tests clear cache
-        # between entries.
-        labeled = labeled.persist()
-        if persisted_out is not None:
-            persisted_out.append(labeled)
+    labeled = cell_labels_frame(
+        spread_small_input(vectors), cents, id_col=id_col, vec_col=vec_col,
+        scale=scale, passthrough=True,
+    )
     return temperature_mixture_sample(labeled, "cluster_id", id_col, total)
 
 

@@ -44,21 +44,6 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the session's default parallelism,
-    only when the input has fewer partitions.
-
-    The stream side of a broadcast/nested-loop join runs one task PER
-    INPUT PARTITION — a small corpus read from one parquet file does
-    the whole O(n*q) / O(n^2) scoring on a single core (measured 18x
-    slower at sf0.1). One cheap row-shuffle before the join spreads the
-    quadratic work across the cluster; at real scale the input already
-    has more partitions than cores and the guard (a Catalyst plan-stats
-    probe, operators/_plan.py, no RDD conversion) makes this a no-op
-    (never collapses a large scan)."""
-    return spread_small_input(df)
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -87,7 +72,7 @@ def brute_force_topk(
         )
     )
     scored = (
-        _spread(
+        spread_small_input(
             corpus.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("c_vec"),
@@ -173,7 +158,7 @@ def embedding_near_dup_ids(
         )
         return cosine_dup_ids(vectors, cand, threshold, id_col, vec_col, scale)
     else:
-        left = _spread(
+        left = spread_small_input(
             vectors.select(
                 F.col(id_col).alias("_a_id"), F.col(vec_col).alias("_a_vec")
             )
@@ -198,7 +183,6 @@ def cosine_dup_ids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 6,
-    lookup: str = "broadcast",
 ) -> DataFrame:
     """Verify candidate pairs (``_a_id``, ``_b_id``) by exact cosine;
     return the higher ids of pairs at/above ``threshold`` (the dedup
@@ -213,10 +197,9 @@ def cosine_dup_ids(
     the whole cost of the stage, and Catalyst cannot see that. Without
     the repartition, the measured plan ran every cosine on a single
     task (and Spark chose to broadcast the fat pair+vector side).
-    ``lookup="broadcast"`` hash-maps the (id, vec, norm) table to every
-    task — right whenever the vector table fits the broadcast cap
-    (into the ~10M-vector range at dim 64); at true 100 TB corpus
-    scale pass ``"merge"`` for co-partitioned sort-merge lookups.
+    The (id, vec, norm) table is broadcast to every task — right
+    whenever the vector table fits the broadcast cap (into the
+    ~10M-vector range at dim 64).
     """
     base = (
         vectors.select(F.col(id_col), F.col(vec_col))
@@ -225,10 +208,9 @@ def cosine_dup_ids(
             F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("_nrm")
         )
     )
-    hint = F.broadcast if lookup == "broadcast" else (lambda d: d.hint("MERGE"))
     target = vectors.sparkSession.sparkContext.defaultParallelism
     pairs = cand.repartition(target, "_a_id").join(
-        hint(
+        F.broadcast(
             base.select(
                 F.col(id_col).alias("_a_id"),
                 F.col(vec_col).alias("_a_vec"),
@@ -237,7 +219,7 @@ def cosine_dup_ids(
         ),
         "_a_id",
     ).join(
-        hint(
+        F.broadcast(
             base.select(
                 F.col(id_col).alias("_b_id"),
                 F.col(vec_col).alias("_b_vec"),
@@ -301,7 +283,7 @@ def ivf_topk(
         )
     )
     scored = (
-        _spread(
+        spread_small_input(
             corpus.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("c_vec"),
@@ -445,8 +427,10 @@ def assign_cells(
         dist = -(_dot(F.col(vec_col), F.col("centroid")) / F.col("__cn"))
     else:
         dist = _l2sq(F.col(vec_col), F.col("centroid"))
-    scored = _spread(vectors).crossJoin(F.broadcast(centroids)).select(
-        "*", dist.alias("__d2")
+    scored = (
+        spread_small_input(vectors)
+        .crossJoin(F.broadcast(centroids))
+        .select("*", dist.alias("__d2"))
     )
     w = Window.partitionBy(id_col).orderBy(F.asc("__d2"), F.asc("cell_id"))
     return (
@@ -597,7 +581,6 @@ def exact_kmeans_centroids(
     vec_col: str = "embedding",
     scale: int = 6,
     sample_cap: int | None = None,
-    labeler: str | None = None,
 ) -> list[list[int]]:
     """Deterministic Lloyd k-means in exact BIGINT micro-unit
     arithmetic; returns the centroid micro-vectors as Python ints.
@@ -640,14 +623,10 @@ def exact_kmeans_centroids(
     Replaces iters+2 scan jobs with one — at bench scale the fit cost
     is per-job fixed overhead, not arithmetic.
 
-    ``labeler`` (distributed path only): None defers to the session
-    kernel default — under 'arrow' each iteration's assign step runs
-    cell_labels_frame on the cached micro-vector projection
-    (pre_quantized, bit-identical argmin/tie-break, r9: the interpreted
-    per-iteration argmin was the last expr hotspot in the 1M coreset
-    draw); 'expr' keeps the Catalyst argmin.
+    The distributed path's assign step runs cell_labels_frame on the
+    cached micro-vector projection (pre_quantized; the same argmin and
+    tie-break as ``_cell_ranks``, bit-identical).
     """
-    from .._kernels import resolve_kernel
     from .text_dedup import md5_hash32
 
     if sample_cap is not None:
@@ -664,13 +643,13 @@ def exact_kmeans_centroids(
         )
         return _local_lloyd([[int(x) for x in r["_v"]] for r in rows], n_cells, iters)
 
-    # _spread: a small corpus read from one parquet file would run every
-    # assign scan's interpreted-HOF distance math on a single core; at
-    # real scale the guard makes this a no-op. cache(): the projection
+    # spread: a small corpus read from one parquet file would run every
+    # assign scan's distance math on a single core; at real scale the
+    # guard makes this a no-op. cache(): the projection
     # is re-scanned iters+1 times; eviction under memory pressure just
     # recomputes — at 100 TB swap for a written-out quantized staging
     # table (same plan shape, storage-backed).
-    qv = _spread(
+    qv = spread_small_input(
         vectors.select(
             F.col(id_col).alias("_id"),
             micro_vec(F.col(vec_col), scale).alias("_v"),
@@ -685,20 +664,11 @@ def exact_kmeans_centroids(
         )
         cents = [[int(x) for x in r["_v"]] for r in init_rows]
         dims = len(cents[0])
-        use_arrow = resolve_kernel(labeler) == "arrow"
         for _ in range(iters):
-            if use_arrow:
-                assigned = cell_labels_frame(
-                    qv, cents, id_col="_id", vec_col="_v",
-                    passthrough=True, pre_quantized=True,
-                ).select(F.col("cluster_id").alias("_cell"), "_v")
-            else:
-                assigned = qv.select(
-                    F.element_at(_cell_ranks(F.col("_v"), cents), 1).alias(
-                        "_cell"
-                    ),
-                    "_v",
-                )
+            assigned = cell_labels_frame(
+                qv, cents, id_col="_id", vec_col="_v",
+                passthrough=True, pre_quantized=True,
+            ).select(F.col("cluster_id").alias("_cell"), "_v")
             agg = assigned.groupBy("_cell").agg(
                 F.count(F.lit(1)).alias("_n"),
                 *[
@@ -731,7 +701,6 @@ def ivf_kmeans_exact_topk(
     scale: int = 6,
     centroids: list[list[int]] | None = None,
     sample_cap: int | None = None,
-    labeler: str | None = None,
 ) -> DataFrame:
     """End-to-end IVF search on the exact-arithmetic quantizer: fit
     (exact_kmeans_centroids) -> label corpus (1 cell each, literal
@@ -748,39 +717,24 @@ def ivf_kmeans_exact_topk(
     reused for every search batch (same seam as semantic_dedup /
     cluster_balanced_sample).
     """
-    from .._kernels import resolve_kernel
-
     cents = centroids if centroids is not None else exact_kmeans_centroids(
-        corpus, n_cells, iters, id_col, vec_col, scale, sample_cap,
-        labeler=labeler,
+        corpus, n_cells, iters, id_col, vec_col, scale, sample_cap
     )
-    # _spread BEFORE the labeling projection (r8, PERF finding 26): the
-    # argmin over n_cells interpreted integer-L2 folds is this plan's
-    # CPU cost, and an Exchange does not commute with the Project that
-    # computes it — `_spread(labeled)` ran the folds on the scan's 1-2
-    # partitions and only spread the finished rows. No-op at real scale.
-    if resolve_kernel(labeler) == "arrow":
-        # join-free: the Arrow kernel labels and passes (id, vec)
-        # through losslessly; the norm is the SAME JVM expression on
-        # the same bit-identical values, computed above the kernel
-        labeled = cell_labels_frame(
-            _spread(corpus.select(id_col, vec_col)), cents,
-            id_col=id_col, vec_col=vec_col, scale=scale, passthrough=True,
-        ).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            _norm(F.col(vec_col)).alias("__nc"),
-            F.col("cluster_id").alias("c_cell"),
-        )
-    else:
-        labeled = _spread(corpus).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            _norm(F.col(vec_col)).alias("__nc"),
-            F.element_at(
-                _cell_ranks(micro_vec(F.col(vec_col), scale), cents), 1
-            ).alias("c_cell"),
-        )
+    # spread BEFORE labeling (r8, PERF finding 26): the argmin is this
+    # plan's per-row CPU cost, and an Exchange above the labeling stage
+    # would only spread the finished rows. No-op at real scale. The
+    # Arrow kernel labels and passes (id, vec) through losslessly
+    # (join-free); the norm is the same JVM expression on the same
+    # values, computed above the kernel.
+    labeled = cell_labels_frame(
+        spread_small_input(corpus.select(id_col, vec_col)), cents,
+        id_col=id_col, vec_col=vec_col, scale=scale, passthrough=True,
+    ).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        _norm(F.col(vec_col)).alias("__nc"),
+        F.col("cluster_id").alias("c_cell"),
+    )
     probes = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -827,8 +781,6 @@ def semantic_dedup_flags(
     scale: int = 6,
     centroids: list[list[int]] | None = None,
     sample_cap: int | None = None,
-    labeler: str | None = None,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) flags: cluster the
     corpus with the exact-integer k-means fit, then mark as redundant
@@ -861,39 +813,19 @@ def semantic_dedup_flags(
     once offline (exact_kmeans_centroids, or a hash-sample via
     sampled_centroids quantized through micro_vec), reuse per batch.
 
-    ``labeler``: None defers to the session kernel default
-    (``$SPARK_GRAFT_KERNEL``, 'arrow' since r9 — the bit-identical
-    Arrow labeling kernel with column passthrough, no label join);
-    'expr' forces the Python-free Catalyst argmin.
+    Labels come from the Arrow labeling kernel with column passthrough
+    (no label join). ``labeled`` feeds several consumers (pair mining,
+    the cosine lookups and the flag join) and is deliberately not
+    persisted: relabeling is cheaper than a cache build
+    (cluster_balanced_sample's r9 measurement).
     """
-    from .._kernels import resolve_kernel
-
     cents = centroids if centroids is not None else exact_kmeans_centroids(
-        vectors, n_cells, iters, id_col, vec_col, scale, sample_cap,
-        labeler=labeler,
+        vectors, n_cells, iters, id_col, vec_col, scale, sample_cap
     )
-    if resolve_kernel(labeler) == "arrow":
-        labeled = cell_labels_frame(
-            _spread(vectors), cents, id_col=id_col, vec_col=vec_col,
-            scale=scale, passthrough=True,
-        )
-    else:
-        labeled = vectors.withColumn(
-            "cluster_id",
-            F.element_at(
-                _cell_ranks(micro_vec(F.col(vec_col), scale), cents), 1
-            ),
-        )
-        # labeled feeds TWO consumers (pair mining + the final flag
-        # join). Persist ONLY under the expr kernel, where the
-        # interpreted argmin dominates and re-running it per consumer
-        # is the operator's whole cost; the arrow kernel relabels
-        # cheaper than a cache build (cluster_balanced_sample's r9
-        # measurement). Same persisted_out contract as
-        # incremental_minhash_dedup for long-running per-batch callers.
-        labeled = labeled.persist()
-        if persisted_out is not None:
-            persisted_out.append(labeled)
+    labeled = cell_labels_frame(
+        spread_small_input(vectors), cents, id_col=id_col, vec_col=vec_col,
+        scale=scale, passthrough=True,
+    )
     dup_ids = embedding_near_dup_ids(
         labeled, threshold, id_col, vec_col, block_col="cluster_id", scale=scale
     )
@@ -912,13 +844,12 @@ def semantic_dedup(
     scale: int = 6,
     centroids: list[list[int]] | None = None,
     sample_cap: int | None = None,
-    labeler: str | None = None,
 ) -> DataFrame:
     """SemDeDup survivors: the corpus minus semantically redundant
     vectors (see semantic_dedup_flags), with their cluster_id."""
     flags = semantic_dedup_flags(
         vectors, threshold, n_cells, iters, id_col, vec_col, scale, centroids,
-        sample_cap, labeler,
+        sample_cap,
     )
     return flags.where(~F.col("is_dup")).drop("is_dup")
 
@@ -963,7 +894,7 @@ def hard_negative_mining(
         )
     )
     scored = (
-        _spread(
+        spread_small_input(
             corpus.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("c_vec"),
@@ -993,93 +924,6 @@ def hard_negative_mining(
     return scored.withColumn(
         "rank", F.row_number().over(w).cast("int")
     ).where(F.col("rank") <= k)
-
-
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    scale: int = 6,
-) -> DataFrame:
-    """Arrow-vectorized twin of brute_force_topk: the per-pair cosine
-    runs as ONE numpy matrix product per Arrow batch inside
-    mapInPandas, instead of an interpreted dim-wide HOF fold per pair
-    — the brief's sanctioned Pandas-UDF seam for dense vector math
-    (measured ~8-20x on the scoring stage at 100k+ corpus rows; see
-    scale_check bitext/ann rows).
-
-    Two-phase top-k keeps the shuffle tiny: each partition emits only
-    its LOCAL top-k rows per query (k x n_queries rows per partition),
-    then one global window rank finalizes — the corpus never shuffles.
-
-    NOT oracle-exact by design: numpy's pairwise summation order
-    differs from the JVM fold's, so a cosine can differ in the last
-    ulp and flip a round-6 boundary or a rank tie. The JVM operator
-    (brute_force_topk) stays the driver-checked catalog entry; this is
-    its opt-in scale path, pinned by an equality-within-tolerance test.
-    """
-    import pandas as pd
-
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    ).collect()
-    if not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
-    import numpy as np
-
-    q_ids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    qm = np.array([r["q_vec"] for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-
-    out_schema = (
-        "query_id long, neighbor_id long, cos_sim double"
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cm = np.array(list(pdf["c_vec"]), dtype=np.float64)
-            cn = np.linalg.norm(cm, axis=1)
-            sims = (cm @ qm.T) / np.outer(cn, qn)  # (n_batch, n_queries)
-            np.round(sims, scale, out=sims)
-            # local top-k per query within this batch
-            take = min(k + 1, sims.shape[0])  # +1 absorbs a self-match
-            part = np.argpartition(-sims, take - 1, axis=0)[:take]
-            rows = {
-                "query_id": np.repeat(q_ids, take),
-                "neighbor_id": ids[part.T.ravel()],
-                "cos_sim": np.take_along_axis(
-                    sims, part, axis=0
-                ).T.ravel(),
-            }
-            yield pd.DataFrame(rows)
-
-    scored = (
-        _spread(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-            )
-        )
-        .mapInPandas(score, out_schema)
-        .where(F.col("neighbor_id").isNotNull())
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1118,8 +962,9 @@ def srp_signature(
     vec: Column, mat: list[list[int]], scale: int = 6
 ) -> Column:
     """array<float> -> array<int> of sign bits (1 if the exact integer
-    dot with the hyperplane is >= 0). One literal matrix node + one
-    indexed transform (the _cell_ranks lesson: never bits x dims
+    dot with the hyperplane is >= 0) — the expression reference that
+    tests pin srp_signature_frame against. One literal matrix node +
+    one indexed transform (the _cell_ranks lesson: never bits x dims
     separate F.lit leaves)."""
     mv = micro_vec(vec, scale)
     m = F.lit([[int(s) for s in row] for row in mat])
@@ -1147,16 +992,17 @@ def srp_signature_frame(
     scale: int = 6,
 ) -> DataFrame:
     """(vid, bits) via ONE Arrow-batched numpy int64 matmul per batch —
-    the opt-in scale path for srp_signature, and unlike the float
-    Pandas-UDF twins elsewhere it is provably BIT-IDENTICAL to the
-    expression fold (test-pinned): the micro snap replicates Spark
-    round-HALF-UP exactly (sign * floor(|d| + 0.5) on the same IEEE
-    double product d = float64(x) * 10^scale, exact below 2^52), and
-    the hyperplane dots are integer matmul — no float aggregation
-    anywhere, so there is no summation-order or ulp concern. Use when
-    signatures dominate (interpreted HOF folds re-evaluate the free
-    micro-vec per hyperplane row — finding 22's class — and cost ~2
-    orders of magnitude more per element than vectorized int64 BLAS).
+    the runtime path of srp_lsh_pairs, with srp_signature as its
+    reference. Unlike the float Pandas-UDF twins elsewhere it is
+    provably BIT-IDENTICAL to that expression fold (test-pinned): the
+    micro snap replicates Spark round-HALF-UP exactly (sign *
+    floor(|d| + 0.5) on the same IEEE double product d = float64(x) *
+    10^scale, exact below 2^52), and the hyperplane dots are integer
+    matmul — no float aggregation anywhere, so there is no
+    summation-order or ulp concern. The interpreted fold re-evaluates
+    the free micro-vec per hyperplane row (finding 22's class) and
+    costs ~2 orders of magnitude more per element than vectorized
+    int64 BLAS.
     """
     import numpy as np
     import pandas as pd
@@ -1359,9 +1205,6 @@ def srp_lsh_pairs(
     vec_col: str = "embedding",
     scale: int = 6,
     seed: str = "srp",
-    stage: bool = True,
-    lookup: str = "broadcast",
-    signature: str | None = None,
 ) -> DataFrame:
     """Cosine near-pair mining via banded SRP-LSH + exact verify.
 
@@ -1379,19 +1222,12 @@ def srp_lsh_pairs(
     threshold verifies every candidate: false positives cost time, not
     correctness; recall is the banding guarantee above.
 
-    ``stage=True`` (default) materializes the band rows ONCE through a
-    parquet stage before the self-join: Spark re-executes a
-    non-cached subplan per consumer, and the signature fold (an
-    interpreted HOF dot product per hyperplane — the most expensive
-    expression in this module) feeds TWO consumers via the a/b
-    self-join. Same seam as setsim's staged postings (PERF finding 22),
-    same magnitude. The stage holds 3 ints per (vector, band) — the
-    smallest relation in the pipeline, never the embeddings. Stage
-    location + cleanup lifecycle live in ``_stage.stage_parquet``:
-    per-process tempdir with atexit removal in local mode, and a
-    REQUIRED ``spark.hse_etl.stageDir`` shared-filesystem path on a
-    multi-node cluster (a driver-local path would silently drop
-    executor-written files — the helper raises instead).
+    The band rows feed both sides of the self-join through ONE
+    repartition, so the signature kernel runs once: the second side
+    reuses the first side's exchange. Staging the band rows through
+    parquet instead measured slower on 4 CPUs (sf0.1 entry 1.79 s vs
+    1.67 s median over 6 alternating reps; 200k vectors at 128 bits
+    46.3 s vs 40.9 s over 4; identical pairs).
 
     Sizing ``bits``/``bands`` is the whole cost model: random-pair
     candidate rate is ~bands/2^(bits/bands), so at corpus scale you buy
@@ -1400,39 +1236,26 @@ def srp_lsh_pairs(
     BETTER 0.95-cosine recall,
     0.988 vs 0.985 — signature cost is linear in rows and trivially
     parallel, verify cost is per-candidate and is what explodes).
-    ``lookup`` follows cosine_dup_ids: "broadcast" hash-maps the
-    (id, vec, norm) table to every task (right into the ~10M-vector
-    range at dim 64); at true 100 TB corpus scale pass "merge" for
-    co-partitioned sort-merge lookups. ``signature``: None defers to
-    the session kernel default ($SPARK_GRAFT_KERNEL, 'arrow' since r9)
-    — srp_signature_frame's Arrow/numpy int64 matmul is bit-identical
-    to the interpreted expression fold (test-pinned), at ~2 orders of
-    magnitude less per-element cost; 'expr' forces the Python-free
-    plan.
+    Signatures come from srp_signature_frame, the Arrow int64 matmul
+    that is bit-identical to srp_signature (test-pinned). The verify
+    lookup follows cosine_dup_ids: the (id, vec, norm) table is
+    broadcast to every task (right into the ~10M-vector range at
+    dim 64).
 
     Output: (vec_id_a, vec_id_b, cos_sim 6dp) for verified pairs.
     """
-    from .._kernels import resolve_kernel
-
     if bits % bands != 0:
         raise ValueError("bits must divide evenly into bands")
-    signature = resolve_kernel(signature)
     rpb = bits // bands
     mat = srp_sign_matrix(bits, _vec_dims(vectors, vec_col), seed)
-    # _spread before the signature fold (PERF finding 2): a small
+    # spread before the signature kernel (PERF finding 2): a small
     # single-file corpus arrives in 1-2 partitions, and the per-row
-    # signature work (interpreted folds or Arrow batches alike) is the
-    # CPU cost of this operator — without the spread it runs on 1-2
-    # cores. No-op at real scale.
-    if signature == "arrow":
-        sig = srp_signature_frame(
-            _spread(vectors), mat, id_col=id_col, vec_col=vec_col, scale=scale
-        )
-    else:
-        sig = _spread(vectors).select(
-            F.col(id_col).alias("vid"),
-            srp_signature(F.col(vec_col), mat, scale).alias("bits"),
-        )
+    # signature work is the CPU cost of this operator — without the
+    # spread it runs on 1-2 cores. No-op at real scale.
+    sig = srp_signature_frame(
+        spread_small_input(vectors), mat, id_col=id_col, vec_col=vec_col,
+        scale=scale,
+    )
     band_rows = sig.select(
         "vid",
         F.explode(
@@ -1453,10 +1276,6 @@ def srp_lsh_pairs(
             )
         ).alias("bk"),
     ).select("vid", "bk.band_id", "bk.band_key")
-    if stage:
-        from .._stage import stage_parquet
-
-        band_rows = stage_parquet(band_rows, prefix="hse_srp_")
     # explicit width for the within-bucket pair fanout (r12; the
     # basket/embedding-cells precedent): band rows are ~24 bytes so the
     # self-join input arrives in a handful of tasks, but its per-row
@@ -1489,12 +1308,11 @@ def srp_lsh_pairs(
     base = vectors.select(
         F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("_nrm")
     )
-    hint = F.broadcast if lookup == "broadcast" else (lambda d: d.hint("MERGE"))
     target = vectors.sparkSession.sparkContext.defaultParallelism
     return (
         cand.repartition(target, "vec_id_a")
         .join(
-            hint(
+            F.broadcast(
                 base.select(
                     F.col(id_col).alias("vec_id_a"),
                     F.col(vec_col).alias("_ea"),
@@ -1504,7 +1322,7 @@ def srp_lsh_pairs(
             "vec_id_a",
         )
         .join(
-            hint(
+            F.broadcast(
                 base.select(
                     F.col(id_col).alias("vec_id_b"),
                     F.col(vec_col).alias("_eb"),
@@ -1527,10 +1345,17 @@ def srp_lsh_pairs(
 
 
 def _vec_dims(df: DataFrame, vec_col: str) -> int:
-    """Vector width from one row (embeddings are fixed-width by
+    """Vector width from one non-NULL row (embeddings are fixed-width by
     contract; a metadata-only probe would need a schema annotation
-    parquet does not carry)."""
-    row = df.select(F.size(vec_col).alias("d")).first()
-    if row is None or row["d"] is None:
-        raise ValueError(f"cannot infer dims of {vec_col!r}: empty input")
+    parquet does not carry). NULL rows are skipped: without ANSI mode
+    ``size(NULL)`` is -1, not a width."""
+    row = (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.size(vec_col).alias("d"))
+        .first()
+    )
+    if row is None:
+        raise ValueError(
+            f"cannot infer dims of {vec_col!r}: no non-NULL vector"
+        )
     return int(row["d"])

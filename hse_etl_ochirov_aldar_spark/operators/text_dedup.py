@@ -42,17 +42,6 @@ def exact_dedup(
 _LONG_MAX = (1 << 63) - 1
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the default parallelism, only when
-    the input is small. Signature folds are per-row CPU work; a corpus
-    read from one small parquet file is one partition, which serializes
-    the whole computation on a single core (measured 6.4x slower at
-    sf0.1). At real scale this is a no-op — the guard (a Catalyst
-    plan-stats probe, operators/_plan.py, no RDD conversion) avoids
-    collapsing a large scan into defaultParallelism partitions."""
-    return spread_small_input(df)
-
-
 def _minhash_fold(shingles, num_hashes: int):
     """The MinHash signature of a shingle-string array column.
 
@@ -97,7 +86,7 @@ def _shingle_sets(
     (``_band_keys``) and the exact-Jaccard verify
     (``_verify_jaccard``) read; spread first, since shingling is the
     per-row CPU term."""
-    return _spread(df).select(
+    return spread_small_input(df).select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), shingle_n).alias("sh"),
     )
@@ -299,8 +288,8 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame
     """
     # ids appearing ONLY as self-pairs (id_a == id_b) carry no edge and
     # would otherwise vanish at the a != b filter; they re-enter at the
-    # end as their own rep so both algorithm paths honor the same
-    # every-input-id-gets-a-rep contract (minlabel keeps them naturally).
+    # end as their own rep, honoring the every-input-id-gets-a-rep
+    # contract of the union-find path.
     selfers = (
         pairs.where(F.col("id_a") == F.col("id_b"))
         .select(F.col("id_a").alias("id"))
@@ -422,37 +411,20 @@ def connected_components_min(
     pairs: DataFrame,
     max_iter: int = 25,
     collect_threshold: int = _COLLECT_THRESHOLD,
-    algorithm: str = "star",
 ) -> DataFrame:
     """(id, rep) for every id in the pair graph: ``rep`` is the minimum
-    id of the node's connected component.
+    id of the node's connected component, so a dup chain A~B~C with A~C
+    never compared still collapses onto A.
 
-    Iterative min-label propagation to fixpoint — each round every node
-    takes the min of its own label and its neighbors' labels, so a dup
-    chain A~B~C with A~C never compared still collapses onto A.
-    Iterative graph algorithms are the one place this engine uses a
-    driver-controlled loop: each round is one shuffle join + partial-
-    aggregated groupBy over the PAIR graph (near-dup pairs, orders of
-    magnitude smaller than the corpus), localCheckpoint'ed to keep the
-    plan from growing with rounds. Rounds needed = component diameter
-    (near-dup clusters are shallow in practice); the large-star/
-    small-star formulation (Kiveris et al., MapReduce CC) is the drop-in
-    upgrade if 100 TB corpora ever produce deep chains.
-
-    Small graphs (<= ``collect_threshold`` undirected pairs) skip the
-    loop entirely: one bounded collect (``_collect_at_most``) brings
-    the pair list to a driver union-find, replacing 2-3 rounds x
-    (shuffle join + checkpoint + convergence count) of fixed per-job
-    overhead; larger graphs take the distributed path. Set
-    ``collect_threshold=0`` to force the distributed path.
-
-    ``algorithm`` picks the distributed path: ``"star"`` (default) is
-    the large-star/small-star contraction (connected_components_star)
-    whose rounds are O(log^2 n) independent of component diameter — the
-    100 TB-safe choice; ``"minlabel"`` is min-label propagation to
-    fixpoint, one shuffle per round but rounds = component diameter —
-    cheaper per round on the shallow clusters near-dedup usually
-    produces.
+    Small graphs (<= ``collect_threshold`` undirected pairs) take one
+    bounded collect (``_collect_at_most``) to a driver union-find,
+    replacing several rounds of fixed per-job overhead. Larger graphs
+    take the large-star/small-star contraction
+    (connected_components_star, Kiveris et al.), whose rounds are
+    O(log^2 n) independent of component diameter — deep dup chains
+    cannot blow up the round count. Set ``collect_threshold=0`` to
+    force the distributed path; the star loop gets ``2 * max_iter``
+    rounds.
     """
     und = pairs.select("id_a", "id_b").distinct()
     rows = _collect_at_most(und, collect_threshold)
@@ -462,63 +434,10 @@ def connected_components_min(
             list(_union_find(rows).items()), f"id {id_type}, rep {id_type}"
         )
     und = und.persist()
-    if algorithm == "star":
-        try:
-            return connected_components_star(und, max_iter=max_iter * 2)
-        finally:
-            und.unpersist()
-    edges = und.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(und.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    # initial labels: min(self, direct neighbors) — two cheap ops off
-    # the checkpointed pair list; not checkpointed itself (round-1's
-    # join consumes it once, and plan growth only starts at round 1)
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("nmin"))
-        .select(
-            F.col("src").alias("id"),
-            F.least(F.col("src"), F.col("nmin")).alias("rep"),
-        )
-    )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(
-                labels.select(F.col("id").alias("dst"), F.col("rep").alias("nrep")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nrep").alias("nmin"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
-            .select(
-                "id",
-                "rep",
-                F.least(F.col("rep"), F.coalesce(F.col("nmin"), F.col("rep"))).alias(
-                    "new_rep"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = updated.where(F.col("new_rep") < F.col("rep")).count()
-        labels = updated.select("id", F.col("new_rep").alias("rep"))
-        if changed == 0:
-            converged = True
-            break
-    und.unpersist()  # labels are checkpointed; the pair cache is done
-    if not converged:
-        # non-fixpoint labels map one component onto multiple reps —
-        # downstream dedup would silently under-merge. Same honest-
-        # failure contract as the star path and kcore_members.
-        raise RuntimeError(
-            f"connected_components_min(algorithm='minlabel') did not "
-            f"converge within {max_iter} rounds; labels were still "
-            f"changing. Raise max_iter (rounds needed = component "
-            f"diameter) or use algorithm='star' (O(log^2 n) rounds)."
-        )
-    return labels
+    try:
+        return connected_components_star(und, max_iter=max_iter * 2)
+    finally:
+        und.unpersist()
 
 
 def minhash_dedup(
@@ -662,7 +581,7 @@ def simhash_near_pairs(
     Charikar rotation scheme); hamming distance computed via
     bit_count(xor). Shuffle key is the prefix — no cross join.
     """
-    s = simhash(_spread(df), text_col, bits, token_hash).select(
+    s = simhash(spread_small_input(df), text_col, bits, token_hash).select(
         F.col(id_col).alias("id"),
         F.col("simhash"),
         F.shiftright(F.col("simhash"), bits - prefix_bits).alias("bucket"),
@@ -744,12 +663,12 @@ def segment_boilerplate_removal(
     """
     segs = text_segments(text_col, chunk_words, delimiter)
     joiner = " " if chunk_words is not None else "\n"
-    # _spread BEFORE computing the segment arrays: the segmentation
+    # spread BEFORE computing the segment arrays: the segmentation
     # transform is the per-row CPU term, and both the census and the
     # rebuild branch re-evaluate it — on the scan's single partition it
     # serializes one core twice (r12; the duplicate_span_stats fix,
     # same shape). No-op at real scale.
-    base = _spread(df).withColumn("__segs", segs).withColumn(
+    base = spread_small_input(df).withColumn("__segs", segs).withColumn(
         "__n0", F.size("__segs")
     )
     pos = base.select(
@@ -854,7 +773,7 @@ def remove_duplicate_spans(
     boilerplate doc degrades to O(n^2) array ops on one row, bounded
     by doc length).
     """
-    docs = _spread(docs)  # span hashing + rebuild are per-row CPU work
+    docs = spread_small_input(docs)  # span hashing + rebuild are per-row CPU work
     toks = whitespace_tokens(F.col(text_col))
     n = F.size(toks)
     k = span_tokens
@@ -958,7 +877,7 @@ def incremental_minhash_dedup(
     # 1-2 partitions and the whole within-batch stage serializes on one
     # core (the spread probe cannot fire there: persist substitutes an
     # InMemoryRelation leaf it refuses to trust). r12 fix.
-    new_batch = _spread(new_batch)
+    new_batch = spread_small_input(new_batch)
     # the batch's shingle sets feed its signatures, the cross-corpus
     # verify AND both sides of the within-batch verify below — persist
     # them once instead of re-shingling the batch per consumer
@@ -1003,7 +922,7 @@ def incremental_minhash_dedup(
     # broadcast semi-join preserves the spread partitioning, so the
     # shingle transform still runs spread.
     csh = (
-        _spread(corpus.select(id_col, text_col))
+        spread_small_input(corpus.select(id_col, text_col))
         .join(F.broadcast(matched), id_col, "left_semi")
         .select(
             F.col(id_col).alias("id_b"),
@@ -1085,7 +1004,7 @@ def duplicate_span_stats(
     # sf0.1, ~3x on the whole entry). Spreading the scan puts the
     # exchange BELOW the Generate; at real scale both forms no-op.
     spans = (
-        _spread(docs.select(id_col, text_col))
+        spread_small_input(docs.select(id_col, text_col))
         .select(
             F.col(id_col),
             F.explode(word_shingles(F.col(text_col), span_tokens)).alias(

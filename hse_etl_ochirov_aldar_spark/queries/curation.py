@@ -1247,8 +1247,8 @@ def q_copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics on relational data: connected components of the
     part co-purchase graph (parts are adjacent when they appear in the
     same order) — the text_dedup clustering engine
-    (connected_components_min: distributed min-label propagation with
-    the size-gated driver union-find) exposed as a first-class catalog
+    (connected_components_min: star contraction with the size-gated
+    driver union-find) exposed as a first-class catalog
     operator. Per-component census keyed by the minimum member.
 
     Plan: the edge list is a self-join of the part-filtered lineitem

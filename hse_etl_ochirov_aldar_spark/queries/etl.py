@@ -1360,12 +1360,12 @@ def q_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric). Fully SQL-expressible, so this one carries a value oracle."""
     from ..functions.text import word_shingles
 
-    from ..operators.text_dedup import _spread
+    from ..operators._plan import spread_small_input
 
     # spread the corpus BEFORE the shingle expression: below the
     # spread's exchange the array transform would run on the scan's
     # single partition (r12 serialized-Generate fix)
-    corpus = _spread(_docs_with_near_dups(spark, sf_dir))
+    corpus = spread_small_input(_docs_with_near_dups(spark, sf_dir))
     sh = corpus.select(
         F.col("doc_id").alias("id"), word_shingles(F.col("text")).alias("sh")
     )

@@ -167,42 +167,23 @@ def main() -> None:
                 "embedding"
             ),
         )
-        out = {}
-        pair_sets = {}
-        for sig in ("expr", "arrow"):
-            pairs = srp_lsh_pairs(
-                base.unionByName(copies),
-                threshold=0.95,
-                bits=128,
-                bands=8,
-                signature=sig,
-            )
-            t0 = time.perf_counter()
-            pair_sets[sig] = {
-                (r["vec_id_a"], r["vec_id_b"])
-                for r in pairs.select("vec_id_a", "vec_id_b").collect()
-            }
-            out[sig] = {
-                "pairs": len(pair_sets[sig]),
-                "planted_found": sum(
-                    1 for a, b in pair_sets[sig] if b == a + 1_000_000
-                ),
-                "seconds": round(time.perf_counter() - t0, 2),
-            }
-        # bit-identical signatures -> identical verified pair SETS, not
-        # just equal counts (r8: hard identity, same as the composed check)
-        out["identical_output"] = pair_sets["expr"] == pair_sets["arrow"]
-        return out
+        pairs = srp_lsh_pairs(
+            base.unionByName(copies), threshold=0.95, bits=128, bands=8
+        )
+        found = {
+            (r["vec_id_a"], r["vec_id_b"])
+            for r in pairs.select("vec_id_a", "vec_id_b").collect()
+        }
+        return {
+            "pairs": len(found),
+            "planted_found": sum(1 for a, b in found if b == a + 1_000_000),
+        }
 
-    # 4c) COMPOSED Arrow scale path (r7 verdict task #3): the two
-    #    bit-identical int64 seams working together in one
-    #    catalog-adjacent pipeline — cluster-balanced coreset draw
-    #    (labeler seam, finding 25) feeding SRP-LSH near-pair mining
-    #    over the drawn coreset (signature seam, finding 24). Both
-    #    all-expr and all-arrow runs; because every seam is exact
-    #    integer math the drawn IDs and the verified pairs must be
-    #    IDENTICAL, so "identical_output" is a hard check, not a
-    #    tolerance. 100 planted scaled copies ride the draw via id
+    # 4c) COMPOSED Arrow kernels: the two int64 kernels working
+    #    together in one catalog-adjacent pipeline — cluster-balanced
+    #    coreset draw (labeling kernel, finding 25) feeding SRP-LSH
+    #    near-pair mining over the drawn coreset (signature kernel,
+    #    finding 24). 100 planted scaled copies ride the draw via id
     #    pinning below.
     def coreset_then_srp_200k():
         from hse_etl_ochirov_aldar_spark.operators.sampling import (
@@ -221,42 +202,28 @@ def main() -> None:
                 ).cast("float"),
             ).alias("embedding"),
         )
-        out = {}
-        pair_sets = {}
-        for mode in ("expr", "arrow"):
-            t0 = time.perf_counter()
-            coreset = cluster_balanced_sample(
-                base, total=50_000, n_cells=64, iters=2, labeler=mode
-            ).select("vec_id", "embedding")
-            # plant scaled copies of the 100 LOWEST-id drawn vectors
-            # (cosine 1.0); ordered pick — a bare limit() is
-            # plan-dependent and would break the cross-mode identity
-            copies = coreset.orderBy("vec_id").limit(100).select(
-                (F.col("vec_id") + 1_000_000).alias("vec_id"),
-                F.transform(
-                    "embedding", lambda x: (x * F.lit(1.5)).cast("float")
-                ).alias("embedding"),
-            )
-            pairs = srp_lsh_pairs(
-                coreset.unionByName(copies),
-                threshold=0.95,
-                bits=128,
-                bands=8,
-                signature=mode,
-            )
-            pair_sets[mode] = {
-                (r["vec_id_a"], r["vec_id_b"])
-                for r in pairs.select("vec_id_a", "vec_id_b").collect()
-            }
-            out[mode] = {
-                "pairs": len(pair_sets[mode]),
-                "planted_found": sum(
-                    1 for a, b in pair_sets[mode] if b == a + 1_000_000
-                ),
-                "seconds": round(time.perf_counter() - t0, 2),
-            }
-        out["identical_output"] = pair_sets["expr"] == pair_sets["arrow"]
-        return out
+        coreset = cluster_balanced_sample(
+            base, total=50_000, n_cells=64, iters=2
+        ).select("vec_id", "embedding")
+        # plant scaled copies of the 100 LOWEST-id drawn vectors
+        # (cosine 1.0); ordered pick — a bare limit() is plan-dependent
+        copies = coreset.orderBy("vec_id").limit(100).select(
+            (F.col("vec_id") + 1_000_000).alias("vec_id"),
+            F.transform(
+                "embedding", lambda x: (x * F.lit(1.5)).cast("float")
+            ).alias("embedding"),
+        )
+        pairs = srp_lsh_pairs(
+            coreset.unionByName(copies), threshold=0.95, bits=128, bands=8
+        )
+        found = {
+            (r["vec_id_a"], r["vec_id_b"])
+            for r in pairs.select("vec_id_a", "vec_id_b").collect()
+        }
+        return {
+            "pairs": len(found),
+            "planted_found": sum(1 for a, b in found if b == a + 1_000_000),
+        }
 
     # 5) as-of join: 5M probes against 500k versioned build rows
     def asof_5m():
@@ -714,11 +681,7 @@ def main() -> None:
         return int(sum(r["n_tokens"] for r in out))
 
     # cluster-balanced draw over 200k x 16-dim vectors, 64 cells:
-    # integer Lloyd fit + row-local argmin labels + one quota window.
-    # Both labelers run (expr = driver-checked default, arrow = the
-    # finding-25 int64-matmul twin) and the drawn ID sets must be
-    # IDENTICAL — bit-identity means the sample, not just the scores,
-    # is invariant under the scale path.
+    # integer Lloyd fit + Arrow int64 argmin labels + one quota window.
     def cluster_balanced_200k():
         from hse_etl_ochirov_aldar_spark.operators.sampling import (
             cluster_balanced_sample,
@@ -733,26 +696,11 @@ def main() -> None:
                 ).cast("float"),
             ).alias("embedding"),
         )
-        out = {}
-        ids = {}
-        for lab in ("expr", "arrow"):
-            t0 = time.perf_counter()
-            s = cluster_balanced_sample(
-                vecs, total=10_000, n_cells=64, iters=2, labeler=lab
-            )
-            ids[lab] = {r["vec_id"] for r in s.select("vec_id").collect()}
-            out[lab] = {
-                "rows": len(ids[lab]),
-                "seconds": round(time.perf_counter() - t0, 2),
-            }
-        out["identical_draw"] = ids["expr"] == ids["arrow"]
-        return out
+        s = cluster_balanced_sample(vecs, total=10_000, n_cells=64, iters=2)
+        return s.select("vec_id").distinct().count()
 
-    # cluster-balanced draw at 1M vectors (10x the 200k row): the
-    # 100x-scale-up evidence for the labeler seam — labeling is the
-    # per-row cost, so expr should scale ~linearly in rows while the
-    # arrow path's BLAS labeling stays far below it; the drawn IDs
-    # must still be identical.
+    # cluster-balanced draw at 1M vectors (5x the 200k row): labeling
+    # is the per-row cost, carried by the Arrow kernel's BLAS argmin.
     def cluster_balanced_1m():
         from hse_etl_ochirov_aldar_spark.operators.sampling import (
             cluster_balanced_sample,
@@ -767,20 +715,8 @@ def main() -> None:
                 ).cast("float"),
             ).alias("embedding"),
         )
-        out = {}
-        ids = {}
-        for lab in ("expr", "arrow"):
-            t0 = time.perf_counter()
-            s = cluster_balanced_sample(
-                vecs, total=20_000, n_cells=64, iters=2, labeler=lab
-            )
-            ids[lab] = {r["vec_id"] for r in s.select("vec_id").collect()}
-            out[lab] = {
-                "rows": len(ids[lab]),
-                "seconds": round(time.perf_counter() - t0, 2),
-            }
-        out["identical_draw"] = ids["expr"] == ids["arrow"]
-        return out
+        s = cluster_balanced_sample(vecs, total=20_000, n_cells=64, iters=2)
+        return s.select("vec_id").distinct().count()
 
     # Q21 EXISTS/NOT-EXISTS rewrite at 10M lineitems / 1.5M orders:
     # one orderkey shuffle + window over the aggregated relation
@@ -966,33 +902,6 @@ def main() -> None:
             .count()
         )
 
-    # JVM fold vs Arrow/numpy matrix product on the SAME brute-force
-    # top-k (200k x 500 queries = 100M pairs): the sanctioned
-    # Pandas-UDF seam for dense vector math, measured r4 at 8.7x
-    # (70s -> 8s). The JVM form stays the oracle-exact catalog entry.
-    def ann_arrow_vs_jvm_200k():
-        from hse_etl_ochirov_aldar_spark.operators.similarity import (
-            brute_force_topk_arrow,
-        )
-
-        def vecs(n, salt):
-            comp = F.transform(
-                F.sequence(F.lit(1), F.lit(64)),
-                lambda i: (
-                    F.pmod(F.xxhash64(F.col("id"), i, F.lit(salt)), 2000)
-                    / 1000.0
-                    - 1.0
-                ),
-            )
-            return spark.range(n).select(
-                F.col("id").alias("vec_id"), comp.alias("embedding")
-            )
-
-        corpus = vecs(200_000, 1)
-        qs = vecs(500, 2).select(F.col("vec_id").alias("query_id"), "embedding")
-        return brute_force_topk_arrow(corpus, qs, k=5).count()
-
-    timed("ann_arrow_200k_x_500q", ann_arrow_vs_jvm_200k)
     # blocked bitext mining at 100k x 20k vectors: cell-blocked
     # candidates (~n_probe/n_cells of the 2e9 pair space) through the
     # exact-integer margin pipeline — the CCMatrix-style corpus path

@@ -168,33 +168,6 @@ def test_connected_components_min_fixpoint(spark):
         for r in connected_components_min(pairs, collect_threshold=0).collect()
     }
     assert dist == want
-    # explicit minlabel path must agree too
-    ml = {
-        (r.id, r.rep)
-        for r in connected_components_min(
-            pairs, collect_threshold=0, algorithm="minlabel"
-        ).collect()
-    }
-    assert ml == want
-
-
-def test_minlabel_raises_instead_of_returning_nonfixpoint(spark):
-    """minlabel with too few rounds for the component diameter must
-    RAISE, never silently return labels that map one component onto
-    several reps (the under-merge a downstream dedup cannot detect)."""
-    import pytest
-
-    from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
-        connected_components_min,
-    )
-
-    # a 7-node path needs more than one min-propagation round
-    chain = [(i, i + 1) for i in range(10, 16)]
-    pairs = spark.createDataFrame(chain, ["id_a", "id_b"])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_min(
-            pairs, max_iter=1, collect_threshold=0, algorithm="minlabel"
-        )
 
 
 def test_connected_components_star_matches_union_find(spark):
@@ -252,7 +225,7 @@ def test_connected_components_star_deep_chain_few_rounds(spark):
 
 
 def test_connected_components_star_self_pairs_and_nonconvergence(spark):
-    """Contract parity with the minlabel/union-find paths: ids present
+    """Contract parity with the union-find path: ids present
     ONLY as self-pairs still get a rep=id row, and an exhausted
     max_iter raises instead of silently returning a non-contracted
     edge set (which could map one id to multiple reps)."""
@@ -725,33 +698,6 @@ def test_pagerank_exact_matches_python_reference(spark):
 
     with _pytest.raises(ValueError, match="damping_pct"):
         pagerank_exact(pairs, damping_pct=101)
-
-
-def test_brute_force_arrow_matches_jvm_scorer(spark, sf_dir):
-    """The Arrow scorer must agree with the JVM fold on every (query,
-    neighbor) pair up to rank ties at equal rounded cosine: compare
-    the (query, cos_sim) multisets (rank-tie-safe) and require >= 90%
-    of the id pairs identical."""
-    from pyspark.sql import functions as F
-
-    from hse_etl_ochirov_aldar_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_arrow,
-    )
-    from hse_etl_ochirov_aldar_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    jvm = brute_force_topk(emb, qs, k=5)
-    arrow = brute_force_topk_arrow(emb, qs, k=5)
-    jvm_scores = sorted((r.query_id, r.cos_sim) for r in jvm.collect())
-    arrow_scores = sorted((r.query_id, r.cos_sim) for r in arrow.collect())
-    assert jvm_scores == arrow_scores
-    jvm_ids = {(r.query_id, r.neighbor_id) for r in jvm.collect()}
-    arrow_ids = {(r.query_id, r.neighbor_id) for r in arrow.collect()}
-    assert len(jvm_ids & arrow_ids) >= int(0.9 * len(jvm_ids))
 
 
 def test_sample_cap_fit_identical_when_corpus_covered(spark, sf_dir):

@@ -1,40 +1,12 @@
-"""The session kernel knob (_kernels.py, r9 verdict task #1): proven
-bit-identical Arrow kernels are the DEFAULT, $SPARK_GRAFT_KERNEL=expr
-forces the Python-free expression plans, and operator arguments win
-over the env."""
+"""The Arrow kernels (cell_labels_frame, srp_signature_frame) are the
+only runtime path of the labeling and SRP hot loops; the expression
+folds (_cell_ranks, srp_signature) stay as their bit-identity
+references. These tests pin kernel == reference, at the kernel and at
+the operators built on it."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from hse_etl_ochirov_aldar_spark._kernels import (
-    KERNEL_ENV,
-    default_kernel,
-    resolve_kernel,
-)
-
-
-def test_default_is_arrow(monkeypatch):
-    monkeypatch.delenv(KERNEL_ENV, raising=False)
-    assert default_kernel() == "arrow"
-    assert resolve_kernel(None) == "arrow"
-
-
-def test_env_forces_expr(monkeypatch):
-    monkeypatch.setenv(KERNEL_ENV, "expr")
-    assert resolve_kernel(None) == "expr"
-    # explicit argument still wins over the env
-    assert resolve_kernel("arrow") == "arrow"
-
-
-def test_invalid_values_raise(monkeypatch):
-    monkeypatch.setenv(KERNEL_ENV, "cuda")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_KERNEL"):
-        default_kernel()
-    monkeypatch.delenv(KERNEL_ENV, raising=False)
-    with pytest.raises(ValueError, match="kernel must be"):
-        resolve_kernel("nope")
 
 
 def _vectors(spark, n=200, dims=8):
@@ -49,78 +21,77 @@ def _vectors(spark, n=200, dims=8):
     )
 
 
-def test_env_expr_removes_python_stages(spark, monkeypatch):
-    """SPARK_GRAFT_KERNEL=expr is the one-line driver-parity switch:
-    the same operator call produces a plan with zero Arrow stages."""
-    from hse_etl_ochirov_aldar_spark.operators.similarity import (
-        semantic_dedup_flags,
-    )
-
-    df = _vectors(spark)
-    monkeypatch.setenv(KERNEL_ENV, "expr")
-    plan_expr = (
-        semantic_dedup_flags(df, n_cells=4, iters=1)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    monkeypatch.delenv(KERNEL_ENV, raising=False)
-    plan_arrow = (
-        semantic_dedup_flags(df, n_cells=4, iters=1)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInPandas" not in plan_expr
-    assert "ArrowEvalPython" not in plan_expr
-    assert "MapInPandas" in plan_arrow
-
-
 def test_semantic_dedup_identical_across_kernels(spark):
+    """semantic_dedup_flags labels through the Arrow kernel; its
+    cluster ids and dup flags must equal those of the _cell_ranks
+    expression kernel over the same fitted centroids."""
     from hse_etl_ochirov_aldar_spark.operators.similarity import (
+        _cell_ranks,
+        embedding_near_dup_ids,
+        exact_kmeans_centroids,
+        micro_vec,
         semantic_dedup_flags,
     )
 
     df = _vectors(spark, n=300)
-    key = ["vec_id", "cluster_id", "is_dup"]
-    a = sorted(
-        tuple(r[k] for k in key)
-        for r in semantic_dedup_flags(
-            df, n_cells=4, iters=2, labeler="expr"
-        ).collect()
+    got = sorted(
+        (r["vec_id"], r["cluster_id"], r["is_dup"])
+        for r in semantic_dedup_flags(df, n_cells=4, iters=2).collect()
     )
-    b = sorted(
-        tuple(r[k] for k in key)
-        for r in semantic_dedup_flags(
-            df, n_cells=4, iters=2, labeler="arrow"
-        ).collect()
+    cents = exact_kmeans_centroids(df, n_cells=4, iters=2)
+    ref = df.withColumn(
+        "cluster_id",
+        F.element_at(_cell_ranks(micro_vec(F.col("embedding")), cents), 1),
     )
-    assert a == b and len(a) == 300
+    dups = {
+        r["vec_id"]
+        for r in embedding_near_dup_ids(
+            ref, 0.45, block_col="cluster_id"
+        ).collect()
+    }
+    want = sorted(
+        (r["vec_id"], r["cluster_id"], r["vec_id"] in dups)
+        for r in ref.collect()
+    )
+    assert got == want and len(got) == 300
 
 
 def test_ivf_kmeans_exact_topk_identical_across_kernels(spark):
+    """ivf_kmeans_exact_topk labels the corpus through the Arrow
+    kernel; its top-k must equal ivf_topk over corpus labels and query
+    probes both taken from the _cell_ranks expression kernel."""
     from hse_etl_ochirov_aldar_spark.operators.similarity import (
+        _cell_ranks,
+        exact_kmeans_centroids,
         ivf_kmeans_exact_topk,
+        ivf_topk,
+        micro_vec,
     )
 
     corpus = _vectors(spark, n=300)
     queries = _vectors(spark, n=5).withColumnRenamed("vec_id", "query_id")
+    cents = exact_kmeans_centroids(corpus, n_cells=4, iters=1)
+    ranks = _cell_ranks(micro_vec(F.col("embedding")), cents)
+    want_df = ivf_topk(
+        corpus.withColumn("label", F.element_at(ranks, 1)),
+        queries.withColumn("label", F.explode(F.slice(ranks, 1, 2))),
+        k=3,
+    )
     key = ["query_id", "neighbor_id", "cos_sim", "rank"]
-    a = sorted(
+    want = sorted(tuple(r[k] for k in key) for r in want_df.collect())
+    got = sorted(
         tuple(r[k] for k in key)
         for r in ivf_kmeans_exact_topk(
-            corpus, queries, k=3, n_cells=4, iters=1, labeler="expr"
+            corpus, queries, k=3, n_cells=4, n_probe=2, iters=1
         ).collect()
     )
-    b = sorted(
-        tuple(r[k] for k in key)
-        for r in ivf_kmeans_exact_topk(
-            corpus, queries, k=3, n_cells=4, iters=1, labeler="arrow"
-        ).collect()
-    )
-    assert a == b and len(a) == 15
+    assert got == want and len(got) == 15
 
 
-def test_minhash_family_auto_default_is_expr(spark, monkeypatch):
+def test_minhash_family_auto_default_is_expr(spark):
     """MinHash banding has one kernel family, the expression fold (it
     beat the Arrow twin once shingling went linear), so its plan is
-    Python-free whether or not $SPARK_GRAFT_KERNEL is set."""
+    Python-free."""
     from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
         banded_minhash_keys,
     )
@@ -130,49 +101,29 @@ def test_minhash_family_auto_default_is_expr(spark, monkeypatch):
         F.concat(F.lit("alpha beta gamma delta epsilon zeta "),
                  F.col("id").cast("string")).alias("text"),
     )
-    for env in (None, "arrow"):
-        if env is None:
-            monkeypatch.delenv(KERNEL_ENV, raising=False)
-        else:
-            monkeypatch.setenv(KERNEL_ENV, env)
-        plan = (
-            banded_minhash_keys(docs)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "MapInPandas" not in plan
-
-
-def test_resolve_kernel_auto_param():
-    import os
-
-    os.environ.pop(KERNEL_ENV, None)
-    assert resolve_kernel(None, auto="expr") == "expr"
-    assert resolve_kernel(None, auto="arrow") == "arrow"
-    assert resolve_kernel("arrow", auto="expr") == "arrow"
-    with pytest.raises(ValueError, match="auto must be"):
-        resolve_kernel(None, auto="nope")
+    plan = (
+        banded_minhash_keys(docs)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "MapInPandas" not in plan
 
 
 def test_kmeans_fit_identical_across_kernels(spark):
-    """The distributed Lloyd assign step under the arrow kernel
-    (pre_quantized cell_labels_frame) must produce bit-identical
-    centroids to the Catalyst argmin at every iteration count."""
+    """The distributed Lloyd fit (assign step = pre_quantized
+    cell_labels_frame) must produce bit-identical centroids to the
+    driver-local numpy Lloyd (_local_lloyd, reached through a
+    sample_cap covering the corpus) at every iteration count."""
     from hse_etl_ochirov_aldar_spark.operators.similarity import (
         exact_kmeans_centroids,
     )
 
     df = _vectors(spark, n=400, dims=6)
     for iters in (1, 3):
-        a = exact_kmeans_centroids(
-            df, n_cells=5, iters=iters, labeler="expr"
-        )
+        a = exact_kmeans_centroids(df, n_cells=5, iters=iters)
         b = exact_kmeans_centroids(
-            df, n_cells=5, iters=iters, labeler="arrow"
+            df, n_cells=5, iters=iters, sample_cap=400
         )
         assert a == b
-    # and the unset default resolves to the same result
-    c = exact_kmeans_centroids(df, n_cells=5, iters=3)
-    assert c == a
 
 
 def test_pre_quantized_labels_match_snapped(spark):

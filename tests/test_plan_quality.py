@@ -605,16 +605,70 @@ def test_hhi_and_order_histogram_map_side_combined(spark, sf_dir):
         assert "CartesianProduct" not in plan, name
 
 
-def test_srp_verify_is_broadcast_with_staged_bands(spark, sf_dir):
-    """srp_lsh_near_pairs (r7 rework, PERF finding 23): the band rows
-    are staged through parquet (so the plan reads the stage, executing
-    the signature subplan once — the embeddings parquet appears only in
-    the verify lookups), the lookup sides broadcast, and no cartesian
-    product anywhere."""
-    plan = _plan(spark, sf_dir, "srp_lsh_near_pairs")
-    assert plan.count("hse_srp_") >= 2  # both self-join sides read the stage
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+def test_srp_verify_is_broadcast_and_bands_signed_once(spark, sf_dir):
+    """srp_lsh_near_pairs (PERF finding 23): both self-join sides read
+    ONE band-row exchange, so the executed plan runs the signature
+    kernel once; the verify lookups broadcast, and no cartesian product
+    anywhere."""
+    df = QUERIES["srp_lsh_near_pairs"](spark, sf_dir)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1
+    assert "ReusedExchange" in final
+    assert "BroadcastHashJoin" in final
+    assert "CartesianProduct" not in final
+
+
+def test_vector_hot_loops_use_one_kernel_stage(spark):
+    """Quantizer labeling and SRP signing each have one kernel, the
+    Arrow one: every MapInPandas node in the optimized plan is the
+    same labeling/signing node. Consumers that re-read the labeled
+    corpus repeat that node, and a self-join re-aliases it, so exprIds
+    are stripped before comparing."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from hse_etl_ochirov_aldar_spark.operators.sampling import (
+        cluster_balanced_sample,
+    )
+    from hse_etl_ochirov_aldar_spark.operators.similarity import (
+        ivf_kmeans_exact_topk,
+        semantic_dedup_flags,
+        srp_lsh_pairs,
+    )
+
+    vecs = spark.range(200).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(8)),
+            lambda i: (
+                (F.pmod(F.xxhash64(F.col("id"), i), 1001) - 500) / 500.0
+            ).cast("float"),
+        ).alias("embedding"),
+    )
+    queries = vecs.where(F.col("vec_id") < 3).withColumnRenamed(
+        "vec_id", "query_id"
+    )
+    frames = {
+        "ivf_kmeans_exact_topk": ivf_kmeans_exact_topk(
+            vecs, queries, k=3, n_cells=4, iters=1
+        ),
+        "semantic_dedup_flags": semantic_dedup_flags(vecs, n_cells=4, iters=1),
+        "cluster_balanced_sample": cluster_balanced_sample(
+            vecs, total=40, n_cells=4, iters=1
+        ),
+        "srp_lsh_pairs": srp_lsh_pairs(vecs, threshold=0.9),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        nodes = {
+            re.sub(r"#\d+L?", "", line[line.index("MapInPandas"):])
+            for line in plan.splitlines()
+            if "MapInPandas" in line
+        }
+        assert len(nodes) == 1, (name, nodes)
 
 
 def test_word_shingles_tokenizes_once(spark):

@@ -339,25 +339,20 @@ def test_srp_arrow_signature_bit_identical_to_expression(spark):
     assert arrow == expr
 
 
-def test_srp_pairs_arrow_path_matches_expr_path(spark):
-    from pyspark.sql import functions as F
-
-    df = _mk_vectors(spark, n=40)
-    dup = df.where(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform("embedding", lambda x: (x * F.lit(2.0)).cast("float")).alias(
-            "embedding"
-        ),
-    )
-    corpus = df.unionByName(dup)
-    a = sorted(
-        tuple(r) for r in srp_lsh_pairs(corpus, threshold=0.9).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in srp_lsh_pairs(corpus, threshold=0.9, signature="arrow").collect()
-    )
-    assert a == b and len(a) >= 5
+def test_srp_pairs_leading_null_vector(spark):
+    """A NULL vector in the first row must not set the signature width
+    (without ANSI mode size(NULL) is -1, which built empty hyperplanes
+    and crashed the kernel); the pair among the non-NULL rows is still
+    found and the NULL row pairs with nothing."""
+    df = spark.createDataFrame(
+        [(1, None), (2, [0.5, 0.25, -0.5]), (3, [1.0, 0.5, -1.0])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    pairs = [
+        (r["vec_id_a"], r["vec_id_b"])
+        for r in srp_lsh_pairs(df, threshold=0.95, bits=8, bands=4).collect()
+    ]
+    assert pairs == [(2, 3)]
 
 
 def test_cell_labels_arrow_bit_identical_to_expression(spark):
@@ -404,11 +399,17 @@ def test_cell_labels_arrow_bit_identical_to_expression(spark):
     assert arrow == expr
 
 
-def test_cluster_balanced_sample_arrow_labeler_same_draw(spark):
+def test_cluster_balanced_sample_draw_matches_expression_reference(spark):
     from pyspark.sql import functions as F
 
     from hse_etl_ochirov_aldar_spark.operators.sampling import (
         cluster_balanced_sample,
+        temperature_mixture_sample,
+    )
+    from hse_etl_ochirov_aldar_spark.operators.similarity import (
+        _cell_ranks,
+        exact_kmeans_centroids,
+        micro_vec,
     )
 
     df = spark.range(300).select(
@@ -422,29 +423,25 @@ def test_cluster_balanced_sample_arrow_labeler_same_draw(spark):
     )
     a = sorted(
         r["vec_id"]
-        for r in cluster_balanced_sample(
-            df, total=60, n_cells=4, labeler="expr"
-        ).collect()
+        for r in cluster_balanced_sample(df, total=60, n_cells=4).collect()
+    )
+    # the same draw over labels from the _cell_ranks expression reference
+    cents = exact_kmeans_centroids(df, n_cells=4, iters=3)
+    ref = df.withColumn(
+        "cluster_id",
+        F.element_at(_cell_ranks(micro_vec(F.col("embedding")), cents), 1),
     )
     b = sorted(
         r["vec_id"]
-        for r in cluster_balanced_sample(
-            df, total=60, n_cells=4, labeler="arrow"
+        for r in temperature_mixture_sample(
+            ref, "cluster_id", "vec_id", 60
         ).collect()
     )
     assert a == b and len(a) > 0
-    # default (None) resolves to the session kernel (arrow since r9)
-    # and must reproduce the same draw
-    c = sorted(
-        r["vec_id"]
-        for r in cluster_balanced_sample(df, total=60, n_cells=4).collect()
-    )
-    assert c == a
-    # the r9 arrow path labels with column passthrough — labeled rows
-    # come straight out of the Arrow stage, no label join back onto
-    # the corpus (the old arrow path's scale blemish)
+    # labels come with column passthrough — labeled rows come straight
+    # out of the Arrow stage, no label join back onto the corpus
     plan = cluster_balanced_sample(
-        df, total=60, n_cells=4, labeler="arrow"
+        df, total=60, n_cells=4
     )._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan

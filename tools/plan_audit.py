@@ -38,8 +38,9 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
-# Arrow seams with documented twins (operators/_kernels.py consumers,
-# multimodal decode, EWMA per-key fold, Misra-Gries partial).
+# Arrow seams with documented expression references (the
+# cell_labels_frame / srp_signature_frame consumers, multimodal decode,
+# EWMA per-key fold, Misra-Gries partial).
 ARROW_ALLOWED = {
     "ann_ivf_kmeans_topk",
     "cluster_balanced_sample",
