@@ -163,21 +163,18 @@ def mart_user_activity(clean: DataFrame) -> DataFrame:
     # back; this halves those stages while computing identical modes
     # (per-kind counts are disjoint, so ranking within kind is
     # unchanged). Pivot back to columns via the max-of-one-row trick.
+    # concat is NULL if any input is, so a NULL array tags as empty: a
+    # session without pages still counts its actions, and vice versa.
+    def tag(col: str, kind: str) -> F.Column:
+        return F.transform(
+            F.coalesce(F.col(col), F.array()),
+            lambda v: F.struct(F.lit(kind).alias("kind"), v.alias("value")),
+        )
+
     tagged = monthly.select(
         "user_id",
         "report_month",
-        F.explode(
-            F.concat(
-                F.transform(
-                    "pages_visited",
-                    lambda p: F.struct(F.lit("page").alias("kind"), p.alias("value")),
-                ),
-                F.transform(
-                    "actions",
-                    lambda a: F.struct(F.lit("act").alias("kind"), a.alias("value")),
-                ),
-            )
-        ).alias("kv"),
+        F.explode(F.concat(tag("pages_visited", "page"), tag("actions", "act"))).alias("kv"),
     ).select("user_id", "report_month", "kv.kind", "kv.value")
     counted = tagged.groupBy("user_id", "report_month", "kind", "value").agg(
         F.count(F.lit(1)).alias("cnt")

@@ -139,3 +139,44 @@ def test_replicate_recommendations_and_moderation(spark):
     assert len(mrows) == 300
     assert all(0 <= len(r.flags) <= 2 for r in mrows)
     assert all(r.submitted_at is not None for r in mrows)
+
+
+def test_mart_user_activity_null_arrays_match_duckdb(spark, tmp_path):
+    """A session whose pages_visited is NULL still counts its actions in
+    top_action, and one whose actions is NULL still counts its pages in
+    top_page: the reference unnests each array on its own. Checked
+    against the benchmark's DuckDB mart over the same export."""
+    import json
+
+    import duckdb
+
+    from hse_etl_ochirov_aldar_spark.sources.connectors import read_mongo_export
+    from perfbench.workloads import compare_rows
+    from perfbench.workloads.medallion import _MARTS, SESSIONS
+
+    land = tmp_path / "landing"
+    (land / "user_sessions").mkdir(parents=True)
+
+    def session(sid, day, pages, actions):
+        return {
+            "session_id": sid, "user_id": "u1",
+            "start_time": f"2024-01-{day:02d}T10:00:00Z",
+            "end_time": f"2024-01-{day:02d}T10:30:00Z",
+            "pages_visited": pages, "device": "mobile", "actions": actions,
+        }
+
+    rows = [
+        session("s1", 5, None, ["buy", "buy"]),
+        session("s2", 6, ["home"], ["view"]),
+        session("s3", 7, ["cart", "cart"], None),
+    ]
+    (land / "user_sessions" / "part-0.json").write_text(
+        "".join(json.dumps(r) + "\n" for r in rows)
+    )
+    raw = read_mongo_export(spark, str(land / "user_sessions"), SESSIONS)
+    cols, oracle = _MARTS["user_activity"]
+    mart = mart_user_activity(sessions_clean(replicate_sessions(raw)))
+    got = [tuple(r) for r in mart.select(*cols.split(", ")).collect()]
+    want = duckdb.sql(oracle.replace("{L}", str(land))).fetchall()
+    assert compare_rows(got, want) is None, compare_rows(got, want)
+    assert [(r.top_page, r.top_action) for r in mart.collect()] == [("cart", "buy")]
