@@ -11,15 +11,16 @@ semantics (multimodal decode plumbing).
 Layout
 ------
 - ``session``   : tuned SparkSession builder (local test / cluster profiles)
-- ``sources``   : readers (parquet tables, CSV/JSON/XML payloads), sinks
-                  (overwrite / partitioned / keep-newest upsert), datagen
+- ``sources``   : readers (parquet tables, CSV/JSON/XML payloads, Mongo
+                  exports), sinks (overwrite / partitioned / keep-newest
+                  upsert)
 - ``functions`` : scalar expression library (multi-format timestamp parse,
                   decimal-comma normalization, text analysis, similarity)
 - ``operators`` : relational operators (percentile trim, dedup families,
                   mode-by-group, top-k, explode-normalize, incremental)
 - ``plans``     : layered raw->clean->mart pipeline runner + quality gates
 - ``streaming`` : Structured Streaming analogue of the reference's @daily
-                  batch aggregation
+                  batch aggregation, sessionization, EWMA anomaly scores
 - ``queries``   : the concrete query catalog wired to the driver testdata
 """
 

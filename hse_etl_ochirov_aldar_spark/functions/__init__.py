@@ -4,7 +4,6 @@ from .cleaning import (
     epoch_diff_hours,
     epoch_diff_minutes,
     month_of,
-    normalized_eq,
     safe_array_size,
 )
 from .url import canonicalize_url, registrable_domain, url_host
@@ -12,8 +11,6 @@ from .text import (
     bpe_token_count,
     char_fingerprint,
     predicted_lang,
-    punct_ratio,
-    stopword_ratio,
     token_count,
     word_shingles,
 )
@@ -27,13 +24,10 @@ __all__ = [
     "epoch_diff_hours",
     "epoch_diff_minutes",
     "month_of",
-    "normalized_eq",
     "safe_array_size",
     "bpe_token_count",
     "char_fingerprint",
     "predicted_lang",
-    "punct_ratio",
-    "stopword_ratio",
     "token_count",
     "word_shingles",
 ]

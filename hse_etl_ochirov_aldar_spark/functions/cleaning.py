@@ -35,12 +35,6 @@ def decimal_comma_to_double(col: Column | str) -> Column:
     return F.nullif(F.regexp_replace(F.trim(c), ",", "."), F.lit("")).cast("double")
 
 
-def normalized_eq(col: Column | str, value: str) -> Column:
-    """P2/F3: ``lower(trim(x)) = 'value'`` (HW-3/...:58)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lower(F.trim(c)) == value.lower()
-
-
 def month_of(col: Column | str) -> Column:
     """F4: ``DATE_TRUNC('month', d)::date`` (build_analytical_marts.py:32)."""
     c = F.col(col) if isinstance(col, str) else col

@@ -71,25 +71,11 @@ def bpe_token_count(col: Column | str) -> Column:
     return F.size(bpe_ish_tokens(col))
 
 
-def punct_ratio(col: Column | str) -> Column:
-    """Fraction of non-alphanumeric, non-space characters."""
-    c = F.col(col) if isinstance(col, str) else col
-    total = F.length(c)
-    punct = F.length(F.regexp_replace(c, r"[A-Za-z0-9\s]", ""))
-    return F.when(total > 0, punct / total).otherwise(F.lit(0.0))
-
-
 def stopword_count(col: Column | str, stopwords: list[str]) -> Column:
     """Number of tokens that are stopwords (with multiplicity)."""
     toks = whitespace_tokens(col)
     sw = F.array(*[F.lit(w) for w in stopwords])
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-
-
-def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or STOPWORDS["en"]
-    n = token_count(col)
-    return F.when(n > 0, stopword_count(col, sw) / n).otherwise(F.lit(0.0))
 
 
 def predicted_lang_from_tokens(lowered_tokens: Column) -> Column:
@@ -206,9 +192,8 @@ def _gopher_counters(col: Column | str) -> Column:
 
 def _gopher_ratios(cnt: Column) -> Column:
     """Ratio struct (mwl, symr, alphar, bulletr, ellipsisr, dupliner)
-    over a counters struct — cheap row-local arithmetic; identical
-    values to the pre-split gopher_signals (same integer counts, same
-    divisions), so oracle compatibility is unchanged."""
+    over a counters struct — cheap row-local arithmetic; integer counts
+    and plain divisions, so the DuckDB oracles recompute it exactly."""
     ts, ls = cnt["ts"], cnt["ls"]
     n, ln = ts["n"], ls["n"]
     return F.struct(
@@ -221,24 +206,6 @@ def _gopher_ratios(cnt: Column) -> Column:
             ln > 0, (ln - cnt["dist"]) / ln
         ).otherwise(F.lit(0.0)).alias("dupliner"),
     )
-
-
-def gopher_signals(col: Column | str) -> Column:
-    """ALL Gopher quality signals as one struct column: (mwl, symr,
-    alphar, bulletr, ellipsisr, dupliner).
-
-    The single-signal functions above each tokenize the text, and
-    CollapseProject inlines every reference into a recomputation (no
-    CSE for interpreted higher-order functions — PERF.md finding 5), so
-    a 6-signal filter re-splits each document ~6x. This form does ONE
-    tokenization + ONE fold carrying integer counters (and one
-    line-split + fold + array_distinct). As a bare COLUMN each
-    extracted field still re-inlines its own slice of the folds —
-    prefer the DataFrame-level ``with_gopher_signals``, which
-    materializes the counter folds exactly once per row behind a
-    Generate barrier.
-    """
-    return _gopher_ratios(_gopher_counters(col))
 
 
 # ---------------------------------------------------------------------------
@@ -315,7 +282,7 @@ def char_fingerprint(col: Column | str, modulus: int = 1_000_000_007) -> Column:
 def with_gopher_signals(df, text_col: str = "text", out_col: str = "gsig"):
     """``df`` plus ONE materialized struct column of all Gopher signals.
 
-    A bare ``gopher_signals()`` column referenced k times is re-inlined
+    A bare ratio-struct column referenced k times is re-inlined
     k times once projections collapse (no CSE for interpreted lambdas —
     PERF finding 1/5), so a 6-field screen pays the tokenization fold
     up to 6x. This routes the RAW COUNTER struct (_gopher_counters —

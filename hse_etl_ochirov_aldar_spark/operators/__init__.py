@@ -1,5 +1,5 @@
 from .aggregates import conditional_count, daily_avg, mode_by_group
-from .bitext import margin_bitext_mine, margin_bitext_mine_blocked
+from .bitext import margin_bitext_mine
 from .dedup import dedup_keep_first
 from .funnel import funnel_report, funnel_steps
 from .scd import scd2_history
@@ -37,7 +37,6 @@ from .sampling import (
 from .similarity import (
     brute_force_topk,
     cosine,
-    embedding_near_dedup,
     embedding_near_dup_ids,
     ivf_topk,
 )
@@ -49,7 +48,6 @@ from .text_dedup import (
     minhash_dedup,
     minhash_dedup_keep_best,
     minhash_lsh_candidates,
-    minhash_signatures,
     ngram_jaccard_pairs,
     remove_duplicate_spans,
     segment_boilerplate_removal,
@@ -67,7 +65,6 @@ __all__ = [
     "decayed_counts",
     "conditional_count",
     "margin_bitext_mine",
-    "margin_bitext_mine_blocked",
     "cap_per_domain",
     "dedup_canonical_url",
     "daily_avg",
@@ -101,7 +98,6 @@ __all__ = [
     "training_shuffle",
     "brute_force_topk",
     "cosine",
-    "embedding_near_dedup",
     "embedding_near_dup_ids",
     "ivf_topk",
     "salted_join",
@@ -111,7 +107,6 @@ __all__ = [
     "minhash_dedup",
     "minhash_dedup_keep_best",
     "minhash_lsh_candidates",
-    "minhash_signatures",
     "ngram_jaccard_pairs",
     "remove_duplicate_spans",
     "segment_boilerplate_removal",

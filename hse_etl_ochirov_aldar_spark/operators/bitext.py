@@ -123,56 +123,3 @@ def _margin_pairs(scored: DataFrame, k: int, margin_bp: int) -> DataFrame:
         .select("a_id", "b_id", "cos6u", "margin_bp")
         .orderBy("a_id")
     )
-
-
-def margin_bitext_mine_blocked(
-    side_a: DataFrame,
-    side_b: DataFrame,
-    k: int = 4,
-    margin_bp: int = 10500,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The corpus-scale miner: candidates come from a cosine quantizer
-    instead of the full cross product — side B is labeled with its one
-    nearest cell, side A probes its ``n_probe`` nearest cells, and only
-    same-cell pairs are scored (~n_probe/n_cells of the pair space, the
-    CCMatrix approximation). Ranks, k-NN averages, and margins are then
-    computed over the CANDIDATE set by the identical exact-integer
-    pipeline as :func:`margin_bitext_mine`.
-
-    Recall is data-dependent (raise ``n_probe`` to trade cost back for
-    recall; the pytest suite asserts recall against the exact miner on
-    clustered data). Not oracle-checked in the catalog — the exact
-    miner is the driver-visible entry; this is its scale path, the same
-    split as ivf_kmeans_topk vs brute_force_topk.
-    """
-    from .similarity import assign_cells, sampled_centroids
-
-    if k <= 0:
-        raise ValueError("k must be positive")
-    cents = sampled_centroids(
-        side_b.select(F.col(id_col), F.col(vec_col)), n_cells, id_col, vec_col
-    )
-    b_lab = assign_cells(
-        side_b.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec")),
-        cents, 1, "b_id", "b_vec", metric="cosine",
-    ).withColumn("__nb", _norm(F.col("b_vec")))
-    a_lab = assign_cells(
-        side_a.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec")),
-        cents, n_probe, "a_id", "a_vec", metric="cosine",
-    ).withColumn("__na", _norm(F.col("a_vec")))
-    cos6u = F.round(
-        _dot(F.col("a_vec"), F.col("b_vec"))
-        / (F.col("__na") * F.col("__nb"))
-        * F.lit(1e6),
-        0,
-    ).cast("long")
-    scored = (
-        a_lab.join(b_lab, "cell_id")
-        .select("a_id", "b_id", cos6u.alias("cos6u"))
-        .distinct()  # an (a, b) pair can meet in several probed cells
-    )
-    return _margin_pairs(scored, k, margin_bp)

@@ -1,5 +1,5 @@
 """Within-document n-gram repetition signals (the Gopher repetition
-screens that need a census, completing functions/text.gopher_signals'
+screens that need a census, completing functions/text.with_gopher_signals'
 row-local ratios).
 
 ``top_ngram_coverage``: fraction of a document's word n-grams taken by

@@ -776,7 +776,7 @@ def cluster_balanced_sample(
 
     ``centroids`` (micro-unit int vectors) skips the in-line fit —
     the production shape for repeated draws over one corpus, mirroring
-    semantic_dedup(centroids=): fit once offline with
+    semantic_dedup_flags(centroids=): fit once offline with
     exact_kmeans_centroids, reuse per draw. Without it every call pays
     ``iters`` extra full scans, which at 100 TB dwarfs the draw itself.
 
@@ -794,8 +794,7 @@ def cluster_balanced_sample(
         vectors, n_cells, iters, id_col, vec_col, scale
     )
     labeled = cell_labels_frame(
-        spread_small_input(vectors), cents, id_col=id_col, vec_col=vec_col,
-        scale=scale, passthrough=True,
+        spread_small_input(vectors), cents, vec_col=vec_col, scale=scale
     )
     return temperature_mixture_sample(labeled, "cluster_id", id_col, total)
 

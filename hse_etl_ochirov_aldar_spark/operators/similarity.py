@@ -242,19 +242,6 @@ def cosine_dup_ids(
     )
 
 
-def embedding_near_dedup(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = None,
-) -> DataFrame:
-    """Drop embedding-cosine near-duplicates, keeping the lowest id of
-    each duplicate group (left-anti join against the dup-id set)."""
-    dups = embedding_near_dup_ids(vectors, threshold, id_col, vec_col, block_col)
-    return vectors.join(dups, on=id_col, how="left_anti")
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -317,46 +304,6 @@ def ivf_topk(
 # --- IVF with a real k-means coarse quantizer ------------------------------
 
 
-def kmeans_centroids(
-    vectors: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 8,
-    init_mode: str = "k-means||",
-) -> DataFrame:
-    """Fit the IVF coarse quantizer (pyspark.ml KMeans, fixed seed) and
-    return its centroids as a tiny (cell_id, centroid) DataFrame.
-
-    The centroid table is the entire 'index' — broadcastable state,
-    O(n_cells * dim). At 100 TB the fit runs on a sample
-    (`vectors.sample(...)`), which is standard IVF practice; assignment
-    (below) stays a full-data DataFrame op either way.
-
-    ``max_iter``/``init_mode`` trade quantizer quality for fit cost: a
-    BLOCKING quantizer (near-dup candidate generation, where multi-probe
-    covers boundary error) is fine with ``random`` init and 1-2 Lloyd
-    rounds — measured 4x cheaper than the k-means|| default, which each
-    init step spends whole Spark jobs on (reserve the default for
-    search-quality cells, ann_ivf_kmeans_topk).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = vectors.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("__fv")
-    )
-    model = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter, initMode=init_mode,
-        featuresCol="__fv",
-    ).fit(feats)
-    spark = vectors.sparkSession
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return spark.createDataFrame(rows, "cell_id INT, centroid ARRAY<DOUBLE>")
-
-
 def sampled_centroids(
     vectors: DataFrame,
     n_cells: int = 16,
@@ -372,7 +319,7 @@ def sampled_centroids(
     efficiency, never correctness: cosine assignment is scale-invariant
     for ANY centroid set, so near-identical vectors co-locate
     regardless, and multi-probe covers boundary error. Spend Lloyd
-    iterations (kmeans_centroids) when cells gate search recall
+    iterations (exact_kmeans_centroids) when cells gate search recall
     (ann_ivf_kmeans_topk), not here. No ML fit, no iterations: one
     top-n_cells collect of the sample."""
     rows = (
@@ -438,57 +385,6 @@ def assign_cells(
         .where(F.col("__pr") <= n_probe)
         .drop("centroid", "__cn", "__d2", "__pr")
     )
-
-
-def ivf_kmeans_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-) -> DataFrame:
-    """End-to-end IVF search: fit quantizer -> label corpus (1 cell
-    each) -> multi-probe queries (n_probe cells each) -> score only
-    probed cells -> exact top-k within candidates.
-
-    Cost vs brute force: ~n_probe/n_cells of the corpus is scored per
-    query. Recall is data-dependent (asserted against the brute-force
-    baseline in tests); raise n_probe to trade cost back for recall.
-    """
-    cents = kmeans_centroids(corpus, n_cells, vec_col, seed)
-    labeled = assign_cells(corpus, cents, 1, id_col, vec_col).withColumnRenamed(
-        "cell_id", "c_cell"
-    )
-    probes = assign_cells(queries, cents, n_probe, query_id_col, vec_col)
-    q = F.broadcast(
-        probes.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.col("cell_id").alias("q_cell"),
-        )
-    )
-    scored = (
-        labeled.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            "c_cell",
-        )
-        .join(q, F.col("c_cell") == F.col("q_cell"))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos_sim"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 # --- exact-arithmetic IVF (deterministic, oracle-comparable) ----------------
@@ -585,7 +481,7 @@ def exact_kmeans_centroids(
     """Deterministic Lloyd k-means in exact BIGINT micro-unit
     arithmetic; returns the centroid micro-vectors as Python ints.
 
-    Why not pyspark.ml KMeans (kmeans_centroids above): its float
+    Why not pyspark.ml KMeans: its float
     partial sums combine in shuffle-fetch order, so centroids — and
     boundary assignments — can flip between runs, which is why the
     round-1/2 catalog entry was rows-only. Here every step is
@@ -666,8 +562,7 @@ def exact_kmeans_centroids(
         dims = len(cents[0])
         for _ in range(iters):
             assigned = cell_labels_frame(
-                qv, cents, id_col="_id", vec_col="_v",
-                passthrough=True, pre_quantized=True,
+                qv, cents, vec_col="_v", pre_quantized=True
             ).select(F.col("cluster_id").alias("_cell"), "_v")
             agg = assigned.groupBy("_cell").agg(
                 F.count(F.lit(1)).alias("_n"),
@@ -707,14 +602,14 @@ def ivf_kmeans_exact_topk(
     centroid argmin — no join) -> multi-probe queries (n_probe cells)
     -> exact cosine top-k within probed cells.
 
-    Fully deterministic, so unlike ivf_kmeans_topk it carries a DuckDB
-    oracle (ORACLE_ANN_IVF_KMEANS) that re-derives the same centroids,
+    Fully deterministic, so unlike a pyspark.ml KMeans fit it carries
+    a DuckDB oracle (ORACLE_ANN_IVF_KMEANS) that re-derives the same centroids,
     labels, probes, and ranking. Search cost is the same
     ~n_probe/n_cells corpus fraction per query.
 
     ``centroids`` (micro-unit int vectors) skips the in-line fit — the
     production IVF shape: the coarse quantizer is fit once offline and
-    reused for every search batch (same seam as semantic_dedup /
+    reused for every search batch (same seam as semantic_dedup_flags /
     cluster_balanced_sample).
     """
     cents = centroids if centroids is not None else exact_kmeans_centroids(
@@ -728,7 +623,7 @@ def ivf_kmeans_exact_topk(
     # values, computed above the kernel.
     labeled = cell_labels_frame(
         spread_small_input(corpus.select(id_col, vec_col)), cents,
-        id_col=id_col, vec_col=vec_col, scale=scale, passthrough=True,
+        vec_col=vec_col, scale=scale,
     ).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
@@ -823,8 +718,7 @@ def semantic_dedup_flags(
         vectors, n_cells, iters, id_col, vec_col, scale, sample_cap
     )
     labeled = cell_labels_frame(
-        spread_small_input(vectors), cents, id_col=id_col, vec_col=vec_col,
-        scale=scale, passthrough=True,
+        spread_small_input(vectors), cents, vec_col=vec_col, scale=scale
     )
     dup_ids = embedding_near_dup_ids(
         labeled, threshold, id_col, vec_col, block_col="cluster_id", scale=scale
@@ -832,26 +726,6 @@ def semantic_dedup_flags(
     return labeled.join(
         dup_ids.withColumn("is_dup", F.lit(True)), id_col, "left"
     ).withColumn("is_dup", F.coalesce(F.col("is_dup"), F.lit(False)))
-
-
-def semantic_dedup(
-    vectors: DataFrame,
-    threshold: float = 0.45,
-    n_cells: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 6,
-    centroids: list[list[int]] | None = None,
-    sample_cap: int | None = None,
-) -> DataFrame:
-    """SemDeDup survivors: the corpus minus semantically redundant
-    vectors (see semantic_dedup_flags), with their cluster_id."""
-    flags = semantic_dedup_flags(
-        vectors, threshold, n_cells, iters, id_col, vec_col, scale, centroids,
-        sample_cap,
-    )
-    return flags.where(~F.col("is_dup")).drop("is_dup")
 
 
 def hard_negative_mining(
@@ -1061,14 +935,12 @@ def srp_signature_frame(
 def cell_labels_frame(
     vectors: DataFrame,
     cents: list[list[int]],
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 6,
-    passthrough: bool = False,
     pre_quantized: bool = False,
 ) -> DataFrame:
-    """(vid, cluster_id) nearest-centroid labels via ONE Arrow batch of
-    int64 matrix arithmetic — the exact twin of
+    """``vectors`` plus ``cluster_id``, its nearest-centroid label, via
+    ONE Arrow batch of int64 matrix arithmetic — the exact twin of
     ``element_at(_cell_ranks(micro_vec(v)), 1)`` (test-pinned equal):
     micro snap replicates Spark round-HALF-UP on the same IEEE double
     product; squared L2 expands to vv - 2 v.c + cc in int64 (bounds:
@@ -1079,13 +951,12 @@ def cell_labels_frame(
     Labeling is the per-row cost that dominates quantizer consumers at
     corpus scale (IVF corpus labels, SemDeDup cells, D4 coreset draw).
 
-    ``passthrough=True`` carries EVERY input column through the Arrow
-    stage unchanged and appends ``cluster_id`` — the join-free shape
-    (r9): consumers that need labeled full rows (SemDeDup flags, the
-    coreset draw, IVF corpus labeling) would otherwise pay a shuffle
-    join of labels back onto the corpus. Arrow round-trips values
-    losslessly (IEEE floats bit-preserved), so passthrough keeps the
-    bit-identity guarantee.
+    Every input column passes through the Arrow stage unchanged — the
+    join-free shape (r9): consumers that need labeled full rows
+    (SemDeDup flags, the coreset draw, IVF corpus labeling) would
+    otherwise pay a shuffle join of labels back onto the corpus. Arrow
+    round-trips values losslessly (IEEE floats bit-preserved), so the
+    passthrough keeps the bit-identity guarantee.
 
     ``pre_quantized=True`` treats ``vec_col`` as ALREADY-micro int64
     arrays and skips the snap — the exact_kmeans_centroids Lloyd loop
@@ -1094,6 +965,7 @@ def cell_labels_frame(
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
     c = np.asarray(cents, dtype=np.int64)  # cells x dims
     cc = np.einsum("ij,ij->i", c, c)
@@ -1101,28 +973,16 @@ def cell_labels_frame(
     ccf = cc.astype(np.float64)
     max_c = int(np.abs(c).max(initial=0))
     m = float(10**scale)
-    id_type = vectors.schema[id_col].dataType.simpleString()
-    if passthrough:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        in_cols = list(vectors.columns)
-        # never .add() onto vectors.schema — StructType.add mutates in
-        # place and df.schema is cached on the DataFrame
-        out_schema = StructType(
-            list(vectors.schema.fields)
-            + [StructField("cluster_id", LongType())]
-        )
-    else:
-        in_cols = [id_col, vec_col]
-        out_schema = f"vid {id_type}, cluster_id long"
+    # never .add() onto vectors.schema — StructType.add mutates in place
+    # and df.schema is cached on the DataFrame
+    out_schema = StructType(
+        list(vectors.schema.fields) + [StructField("cluster_id", LongType())]
+    )
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
-                if passthrough:
-                    yield pdf.assign(cluster_id=pd.Series([], dtype="int64"))
-                else:
-                    yield pd.DataFrame({"vid": [], "cluster_id": []})
+                yield pdf.assign(cluster_id=pd.Series([], dtype="int64"))
                 continue
             # NULL-ROW parity with the expression path (pin-tested):
             # a null VECTOR makes every per-cell distance null there,
@@ -1186,14 +1046,9 @@ def cell_labels_frame(
                 dist = vv[:, None] - 2 * (micro @ c.T) + cc[None, :]
             labels = np.argmin(dist, axis=1).astype(np.int64)
             labels[null_rows] = 0
-            if passthrough:
-                yield pdf.assign(cluster_id=labels)
-            else:
-                yield pd.DataFrame(
-                    {"vid": pdf[id_col], "cluster_id": labels}
-                )
+            yield pdf.assign(cluster_id=labels)
 
-    return vectors.select(*in_cols).mapInPandas(gen, out_schema)
+    return vectors.mapInPandas(gen, out_schema)
 
 
 def srp_lsh_pairs(

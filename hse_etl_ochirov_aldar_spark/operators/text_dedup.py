@@ -63,21 +63,6 @@ def _minhash_fold(shingles, num_hashes: int):
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Adds ``minhash`` (array<bigint> of length num_hashes): the
-    ``_minhash_fold`` of the document's word shingles. Per-row array
-    math, no shuffle, no UDF."""
-    return df.withColumn(
-        "minhash",
-        _minhash_fold(word_shingles(F.col(text_col), shingle_n), num_hashes),
-    )
-
-
 def _shingle_sets(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> DataFrame:
@@ -534,7 +519,7 @@ def simhash(
     vector (zip_with against a bit-index array) — each token is hashed
     exactly once. The per-bit-fold form re-hashes every token ``bits``
     times once CollapseProject inlines the shared subexpressions (see
-    minhash_signatures). No shuffle.
+    _minhash_fold). No shuffle.
 
     ``token_hash`` defaults to xxhash64 (JVM-codegen, the production
     path); pass ``md5_hash32`` for a cross-engine-reproducible simhash

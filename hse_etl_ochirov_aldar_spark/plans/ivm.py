@@ -88,7 +88,9 @@ def maintain_additive_mart_versioned(
     rename leaves only an unpublished data dir, so the replayed batch
     recomputes from the last COMMITTED mart and applies exactly once
     wherever the crash lands. Returns the committed version, or None
-    on replay. O(delta + mart) per refresh.
+    on replay. O(delta + mart) per refresh. A Structured Streaming
+    ``foreachBatch`` sink passes its batch id as ``epoch``, so a
+    replayed micro-batch is a no-op.
     """
     delta_agg = aggregate_delta(delta, group_cols, sum_cols, weight_col)
 
@@ -100,41 +102,3 @@ def maintain_additive_mart_versioned(
     return _commit_versioned(
         spark, root, combine, epoch=epoch, keep_versions=keep_versions
     )
-
-
-def streaming_additive_mart_versioned(
-    stream: DataFrame,
-    root: str,
-    checkpoint: str,
-    group_cols: Sequence[str],
-    sum_cols: Sequence[str],
-    weight_col: str | None = None,
-    trigger_available_now: bool = True,
-):
-    """Maintain the additive mart from a STREAM, exactly once: each
-    micro-batch is one :func:`maintain_additive_mart_versioned` refresh
-    under its epoch id. Structured Streaming replays a batch under the
-    SAME epoch, the refresh sees epoch <= committed and no-ops, and
-    there is no window in which the mart is updated but the guard is
-    not. Readers use sinks.read_versioned(root) and never observe a
-    partial refresh. Returns the StreamingQuery."""
-
-    def _refresh(batch: DataFrame, epoch: int) -> None:
-        maintain_additive_mart_versioned(
-            batch.sparkSession,
-            root,
-            batch,
-            group_cols,
-            sum_cols,
-            weight_col,
-            epoch=epoch,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

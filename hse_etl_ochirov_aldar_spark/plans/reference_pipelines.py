@@ -3,8 +3,9 @@
 The query catalog (queries.py) re-hosts the reference's operators onto
 the driver's TPC-H-ish testdata for oracle checking. This module is the
 other half of parity: the SAME pipelines expressed on the reference's
-own document schemas (user_sessions / event_logs / support_tickets from
-sources.datagen), end-to-end:
+own document schemas (user_sessions / event_logs / support_tickets as
+Mongo-export JSON lines, read by sources.connectors.read_mongo_export),
+end-to-end:
 
     replicate (dedup at source, A6/S6)
       -> clean (derived cols + anomaly filters, P5-P7, F5-F7)
@@ -48,40 +49,6 @@ def replicate_events(raw: DataFrame) -> DataFrame:
         F.col("details.page").alias("page"),
         F.col("details.user_id").alias("user_id"),
         F.col("details.extra.error_code").alias("error_code"),
-    )
-
-
-def replicate_recommendations(raw: DataFrame) -> DataFrame:
-    """S5/S9 for user_recommendations: PK dedup on user_id, ISO+Z
-    timestamp parse (F13), derived num_recommendations (raw table
-    schema final-module-3/init/init.sql:50-57)."""
-    deduped = dedup_keep_first(raw, ["user_id"], ["last_updated"])
-    return deduped.select(
-        "user_id",
-        "recommended_products",
-        safe_array_size(F.col("recommended_products")).alias("num_recommendations"),
-        F.to_timestamp(
-            F.col("last_updated"), "yyyy-MM-dd'T'HH:mm:ss'Z'"
-        ).alias("last_updated"),
-    )
-
-
-def replicate_moderation(raw: DataFrame) -> DataFrame:
-    """S5/S9 for moderation_queue: PK dedup on review_id, ISO+Z parse,
-    typed rating (CHECK 1..5 is gated separately with expect_check —
-    final-module-3/init/init.sql:60-72)."""
-    deduped = dedup_keep_first(raw, ["review_id"], ["submitted_at"])
-    return deduped.select(
-        "review_id",
-        "user_id",
-        "product_id",
-        "review_text",
-        F.col("rating").cast("int").alias("rating"),
-        "moderation_status",
-        "flags",
-        F.to_timestamp(
-            F.col("submitted_at"), "yyyy-MM-dd'T'HH:mm:ss'Z'"
-        ).alias("submitted_at"),
     )
 
 

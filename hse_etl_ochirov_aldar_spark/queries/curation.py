@@ -35,7 +35,7 @@ from ..functions.text import (
 from ..operators.aggregates import conditional_count, daily_avg, mode_by_group
 from ..operators.dedup import dedup_keep_first
 from ..operators.percentile import percentile_trim
-from ..operators.similarity import brute_force_topk, embedding_near_dedup, ivf_topk
+from ..operators.similarity import brute_force_topk, ivf_topk
 from ..operators.text_dedup import (
     exact_dedup,
     minhash_dedup,
@@ -1441,9 +1441,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.exact_kmeans_centroids), which is a pure
     function of the data. The DuckDB twin (ORACLE_ANN_IVF_KMEANS)
     re-derives the same init ranking, 3 Lloyd iterations, labels,
-    probes, and ranking — a full hash check instead of rows-only. The
-    float-ml variant remains available (ivf_kmeans_topk) with its
-    recall-vs-brute-force pytest."""
+    probes, and ranking — a full hash check instead of rows-only."""
     from ..operators.similarity import ivf_kmeans_exact_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1702,7 +1700,7 @@ def q_embedding_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SCALE-SAFE path: a coarse quantizer (deterministic hash-sampled
     centroids — k-means seeding with zero Lloyd rounds; swap in an
-    offline kmeans_centroids fit when cells gate search recall) blocks
+    offline exact_kmeans_centroids fit when cells gate search recall) blocks
     the pair space: every vector is assigned its 2 nearest cells by
     COSINE (scale-invariant, so a copy and its scalar multiple
     provably share cells for ANY centroid set); candidate pairs are

@@ -35,7 +35,7 @@ from ..functions.text import (
 from ..operators.aggregates import conditional_count, daily_avg, mode_by_group
 from ..operators.dedup import dedup_keep_first
 from ..operators.percentile import percentile_trim
-from ..operators.similarity import brute_force_topk, embedding_near_dedup, ivf_topk
+from ..operators.similarity import brute_force_topk, ivf_topk
 from ..operators.text_dedup import (
     exact_dedup,
     minhash_dedup,

@@ -35,7 +35,7 @@ from ..functions.text import (
 from ..operators.aggregates import conditional_count, daily_avg, mode_by_group
 from ..operators.dedup import dedup_keep_first
 from ..operators.percentile import percentile_trim
-from ..operators.similarity import brute_force_topk, embedding_near_dedup, ivf_topk
+from ..operators.similarity import brute_force_topk, ivf_topk
 from ..operators.text_dedup import (
     exact_dedup,
     minhash_dedup,
@@ -527,7 +527,8 @@ FROM ranked WHERE rank <= 10
 def q_repetition_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition screen: flag documents whose most frequent
     word 2-gram covers > 10% of all its 2-grams (template/keyword-spam
-    signal; completes the row-local gopher_signals family with the
+    signal; completes the row-local Gopher signals
+    (functions.text.with_gopher_signals) with the
     census-based one). The flag test is integer cross-multiplication
     (top*10 > total) and every output is a BIGINT sum —
     arithmetic-order-proof."""

@@ -968,9 +968,8 @@ def _crawl_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_crawl_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 composed crawl-ingest flagship — the BATCH twin of
-    streaming_crawl_ingest as one DataFrame program over the injected
-    fixture:
+    """Round-12 composed crawl-ingest flagship — one DataFrame program
+    over the injected fixture:
 
       robots noindex screen (row-local regex)
         -> canonical-URL dedup, keep min id (one short-key window)

@@ -2,7 +2,6 @@ from .readers import (
     TABLES,
     fetch_csv_to_staging,
     load_table,
-    load_tables,
     read_csv_all_string,
 )
 from .views import register_views, sql_query
@@ -21,7 +20,6 @@ __all__ = [
     "TABLES",
     "fetch_csv_to_staging",
     "load_table",
-    "load_tables",
     "read_csv_all_string",
     "compact_parquet",
     "overwrite_window",

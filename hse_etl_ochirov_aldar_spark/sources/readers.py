@@ -57,10 +57,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
 def read_csv_all_string(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:
     """S1: CSV staged entirely as strings, typed later by the clean layer.
 

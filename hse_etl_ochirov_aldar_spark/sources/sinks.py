@@ -486,30 +486,6 @@ def read_versioned(
     return spark.read.parquet(_versioned_data_dir(root, version))
 
 
-def versioned_diff(
-    spark: SparkSession,
-    root: str,
-    v_old: int,
-    v_new: int,
-    id_col: str,
-    content_col: str,
-) -> DataFrame:
-    """Row-level diff between two retained snapshots: (id, status) with
-    status in ('added', 'removed', 'changed', 'unchanged') by content
-    md5 — time travel composed with operators/snapshot.corpus_diff, the
-    audit query "what did the last upsert actually change". One
-    full-outer join on the key; both sides are column-pruned scans of
-    (id, content)."""
-    from ..operators.snapshot import corpus_diff
-
-    return corpus_diff(
-        read_versioned(spark, root, v_old),
-        read_versioned(spark, root, v_new),
-        id_col=id_col,
-        text_col=content_col,
-    )
-
-
 def versioned_upsert(
     spark: SparkSession,
     df: DataFrame,

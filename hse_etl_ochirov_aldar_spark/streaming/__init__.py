@@ -1,32 +1,13 @@
-from .anomaly import ewma_anomaly_stream, ewma_scores_batch
-from .curation import (
-    streaming_content_dedup,
-    streaming_decontaminate,
-    streaming_near_dedup_ingest,
-    streaming_url_dedup,
-)
+from .anomaly import ewma_scores_batch
 from .daily import run_available_now, streaming_daily_avg, streaming_sliding_counts
-from .joins import (
-    view_purchase_attribution,
-    write_stream_upsert,
-    write_stream_versioned_upsert,
-)
 from .sessionize import sessionize_batch, sessionize_native, sessionize_stream
 
 __all__ = [
-    "ewma_anomaly_stream",
     "ewma_scores_batch",
     "run_available_now",
     "sessionize_batch",
     "sessionize_native",
     "sessionize_stream",
-    "streaming_content_dedup",
     "streaming_daily_avg",
-    "streaming_decontaminate",
-    "streaming_near_dedup_ingest",
     "streaming_sliding_counts",
-    "streaming_url_dedup",
-    "view_purchase_attribution",
-    "write_stream_upsert",
-    "write_stream_versioned_upsert",
 ]

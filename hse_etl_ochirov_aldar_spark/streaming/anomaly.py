@@ -1,35 +1,31 @@
-"""Stateful streaming anomaly scoring: per-key online EWMA z-score.
+"""Per-key online EWMA z-score anomaly scoring.
 
-The monitoring op a live event feed needs that no built-in aggregate
-expresses: each key keeps an exponentially weighted mean and variance
-in GroupState, scores each arriving value against the state BEFORE
-folding it in (an anomaly must be judged by the past, not by a
-baseline it already contaminated), and emits only the rows whose
-|z| crosses the threshold. State per key is three numbers — bounded
-regardless of stream length, the applyInPandasWithState contract.
+The monitoring op an event feed needs that no built-in aggregate
+expresses: each key keeps an exponentially weighted mean and variance,
+scores each value against the state BEFORE folding it in (an anomaly
+must be judged by the past, not by a baseline it already
+contaminated), and emits only the rows whose |z| crosses the
+threshold. State per key is three numbers, bounded regardless of
+history length.
 
-Determinism: events are processed in (ts, event_id) order inside each
-micro-batch, and the batch twin (ewma_scores_batch) runs the identical
-fold per key via applyInPandas — the equivalence test feeds the same
-data through both. The fold is a SEQUENTIAL chain of IEEE-754 double
-ops (sub/mul/add/hardware sqrt, one fixed order — no reduction whose
-summation order an engine could change), so any engine replaying the
-chain reproduces the scores bit-for-bit: the batch twin IS an oracle'd
-catalog entry (ewma_anomaly_scores, recursive-CTE oracle), unlike the
-Arrow-SUM twins the PERF notes exclude from oracles.
+Determinism: events are folded in (ts, event_id) order per key. The
+fold is a SEQUENTIAL chain of IEEE-754 double ops (sub/mul/add/hardware
+sqrt, one fixed order — no reduction whose summation order an engine
+could change), so any engine replaying the chain reproduces the scores
+bit-for-bit: ewma_scores_batch IS an oracle'd catalog entry
+(ewma_anomaly_scores, recursive-CTE oracle), unlike the Arrow-SUM twins
+the PERF notes exclude from oracles.
 
-Scale shape: one shuffle on the key; Arrow batches per group; state
-O(keys). The same fold at 100 TB history is why EWMA beats windowed
-stddev here — constant state versus a window buffer.
+Scale shape: one shuffle on the key; Arrow batches per partition;
+state O(1) per key. The same fold at 100 TB history is why EWMA beats
+windowed stddev here — constant state versus a window buffer.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SCORE_SCHEMA = T.StructType(
@@ -42,22 +38,26 @@ SCORE_SCHEMA = T.StructType(
     ]
 )
 
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("mean", T.DoubleType()),
-        T.StructField("var", T.DoubleType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
 _WARMUP = 5  # score only after this many observations seeded the state
 
 
-def _fold(rows, state_tuple, alpha: float, threshold: float):
-    """Shared EWMA fold: returns (anomalies, new_state). ``rows`` is an
-    iterable of (ts, value)-sorted records whose values are plain Python
-    floats (callers bulk-convert with ``Series.tolist()`` — one C-level
-    pass instead of per-row Series boxing, ~3-5x on mega-keys).
+def ewma_scores_batch(
+    df: DataFrame,
+    alpha: float = 0.2,
+    threshold: float = 3.0,
+) -> DataFrame:
+    """Anomalous rows of a (user_id, event_id, ts, value) frame with
+    their z-score and the EWMA mean they were judged against: one key
+    shuffle, then the fold in per-key time order.
+
+    Shape: repartition(key) + sortWithinPartitions(key, epoch-micros,
+    event_id) + ONE mapInPandas whose loop resets state at each key
+    change. Semantically identical to groupBy(key).applyInPandas(fold)
+    — the shuffle is the same hash partitioning and the sort gives the
+    same per-key order — but ~6x faster measured at sf0.1 (3.0s ->
+    0.53s warm, bit-identical output): applyInPandas materializes a
+    pandas DataFrame PER GROUP, and with ~10k small user groups that
+    per-group overhead dwarfs the fold itself.
 
     Skew contract: the fold is inherently SEQUENTIAL per key (each
     z-score is judged against state built from every earlier event of
@@ -67,105 +67,7 @@ def _fold(rows, state_tuple, alpha: float, threshold: float):
     (operators.profile.skew_report) shows keys at that scale, shard the
     key upstream by a coarse time bucket and re-seed state per shard, or
     accept the tail task. Parallelizing WITHIN a key would change
-    summation order and break the bit-exact oracle contract above.
-    """
-    import math
-
-    mean, var, n = state_tuple
-    out = []
-    for ts, val in rows:
-        if val is None or val != val:
-            continue
-        v = val if type(val) is float else float(val)
-        if n >= _WARMUP and var > 0.0:
-            # math.sqrt is IEEE-754 correctly rounded (hardware sqrt),
-            # so any engine reproduces it bit-for-bit; var ** 0.5 goes
-            # through libm pow, whose last ulp is implementation-defined
-            # — that difference is what separates an oracle-checkable
-            # fold from a tolerance test
-            z = (v - mean) / math.sqrt(var)
-            if abs(z) >= threshold:
-                out.append((ts, v, z, mean))
-        if n == 0:
-            mean, var = v, 0.0
-        else:
-            d = v - mean
-            mean = mean + alpha * d
-            var = (1.0 - alpha) * (var + alpha * d * d)
-        n += 1
-    return out, (mean, var, n)
-
-
-def _make_scorer(alpha: float, threshold: float):
-    def score(key: tuple, pdfs: Iterator[Any], state: Any) -> Iterator[Any]:
-        import pandas as pd
-
-        # Sort on the JVM-computed epoch-micros long, not the pandas ts
-        # column: Arrow delivers TIMESTAMP as session-timezone
-        # wall-clock, which is non-monotonic across a DST fall-back
-        # under a non-UTC session zone — the fold order (and therefore
-        # EWMA state) would diverge from the oracle's true-time order.
-        # Same hazard sessionize.py fixed via _epoch_micros.
-        rows = pd.concat(list(pdfs)).sort_values(["_ts_us", "event_id"])
-        st = state.get if state.exists else (0.0, 0.0, 0)
-        anomalies, new_st = _fold(
-            zip(rows["ts"].tolist(), rows["value"].tolist()),
-            st,
-            alpha,
-            threshold,
-        )
-        state.update(new_st)
-        if anomalies:
-            out = pd.DataFrame(
-                [(key[0], ts, v, z, m) for ts, v, z, m in anomalies],
-                columns=["user_id", "ts", "value", "zscore", "ewma_mean"],
-            )
-            yield out
-
-    return score
-
-
-def ewma_anomaly_stream(
-    stream: DataFrame,
-    alpha: float = 0.2,
-    threshold: float = 3.0,
-) -> DataFrame:
-    """Stateful streaming scorer over a (user_id, event_id, ts, value)
-    stream; emits anomalous rows with their z-score and the EWMA mean
-    they were judged against."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .sessionize import _epoch_micros
-
-    stream = stream.withColumn("_ts_us", _epoch_micros(stream, "ts"))
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _make_scorer(alpha, threshold),
-        outputStructType=SCORE_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def ewma_scores_batch(
-    df: DataFrame,
-    alpha: float = 0.2,
-    threshold: float = 3.0,
-) -> DataFrame:
-    """Batch twin: the identical fold, one key shuffle, per-key time
-    order — the equivalence baseline for the streaming operator and
-    the backfill path.
-
-    Shape: repartition(key) + sortWithinPartitions(key, epoch-micros,
-    event_id) + ONE mapInPandas whose loop resets state at each key
-    change. Semantically identical to groupBy(key).applyInPandas(fold)
-    — the shuffle is the same hash partitioning and the sort gives the
-    same per-key order — but ~6x faster measured at sf0.1 (3.0s ->
-    0.53s warm, bit-identical output): applyInPandas materializes a
-    pandas DataFrame PER GROUP, and with ~10k small user groups that
-    per-group overhead dwarfs the fold itself. The streaming side keeps
-    applyInPandasWithState (state handover needs real groups); batch
-    has no state object, so the flat scan wins."""
+    summation order and break the bit-exact oracle contract above."""
     from .sessionize import _epoch_micros
 
     base = df.select(
@@ -208,6 +110,12 @@ def ewma_scores_batch(
                     continue
                 v = val if type(val) is float else float(val)
                 if n >= _WARMUP and var > 0.0:
+                    # math.sqrt is IEEE-754 correctly rounded (hardware
+                    # sqrt), so any engine reproduces it bit-for-bit;
+                    # var ** 0.5 goes through libm pow, whose last ulp
+                    # is implementation-defined — that difference is
+                    # what separates an oracle-checkable fold from a
+                    # tolerance test
                     z = (v - mean) / math.sqrt(var)
                     if abs(z) >= threshold:
                         out_u.append(uid)

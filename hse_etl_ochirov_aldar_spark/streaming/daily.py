@@ -14,8 +14,9 @@ with:
   rebuild window, I2).
 
 At scale: state is bounded by (watermark horizon x days) aggregate rows
-UNDER update/append output (the production modes — e.g. update +
-write_stream_upsert), which write only changed windows per micro-batch;
+UNDER update/append output (the production modes — e.g. update mode
+into a foreachBatch ``sources.sinks.upsert_keep_newest``), which write
+only changed windows per micro-batch;
 the complete-mode memory runner below is the test/driver surface and
 deliberately retains everything. File-source listing is incremental.
 """
@@ -83,8 +84,8 @@ def run_available_now(
     with every distinct window, which is exactly what a collectible
     test/driver surface wants and exactly what an unbounded production
     stream must NOT do. The bounded-state production path is
-    update-mode + ``streaming/joins.write_stream_upsert`` (keep-newest
-    per window into parquet), where the module docstring's
+    update-mode + a foreachBatch ``sources.sinks.upsert_keep_newest``
+    (keep-newest per window into parquet), where the module docstring's
     "state bounded by watermark horizon" contract actually applies."""
     q = (
         result.writeStream.format("memory")

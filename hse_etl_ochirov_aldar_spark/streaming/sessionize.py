@@ -38,16 +38,6 @@ from pyspark.sql import types as T
 
 from ..functions.exact import as_value, units_sum
 
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
 # What the pandas state function emits: epoch MICROSECOND LONGS, never
 # timestamps. Arrow hands TimestampType to pandas as session-timezone
 # wall-clock (naive), so gap math on pandas .value would shift across

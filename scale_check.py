@@ -73,20 +73,6 @@ def main() -> None:
 
         return minhash_lsh_candidates(_minhash_docs()).count()
 
-    # 2b) signature stage ONLY, 64 hashes (fine-threshold / 0.8-Jaccard
-    #    operating points): the per-(shingle, j) fold work is 4x that
-    #    of the 16-hash default.
-    def minhash_sig64_300k():
-        from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
-            minhash_signatures,
-        )
-
-        return (
-            minhash_signatures(_minhash_docs(), "text", 64, 3)
-            .select(F.sum(F.element_at("minhash", 1)).alias("s"))
-            .collect()[0]["s"]
-        )
-
     # 3) hot-key join, 5M facts with 50% on one key: plain vs salted
     def _skewed_sides():
         facts = spark.range(5_000_000).select(
@@ -126,7 +112,7 @@ def main() -> None:
     #    cells (the IVF-blocked scale path; exact would be 4e10 pairs)
     def embedding_blocked_200k():
         from hse_etl_ochirov_aldar_spark.operators.similarity import (
-            embedding_near_dedup,
+            embedding_near_dup_ids,
         )
 
         vecs = spark.range(200_000).select(
@@ -139,9 +125,8 @@ def main() -> None:
             ).alias("embedding"),
             F.pmod(F.xxhash64("id", F.lit(99)), 1000).cast("int").alias("label"),
         )
-        return embedding_near_dedup(
-            vecs, threshold=0.999, block_col="label"
-        ).count()
+        dups = embedding_near_dup_ids(vecs, threshold=0.999, block_col="label")
+        return vecs.join(dups, "vec_id", "left_anti").count()
 
     # 4b) SRP-LSH near-pairs at 200k vectors — the r7 sizing rule at
     #    volume: bits-per-band buys candidate shrinkage (rpb=16 ->
@@ -618,7 +603,7 @@ def main() -> None:
     #     collapsed by cluster blocking from the 5e9 exact pair space)
     def semantic_dedup_100k():
         from hse_etl_ochirov_aldar_spark.operators.similarity import (
-            semantic_dedup,
+            semantic_dedup_flags,
         )
 
         n, cells = 100_000, 128
@@ -638,9 +623,13 @@ def main() -> None:
             [int(round(float(x) * 1_000_000)) for x in r["embedding"]]
             for r in sample
         ]
-        return semantic_dedup(
-            vecs, threshold=0.998, n_cells=cells, centroids=cents
-        ).count()
+        return (
+            semantic_dedup_flags(
+                vecs, threshold=0.998, n_cells=cells, centroids=cents
+            )
+            .where(~F.col("is_dup"))
+            .count()
+        )
 
     # 23) seeded training shuffle over 10M docs into 1024 shards: one
     #     row-local hash pair + one shuffle + per-shard windows
@@ -902,38 +891,6 @@ def main() -> None:
             .count()
         )
 
-    # blocked bitext mining at 100k x 20k vectors: cell-blocked
-    # candidates (~n_probe/n_cells of the 2e9 pair space) through the
-    # exact-integer margin pipeline — the CCMatrix-style corpus path
-    def bitext_blocked_100k():
-        from hse_etl_ochirov_aldar_spark.operators.bitext import (
-            margin_bitext_mine_blocked,
-        )
-
-        def vecs(n, offset, salt):
-            comp = F.transform(
-                F.sequence(F.lit(1), F.lit(16)),
-                lambda i: (
-                    F.pmod(F.xxhash64(F.col("id"), i, F.lit(salt)), 2000)
-                    / 1000.0
-                    - 1.0
-                ),
-            )
-            return spark.range(n).select(
-                (F.col("id") + offset).alias("vec_id"), comp.alias("embedding")
-            )
-
-        out = margin_bitext_mine_blocked(
-            vecs(100_000, 0, 1),
-            vecs(20_000, 1_000_000, 2),
-            k=4,
-            margin_bp=10000,
-            n_cells=128,
-            n_probe=2,
-        )
-        return out.count()
-
-    timed("bitext_blocked_100k_x_20k", bitext_blocked_100k)
     timed("cc_star_10k_deep_chain", cc_star_deep_chain)
     timed("funnel_10m_events", funnel_10m)
     timed("ppm_decode_500k_images", ppm_decode_500k)
@@ -1097,7 +1054,6 @@ def main() -> None:
     timed("asof_join_5m_probes", asof_5m)
     timed("range_join_5m_probes", range_5m)
     timed("minhash_lsh_300k_docs", minhash_300k)
-    timed("minhash_signatures_64h_300k", minhash_sig64_300k)
     timed("skewed_join_plain_5m", skew_plain)
     timed("skewed_join_salted_5m", skew_salted)
     timed("embedding_near_dedup_blocked_200k", embedding_blocked_200k)

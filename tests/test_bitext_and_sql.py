@@ -78,47 +78,3 @@ def test_sql_facade_matches_dataframe(spark, sf_dir):
     assert [tuple(r) for r in sql_side] == [tuple(r) for r in df_side]
     register_views(spark, sf_dir)  # idempotent
     assert spark.sql("SELECT count(*) FROM nation").first()[0] == 25
-
-
-def test_blocked_miner_recall_on_clustered_data(spark):
-    """On clustered sides (true pairs share direction clusters) the
-    cell-blocked miner must recover the exact miner's pairs at high
-    recall — the ivf-vs-brute contract applied to mining."""
-    import math
-    import random
-
-    from hse_etl_ochirov_aldar_spark.operators.bitext import (
-        margin_bitext_mine,
-        margin_bitext_mine_blocked,
-    )
-
-    rng = random.Random(7)
-    dims = 8
-
-    def unit(v):
-        n = math.sqrt(sum(x * x for x in v))
-        return [x / n for x in v]
-
-    # 12 cluster directions; each cluster contributes a few A and B
-    # vectors jittered around the direction
-    dirs = [unit([rng.gauss(0, 1) for _ in range(dims)]) for _ in range(12)]
-
-    def jitter(d, eps):
-        return unit([x + rng.gauss(0, eps) for x in d])
-
-    a_rows = [(ci * 100 + j, jitter(d, 0.05))
-              for ci, d in enumerate(dirs) for j in range(4)]
-    b_rows = [(10_000 + ci * 100 + j, jitter(d, 0.05))
-              for ci, d in enumerate(dirs) for j in range(4)]
-    a = spark.createDataFrame(a_rows, ["vec_id", "embedding"])
-    b = spark.createDataFrame(b_rows, ["vec_id", "embedding"])
-
-    exact = {(r.a_id, r.b_id)
-             for r in margin_bitext_mine(a, b, k=3, margin_bp=10050).collect()}
-    blocked = {(r.a_id, r.b_id)
-               for r in margin_bitext_mine_blocked(
-                   a, b, k=3, margin_bp=10050, n_cells=8, n_probe=3
-               ).collect()}
-    assert exact, "fixture must produce exact pairs"
-    recall = len(exact & blocked) / len(exact)
-    assert recall >= 0.8, (recall, len(exact), len(blocked))

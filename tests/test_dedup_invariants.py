@@ -82,7 +82,7 @@ def test_ivf_kmeans_recall_vs_brute_force(spark, sf_dir):
 
     from hse_etl_ochirov_aldar_spark.operators.similarity import (
         brute_force_topk,
-        ivf_kmeans_topk,
+        ivf_kmeans_exact_topk,
     )
     from hse_etl_ochirov_aldar_spark.sources.readers import load_table
 
@@ -90,7 +90,7 @@ def test_ivf_kmeans_recall_vs_brute_force(spark, sf_dir):
     qs = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    ivf = ivf_kmeans_topk(emb, qs, k=5, n_cells=8, n_probe=2)
+    ivf = ivf_kmeans_exact_topk(emb, qs, k=5, n_cells=8, n_probe=2)
     ivf_rows = {(r.query_id, r.neighbor_id) for r in ivf.collect()}
     assert len(ivf_rows) == 50  # complete top-5 per query
 
@@ -274,7 +274,7 @@ def test_blocked_embedding_dedup_matches_unblocked(spark, sf_dir):
     cell assignment is scale-invariant, so every injected scaled copy
     shares a probed cell with its source."""
     from hse_etl_ochirov_aldar_spark.operators.similarity import (
-        embedding_near_dedup,
+        embedding_near_dup_ids,
     )
     from hse_etl_ochirov_aldar_spark.queries import q_embedding_near_dedup
     from hse_etl_ochirov_aldar_spark.sources.readers import load_table
@@ -290,7 +290,9 @@ def test_blocked_embedding_dedup_matches_unblocked(spark, sf_dir):
     corpus = emb.unionByName(dups)
     unblocked = {
         (r.label, r.n_vecs)
-        for r in embedding_near_dedup(corpus, threshold=0.95)
+        for r in corpus.join(
+            embedding_near_dup_ids(corpus, threshold=0.95), "vec_id", "left_anti"
+        )
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
         .collect()

@@ -137,18 +137,18 @@ def test_pre_quantized_labels_match_snapped(spark):
     df = _vectors(spark, n=200, dims=6)
     cents = [[i * 100_000] * 6 for i in range(4)]
     a = sorted(
-        (r["vid"], r["cluster_id"])
-        for r in cell_labels_frame(df, cents).collect()
+        tuple(r)
+        for r in cell_labels_frame(df, cents).select("vec_id", "cluster_id").collect()
     )
     micro = df.select(
         F.col("vec_id").alias("vid2"),
         micro_vec(F.col("embedding"), 6).alias("mv"),
     )
     b = sorted(
-        (r["vid"], r["cluster_id"])
-        for r in cell_labels_frame(
-            micro, cents, id_col="vid2", vec_col="mv", pre_quantized=True
-        ).collect()
+        tuple(r)
+        for r in cell_labels_frame(micro, cents, vec_col="mv", pre_quantized=True)
+        .select("vid2", "cluster_id")
+        .collect()
     )
     assert a == b and len(a) == 200
 
@@ -184,8 +184,8 @@ def test_null_and_nan_rows_match_expr(spark):
         ).collect()
     )
     arrow = sorted(
-        (r["vid"], r["cluster_id"])
-        for r in cell_labels_frame(df, cents).collect()
+        tuple(r)
+        for r in cell_labels_frame(df, cents).select("vec_id", "cluster_id").collect()
     )
     assert arrow == expr
     assert dict(arrow)[2] == 0  # the null row labels cell 0

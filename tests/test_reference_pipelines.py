@@ -1,10 +1,15 @@
 """End-to-end reference-parity pipeline on reference-shaped data,
 asserting the reference's own invariants (SURVEY.md §5): dedup restores
 exact base counts, anomaly filters drop the injected anomalies, mode
-joins preserve cardinality, validation gates fire."""
+joins preserve cardinality, validation gates fire.
+
+The input is the benchmark's Mongo-export generator at a small size,
+read with ``read_mongo_export`` as the medallion workload reads it; the
+expected counts come from DuckDB over the same JSON lines."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,59 +27,122 @@ from hse_etl_ochirov_aldar_spark.plans.reference_pipelines import (
     sessions_clean,
     tickets_clean,
 )
-from hse_etl_ochirov_aldar_spark.sources.datagen import (
-    gen_event_logs,
-    gen_support_tickets,
-    gen_user_sessions,
+from hse_etl_ochirov_aldar_spark.sources.connectors import read_mongo_export
+from perfbench.gen import MedallionSize, gen_medallion
+from perfbench.workloads import compare_rows
+from perfbench.workloads.medallion import (
+    _MARTS,
+    EVENTS,
+    SESSIONS,
+    TICKET_PIPELINE,
+    TICKETS,
+)
+
+SIZE = MedallionSize(
+    sessions=500, events=800, tickets=200, readings=10, users=60, dup_share=0.04
 )
 
 
 @pytest.fixture(scope="module")
-def data(spark):
+def landing(tmp_path_factory):
+    root = tmp_path_factory.mktemp("medallion") / "landing"
+    gen_medallion(str(root), seed=1, size=SIZE)
+    return str(root)
+
+
+@pytest.fixture(scope="module")
+def data(spark, landing):
     return {
-        "sessions": gen_user_sessions(spark, n=500, n_dupes=20),
-        "events": gen_event_logs(spark, n=800, n_dupes=30),
-        "tickets": gen_support_tickets(spark, n=200),
+        "sessions": read_mongo_export(spark, f"{landing}/user_sessions", SESSIONS),
+        "events": read_mongo_export(spark, f"{landing}/event_logs", EVENTS),
+        "tickets": read_mongo_export(
+            spark, f"{landing}/support_tickets", TICKETS, pipeline=TICKET_PIPELINE
+        ).withColumnRenamed("_id", "ticket_id"),
     }
 
 
-def test_dedup_restores_base_counts(spark, data):
-    # the reference's core expected-output test: 2000/5000 exact counts
+def _duck(landing: str, sql: str):
+    """The one value of a DuckDB query over the landing collections,
+    each a view named after its collection."""
+    con = duckdb.connect()
+    for name in ("user_sessions", "event_logs", "support_tickets"):
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM "
+            f"read_json('{landing}/{name}/*.json', format='newline_delimited')"
+        )
+    try:
+        return con.sql(sql).fetchone()[0]
+    finally:
+        con.close()
+
+
+def _ts(col: str) -> str:
+    return f"CAST({col} AS TIMESTAMP)"
+
+
+def test_dedup_restores_base_counts(spark, data, landing):
+    # the reference's core expected-output test: exact base counts
     # after dedup of deliberately seeded duplicates (README.md:21-25)
-    assert data["sessions"].count() == 520
-    assert replicate_sessions(data["sessions"]).count() == 500
-    assert data["events"].count() == 830
-    assert replicate_events(data["events"]).count() == 800
+    n_sessions = _duck(landing, "SELECT count(DISTINCT session_id) FROM user_sessions")
+    n_events = _duck(landing, "SELECT count(DISTINCT event_id) FROM event_logs")
+    assert data["sessions"].count() == _duck(landing, "SELECT count(*) FROM user_sessions")
+    assert data["sessions"].count() > n_sessions  # duplicates were planted
+    assert replicate_sessions(data["sessions"]).count() == n_sessions
+    assert data["events"].count() == _duck(landing, "SELECT count(*) FROM event_logs")
+    assert data["events"].count() > n_events
+    assert replicate_events(data["events"]).count() == n_events
 
 
-def test_event_flatten_nested_struct(spark, data):
+def test_event_flatten_nested_struct(spark, data, landing):
     ev = replicate_events(data["events"])
     assert {"event_id", "timestamp", "event_type", "page", "user_id", "error_code"} == set(ev.columns)
-    # extra is null ~70% of the time -> error_code mostly null, some set
+    # extra is absent ~70% of the time -> error_code mostly null, some set
     n = ev.count()
     n_err = ev.where(F.col("error_code").isNotNull()).count()
     assert 0 < n_err < n
+    assert n_err == _duck(
+        landing,
+        "SELECT count(DISTINCT event_id) FROM event_logs "
+        "WHERE details.extra.error_code IS NOT NULL",
+    )
 
 
-def test_sessions_clean_drops_anomalies(spark, data):
+def test_sessions_clean_drops_anomalies(spark, data, landing):
     deduped = replicate_sessions(data["sessions"])
     clean = sessions_clean(deduped)
-    # 500 rows, anomalies at _i%50==17 (end<start) and _i%50==33 (>24h):
-    # 10 each -> 480 survivors
-    assert clean.count() == 480
+    st, et = _ts("start_time"), _ts("end_time")
+    kept, dropped = (
+        _duck(
+            landing,
+            f"SELECT count(DISTINCT session_id) FILTER (WHERE {ok}) FROM user_sessions",
+        )
+        for ok in (
+            f"{st} < {et} AND epoch({et}) - epoch({st}) < 86400",
+            f"NOT ({st} < {et} AND epoch({et}) - epoch({st}) < 86400)",
+        )
+    )
+    # the generator plants end < start and > 24h sessions; exactly
+    # those are dropped
+    assert dropped > 0
+    assert clean.count() == kept == deduped.count() - dropped
     assert clean.where(F.col("duration_min") <= 0).count() == 0
     assert clean.where(F.col("duration_min") >= 24 * 60).count() == 0
 
 
-def test_tickets_clean_monotonicity(spark, data):
+def test_tickets_clean_monotonicity(spark, data, landing):
     clean = tickets_clean(data["tickets"])
-    # anomalies at _i%50==13 -> 4 of 200 dropped
-    assert clean.count() == 196
+    dropped = _duck(
+        landing,
+        "SELECT count(DISTINCT ticket_id) FROM support_tickets "
+        f"WHERE {_ts('created_at')} > {_ts('updated_at')}",
+    )
+    assert dropped > 0  # the generator plants updated < created
+    assert clean.count() == data["tickets"].count() - dropped
     assert clean.where(F.col("resolution_hours") < 0).count() == 0
     assert clean.where(F.col("message_count") <= 0).count() == 0
 
 
-def test_mart_user_activity_cardinality(spark, data):
+def test_mart_user_activity_cardinality(spark, data, landing):
     clean = sessions_clean(replicate_sessions(data["sessions"]))
     mart = mart_user_activity(clean)
     groups = clean.select(
@@ -85,6 +153,10 @@ def test_mart_user_activity_cardinality(spark, data):
     # every group has a top device/page/action (clean rows always have arrays)
     assert mart.where(F.col("top_device").isNull()).count() == 0
     assert mart.where(F.col("top_page").isNull()).count() == 0
+    cols, oracle = _MARTS["user_activity"]
+    got = [tuple(r) for r in mart.select(*cols.split(", ")).collect()]
+    want = duckdb.sql(oracle.replace("{L}", landing)).fetchall()
+    assert compare_rows(got, want) is None, compare_rows(got, want)
 
 
 def test_mart_support_efficiency_counts(spark, data):
@@ -108,37 +180,8 @@ def test_quality_gates(spark, data):
         expect_nonempty(clean.where(F.lit(False)), "empty")
     with pytest.raises(QualityError):
         expect_check(clean, F.col("message_count") > 3, "too_strict")
-
-
-def test_replicate_recommendations_and_moderation(spark):
-    """The remaining two of the reference's five collections (S5):
-    PK dedup, ISO+Z parse, derived counts, rating CHECK domain."""
-    from hse_etl_ochirov_aldar_spark.plans.reference_pipelines import (
-        replicate_moderation,
-        replicate_recommendations,
-    )
-    from hse_etl_ochirov_aldar_spark.sources.datagen import (
-        gen_moderation_queue,
-        gen_user_recommendations,
-    )
-
-    recs_raw = gen_user_recommendations(spark, n_users=100)
-    recs = replicate_recommendations(recs_raw)
-    expect_unique_key(recs, ["user_id"])
-    rows = recs.collect()
-    assert len(rows) == 100
-    assert all(2 <= r.num_recommendations <= 8 for r in rows)
-    assert all(r.num_recommendations == len(r.recommended_products) for r in rows)
-    assert all(r.last_updated is not None for r in rows)  # F13 parse ok
-
-    mod_raw = gen_moderation_queue(spark, n=300)
-    mod = replicate_moderation(mod_raw)
-    expect_unique_key(mod, ["review_id"])
-    expect_check(mod, F.col("rating").between(1, 5), "rating_domain")
-    mrows = mod.collect()
-    assert len(mrows) == 300
-    assert all(0 <= len(r.flags) <= 2 for r in mrows)
-    assert all(r.submitted_at is not None for r in mrows)
+    with pytest.raises(QualityError):
+        expect_unique_key(data["sessions"], ["session_id"], "raw_sessions_pk")
 
 
 def test_mart_user_activity_null_arrays_match_duckdb(spark, tmp_path):
@@ -147,12 +190,6 @@ def test_mart_user_activity_null_arrays_match_duckdb(spark, tmp_path):
     top_page: the reference unnests each array on its own. Checked
     against the benchmark's DuckDB mart over the same export."""
     import json
-
-    import duckdb
-
-    from hse_etl_ochirov_aldar_spark.sources.connectors import read_mongo_export
-    from perfbench.workloads import compare_rows
-    from perfbench.workloads.medallion import _MARTS, SESSIONS
 
     land = tmp_path / "landing"
     (land / "user_sessions").mkdir(parents=True)

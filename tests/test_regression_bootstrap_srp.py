@@ -393,8 +393,8 @@ def test_cell_labels_arrow_bit_identical_to_expression(spark):
         ).collect()
     }
     arrow = {
-        r["vid"]: r["cluster_id"]
-        for r in cell_labels_frame(df, cents).collect()
+        r["vec_id"]: r["cluster_id"]
+        for r in cell_labels_frame(df, cents).select("vec_id", "cluster_id").collect()
     }
     assert arrow == expr
 

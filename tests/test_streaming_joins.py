@@ -1,4 +1,5 @@
-"""Stream-stream join and foreachBatch upsert sink."""
+"""foreachBatch upsert sinks (plain and versioned), native session
+windows over a stream, and the EWMA scorer's hot-key cost."""
 
 from __future__ import annotations
 
@@ -10,10 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hse_etl_ochirov_aldar_spark.sources.readers import load_table
-from hse_etl_ochirov_aldar_spark.streaming.joins import (
-    view_purchase_attribution,
-    write_stream_upsert,
-)
+from hse_etl_ochirov_aldar_spark.sources.sinks import upsert_keep_newest
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -45,47 +43,6 @@ def _events(spark, sf_dir):
     )
 
 
-def test_stream_stream_join_equals_batch(spark, sf_dir, tmpdir):
-    ev = _events(spark, sf_dir)
-    views_dir, purch_dir = f"{tmpdir}/views", f"{tmpdir}/purchases"
-    ev.where(F.col("event_type") == "view").write.parquet(views_dir)
-    ev.where(F.col("event_type") == "purchase").write.parquet(purch_dir)
-
-    vs = spark.readStream.schema(EVENT_SCHEMA).parquet(views_dir)
-    ps = spark.readStream.schema(EVENT_SCHEMA).parquet(purch_dir)
-    joined = view_purchase_attribution(vs, ps, window="1 hour")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("t_attr")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmpdir}/attr_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = {
-        (r.view_id, r.purchase_id) for r in spark.table("t_attr").collect()
-    }
-
-    v = ev.where(F.col("event_type") == "view")
-    p = ev.where(F.col("event_type") == "purchase")
-    batch = v.alias("v").join(
-        p.alias("p"),
-        (F.col("v.user_id") == F.col("p.user_id"))
-        & (F.col("p.ts") >= F.col("v.ts"))
-        & (F.col("p.ts") <= F.col("v.ts") + F.expr("INTERVAL 1 HOUR")),
-    )
-    expected = {
-        (r["event_id"], r["p_event_id"])
-        for r in batch.select(
-            F.col("v.event_id").alias("event_id"),
-            F.col("p.event_id").alias("p_event_id"),
-        ).collect()
-    }
-    assert streamed == expected
-    assert len(expected) > 0
-
-
 def test_foreach_batch_upsert_sink(spark, sf_dir, tmpdir):
     ev = _events(spark, sf_dir).limit(0)  # schema only; use synthetic rows
     src = f"{tmpdir}/up_src"
@@ -103,10 +60,17 @@ def test_foreach_batch_upsert_sink(spark, sf_dir, tmpdir):
         "user_id", F.col("event_id").alias("ver"), "ts"
     )
     target = f"{tmpdir}/up_target"
-    write_stream_upsert(
-        latest, target, f"{tmpdir}/up_ckpt", ["user_id"], "ver",
-        query_name="t_upsert",
+    q = (
+        latest.writeStream.foreachBatch(
+            lambda batch, _epoch: upsert_keep_newest(
+                spark, batch, target, ["user_id"], "ver"
+            )
+        )
+        .option("checkpointLocation", f"{tmpdir}/up_ckpt")
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
     rows = {(r.user_id, r.ver) for r in spark.read.parquet(target).collect()}
     assert rows == {(100, 2), (200, 3)}  # newest per user kept
 
@@ -174,9 +138,7 @@ def test_write_stream_versioned_upsert(spark, tmp_path):
     from hse_etl_ochirov_aldar_spark.sources.sinks import (
         current_version,
         read_versioned,
-    )
-    from hse_etl_ochirov_aldar_spark.streaming.joins import (
-        write_stream_versioned_upsert,
+        versioned_upsert,
     )
 
     src = str(tmp_path / "vsrc")
@@ -202,83 +164,26 @@ def test_write_stream_versioned_upsert(spark, tmp_path):
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
     root = str(tmp_path / "vtable_stream")
-    write_stream_versioned_upsert(
-        stream, root, str(tmp_path / "vckpt"), ["k"], "ver"
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda batch, _epoch: versioned_upsert(spark, batch, root, ["k"], "ver")
+        )
+        .option("checkpointLocation", str(tmp_path / "vckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
     assert current_version(spark, root) == 2
     got = {(r.k, r.ver, r.val) for r in read_versioned(spark, root).collect()}
     assert got == {("a", 2, 11), ("b", 1, 20), ("c", 1, 30)}
 
 
-def test_ewma_anomaly_stream_equals_batch_and_flags_spike(spark, tmp_path):
-    """The stateful EWMA scorer must (a) flag an injected spike after
-    warmup, (b) judge each value against PRE-update state, and (c)
-    produce identical output streaming (across micro-batches) and
-    batch — state carries across batch boundaries."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from hse_etl_ochirov_aldar_spark.streaming.anomaly import (
-        ewma_anomaly_stream,
-        ewma_scores_batch,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for uid in (1, 2):
-        for i in range(30):
-            # stable signal ~10 with tiny deterministic wiggle
-            v = 10.0 + ((i * 7) % 3 - 1) * 0.1
-            if uid == 1 and i == 20:
-                v = 50.0  # injected spike
-            rows.append((uid, i, t0 + dt.timedelta(minutes=i), v))
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema)
-    src = str(tmp_path / "ewma_src")
-    # two time-ordered files so the stream sees two micro-batches and
-    # state must survive the boundary
-    df.where("event_id < 15").coalesce(1).write.parquet(src)
-    df.where("event_id >= 15").coalesce(1).write.mode("append").parquet(src)
-
-    batch = {(r.user_id, str(r.ts), round(r.zscore, 6))
-             for r in ewma_scores_batch(df).collect()}
-    assert batch, "the spike must be flagged"
-    assert all(u == 1 for u, _, _ in batch)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        ewma_anomaly_stream(stream)
-        .writeStream.format("memory")
-        .queryName("t_ewma")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ewma_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = {(r.user_id, str(r.ts), round(r.zscore, 6))
-                for r in spark.table("t_ewma").collect()}
-    assert streamed == batch
-
-
 def test_ewma_hot_key_walltime(spark):
-    """Skew contract check (_fold docstring): one mega-key with 10^6
-    events must fold in bounded wall-time — the sequential per-key loop
-    is the documented scale ceiling, so pin its measured cost here. A
-    regression to per-row pandas boxing (or an accidental O(n^2) state
-    concat) blows the generous bound immediately."""
+    """Skew contract check (ewma_scores_batch docstring): one mega-key
+    with 10^6 events must fold in bounded wall-time — the sequential
+    per-key loop is the documented scale ceiling, so pin its measured
+    cost here. A regression to per-row pandas boxing (or an accidental
+    O(n^2) state concat) blows the generous bound immediately."""
     import time
 
     from pyspark.sql import functions as F
