@@ -23,6 +23,7 @@ importlib); the package reaches none of its own code that way.
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -166,6 +167,15 @@ class _Graph:
             else:
                 imports[alias.asname or alias.name] = (base, alias.name)
 
+    def _follow(self, target: str, attr: str | None, seen: set):
+        """What an import binding names: a module, or what ``attr``
+        resolves to in ``target``."""
+        if attr is None:
+            return (target, None) if target in self.trees else None
+        if f"{target}.{attr}" in self.trees:
+            return f"{target}.{attr}", None
+        return self.resolve(target, attr, seen)
+
     def resolve(self, mod: str, name: str, seen=None) -> tuple[str, str | None] | None:
         """``(module, def_name)`` for a definition, ``(module, None)`` for
         a module, None for anything outside the parsed sources."""
@@ -176,12 +186,7 @@ class _Graph:
         if name in self.defs[mod]:
             return mod, name
         if name in self.imports[mod]:
-            target, attr = self.imports[mod][name]
-            if attr is None:
-                return (target, None) if target in self.trees else None
-            if f"{target}.{attr}" in self.trees:
-                return f"{target}.{attr}", None
-            return self.resolve(target, attr, seen)
+            return self._follow(*self.imports[mod][name], seen)
         for star in self.stars[mod]:
             hit = self.resolve(star, name, seen)
             if hit:
@@ -194,28 +199,17 @@ class _Graph:
             for sub in ast.walk(node):
                 if isinstance(sub, (ast.Import, ast.ImportFrom)):
                     self._bind_import(mod, sub, local_imports, [])
-        out: set[tuple[str, str | None]] = set()
 
         def lookup(name: str):
             if name in local_imports:
-                target, attr = local_imports[name]
-                if attr is None:
-                    return (target, None) if target in self.trees else None
-                if f"{target}.{attr}" in self.trees:
-                    return f"{target}.{attr}", None
-                return self.resolve(target, attr)
+                return self._follow(*local_imports[name], set())
             return self.resolve(mod, name)
 
-        for name in local_imports:
-            hit = lookup(name)
-            if hit:
-                out.add(hit)
+        hits = [lookup(name) for name in local_imports]
         for node in nodes:
             for sub in ast.walk(node):
                 if isinstance(sub, ast.Name):
-                    hit = lookup(sub.id)
-                    if hit:
-                        out.add(hit)
+                    hits.append(lookup(sub.id))
                 elif isinstance(sub, ast.Attribute):
                     chain = []
                     cur: ast.AST = sub
@@ -228,11 +222,9 @@ class _Graph:
                     for attr in reversed(chain):
                         if not hit or hit[1] is not None:
                             break
-                        sub_mod = f"{hit[0]}.{attr}"
-                        hit = (sub_mod, None) if sub_mod in self.trees else self.resolve(hit[0], attr)
-                        if hit:
-                            out.add(hit)
-        return out
+                        hit = self._follow(hit[0], attr, set())
+                        hits.append(hit)
+        return {hit for hit in hits if hit}
 
     def reached(self) -> set[tuple[str, str]]:
         seen_defs: set[tuple[str, str]] = set()
@@ -271,8 +263,13 @@ class _Graph:
         return sorted(out)
 
 
+@functools.cache
+def _unreachable() -> tuple[str, ...]:
+    return tuple(_Graph().unreachable())
+
+
 def test_every_package_definition_is_reachable_from_an_entry_point():
-    dead = [d for d in _Graph().unreachable() if d not in ALLOWLIST | PENDING]
+    dead = [d for d in _unreachable() if d not in ALLOWLIST | PENDING]
     assert not dead, (
         "reached only by tests/tools (delete them with their tests, or "
         "allowlist with a reason):\n  " + "\n  ".join(dead)
@@ -280,6 +277,5 @@ def test_every_package_definition_is_reachable_from_an_entry_point():
 
 
 def test_allowlists_name_only_live_unreachable_definitions():
-    unreachable = set(_Graph().unreachable())
-    stale = sorted((set(ALLOWLIST) | set(PENDING)) - unreachable)
+    stale = sorted((set(ALLOWLIST) | set(PENDING)) - set(_unreachable()))
     assert not stale, f"listed but reachable or gone: {stale}"
