@@ -3,7 +3,7 @@ real entry point.
 
 The roots are the catalog (the module-level ``QUERIES``/``ORACLES``
 registries in ``queries/__init__.py``), the CLI (``__main__.py``), the
-driver contract (``__spark_entry__.py``), the ``perfbench/`` harness
+entry contract (``__spark_entry__.py``), the ``perfbench/`` harness
 and its workloads, and ``bench.py``. Tests, ``scale_check.py``,
 ``tools/`` and docstrings are not roots: code that only they reach is
 dead weight and gets deleted (with its tests), not kept alive by them.
