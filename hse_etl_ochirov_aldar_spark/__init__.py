@@ -11,9 +11,8 @@ semantics (multimodal decode plumbing).
 Layout
 ------
 - ``session``   : tuned SparkSession builder (local test / cluster profiles)
-- ``sources``   : readers (parquet tables, CSV/JSON/XML payloads, Mongo
-                  exports), sinks (overwrite / partitioned / keep-newest
-                  upsert)
+- ``sources``   : readers (parquet tables, Mongo exports), sinks
+                  (overwrite / partitioned / keep-newest upsert)
 - ``functions`` : scalar expression library (multi-format timestamp parse,
                   decimal-comma normalization, text analysis, similarity)
 - ``operators`` : relational operators (percentile trim, dedup families,

@@ -11,8 +11,7 @@ tombstone row surviving as data.
 Scale shape (100 TB): one window over the CHANGE FEED keyed on the
 business key (the feed is deltas — orders of magnitude smaller than
 the snapshot), then ONE full-outer equi-join snapshot <-> newest-change
-on the same key. The snapshot shuffles once; with a bucketed snapshot
-(sources/sinks.write_bucketed) even that shuffle disappears. No
+on the same key. The snapshot shuffles once. No
 row-at-a-time merge loop, no driver state.
 """
 
@@ -78,71 +77,3 @@ def cdc_apply(
         for c in payload
     ]
     return joined.where(survives).select(*out_cols)
-
-
-def cdc_apply_versioned(
-    spark,
-    root: str,
-    batch: DataFrame,
-    key_cols: Sequence[str],
-    ver_col: str = "ver",
-    op_col: str = "op",
-    epoch: int | None = None,
-    keep_versions: int = 2,
-) -> int | None:
-    """EXACTLY-ONCE CDC batch apply into a versioned snapshot (the
-    sources/sinks commit protocol, versioned form): the batch epoch
-    rides INSIDE the atomic commit marker, so a replayed batch — whose
-    'I' of a key a later batch deleted would otherwise resurrect it —
-    is a committed no-op. The first batch bootstraps an empty snapshot
-    from the batch schema minus the CDC columns. Returns the committed
-    version, or None when ``epoch`` is already committed (replay)."""
-    from ..sources.sinks import _commit_versioned
-
-    out_cols = [c for c in batch.columns if c not in (ver_col, op_col)]
-
-    def apply(snap: DataFrame | None) -> DataFrame:
-        if snap is None:
-            snap = batch.select(*out_cols).limit(0)
-        return cdc_apply(snap, batch, list(key_cols), ver_col, op_col)
-
-    return _commit_versioned(
-        spark, root, apply, epoch=epoch, keep_versions=keep_versions
-    )
-
-
-def streaming_cdc_apply_versioned(
-    stream: DataFrame,
-    root: str,
-    checkpoint: str,
-    key_cols: Sequence[str],
-    ver_col: str = "ver",
-    op_col: str = "op",
-    trigger_available_now: bool = True,
-):
-    """Maintain a snapshot from a CDC change STREAM, exactly once: each
-    micro-batch applies through :func:`cdc_apply_versioned` with its
-    epoch recorded atomically with the snapshot publication. Readers
-    use sinks.read_versioned(root) and never observe a partial apply;
-    replays (same epoch id) are no-ops with no residual crash window.
-    Returns the StreamingQuery."""
-
-    def _apply(batch: DataFrame, epoch: int) -> None:
-        cdc_apply_versioned(
-            batch.sparkSession,
-            root,
-            batch,
-            list(key_cols),
-            ver_col,
-            op_col,
-            epoch=epoch,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

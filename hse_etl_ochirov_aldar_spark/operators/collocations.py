@@ -40,7 +40,7 @@ vocabulary-bounded at any corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import whitespace_tokens

@@ -8,17 +8,15 @@ pipelines — the canonical Spark pattern for media feature extraction:
       -> mapInPandas(decode_and_extract, schema)   # per-batch Python
       -> typed feature columns (JVM side again)
 
-Decoder status: binary PPM (P6) decode and nearest-neighbor resize are
-REAL — numpy-only, fully functional in this container (``decode_ppm``,
-``ppm_decoder``, ``resize_ppm``), as is 8-bit mono PCM WAV
+Decoder status: binary PPM (P6) decode is REAL — numpy-only, no codec
+library needed (``decode_ppm``, ``ppm_decoder``), as is 8-bit mono PCM WAV
 (``decode_wav``). Codec-library formats dispatch to OPTIONAL extras
 (r9): ``decode_image`` runs through the ``pil_decoder`` adapter when
 pillow is importable and ``decode_audio`` through ``soundfile_decoder``
 when soundfile is — each raises a documented NotImplementedError when
 its library is absent (as in this container), and the adapters stay
 injectable so contract tests prove the seam with stub modules.
-``fake_decode_features`` remains the deterministic plumbing stand-in;
-video frame decode (ffmpeg/PyAV) is still a stub.
+``fake_decode_features`` remains the deterministic plumbing stand-in.
 
 Scale notes: payloads never pass through Python row-by-row; Arrow moves
 columnar batches. ``spark.sql.execution.arrow.maxRecordsPerBatch``
@@ -33,7 +31,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_FEATURES_SCHEMA = (
     "media_id LONG, kind STRING, n_bytes INT, checksum LONG, "
@@ -146,19 +143,6 @@ def ppm_decoder(payload: bytes, kind: str) -> dict:
         "height": h,
         "duration_s": None,
     }
-
-
-def resize_ppm(payload: bytes, target_width: int, target_height: int) -> bytes:
-    """REAL nearest-neighbor resize of a P6 payload via numpy index
-    selection; returns a valid P6 payload at the target dimensions."""
-    import numpy as np
-
-    w, h, arr = decode_ppm(bytes(payload))
-    rows = (np.arange(target_height) * h) // target_height
-    cols = (np.arange(target_width) * w) // target_width
-    out = arr[rows][:, cols]
-    header = f"P6\n{target_width} {target_height}\n255\n".encode()
-    return header + out.tobytes()
 
 
 def decode_wav(payload: bytes):
@@ -373,166 +357,3 @@ def extract_media_features(media: DataFrame, decoder=None) -> DataFrame:
             yield out
 
     return media.mapInPandas(process, MEDIA_FEATURES_SCHEMA)
-
-
-def documents_as_media(docs: DataFrame, kind: str = "image") -> DataFrame:
-    """Test fixture builder: wraps document text bytes as fake media
-    payloads (deterministic), preserving the real media-table shape."""
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.encode(F.col("text"), "utf-8").alias("payload"),
-    )
-
-
-RESIZED_SCHEMA = (
-    "media_id LONG, kind STRING, width INT, height INT, payload BINARY"
-)
-
-
-def resize_images(
-    media: DataFrame,
-    target_width: int = 224,
-    target_height: int = 224,
-    resizer=None,
-) -> DataFrame:
-    """Image resize as a mapInPandas stage: (media_id, kind, payload) ->
-    resized payload + new dims. ``resizer`` is the swappable pixel seam
-    ``(payload, tw, th) -> bytes`` — pass ``resize_ppm`` for the REAL
-    numpy nearest-neighbor path on P6 payloads (works in this
-    container), or a PIL `Image.resize` adapter for compressed formats.
-    Defaults to a deterministic fake (payload truncated/padded to a
-    size proportional to the target area) so plumbing tests need no
-    decodable payloads. Output stays a binary column so further stages
-    chain.
-    """
-    fake_len = max(16, (target_width * target_height) // 64)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if resizer is not None:
-                resized = [
-                    resizer(bytes(p), target_width, target_height)
-                    for p in pdf["payload"]
-                ]
-            else:
-                resized = [
-                    bytes(p[:fake_len]).ljust(fake_len, b"\0")
-                    for p in pdf["payload"]
-                ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "kind": pdf["kind"],
-                    "width": pd.array([target_width] * len(pdf), dtype="Int32"),
-                    "height": pd.array([target_height] * len(pdf), dtype="Int32"),
-                    "payload": resized,
-                }
-            )
-
-    return media.mapInPandas(process, RESIZED_SCHEMA)
-
-
-def av_frame_decoder(av_module=None):
-    """Adapter from a PyAV-shaped module (``open(BytesIO)`` -> container
-    whose ``decode(video=0)`` yields frames with ``.time`` and
-    ``.to_ndarray()``) to the frame-decode contract
-    ``(payload, frame_ts) -> bytes`` — the video twin of pil_decoder /
-    soundfile_decoder, same injectable-module convention (r9): the
-    contract test drops in a stub container, proving a real PyAV
-    decoder slots into sample_frames' mapInPandas stage untouched;
-    passing None imports the real ``av`` or raises ImportError.
-
-    Seeking: the adapter decodes the stream and returns the LAST frame
-    at or before ``frame_ts`` (presentation-time semantics). A
-    production body would ``container.seek`` to the nearest keyframe
-    first; the stub contract only pins payload-in/bytes-out and the
-    at-or-before rule.
-    """
-    import io
-
-    if av_module is None:
-        av_module = _try_import("av")
-        if av_module is None:
-            raise ImportError(
-                "av_frame_decoder() with no module requires PyAV; "
-                "install it or inject a compatible module explicitly"
-            )
-
-    def decode(payload: bytes, frame_ts: float) -> bytes:
-        container = av_module.open(io.BytesIO(bytes(payload)))
-        best = None
-        for frame in container.decode(video=0):
-            if frame.time is not None and frame.time <= frame_ts:
-                best = frame
-            else:
-                break
-        if best is None:
-            return b""
-        return best.to_ndarray().tobytes()
-
-    return decode
-
-
-FRAME_SCHEMA = "media_id LONG, frame_ts DOUBLE, frame_bytes BINARY"
-
-
-def sample_frames(
-    media: DataFrame, n_frames: int = 4, frame_decoder=None
-) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame offset.
-
-    The frame OFFSETS and fan-out are pure DataFrame plumbing (explode
-    of an offset sequence — J3, JVM-side); only the frame decode
-    touches Python. ``frame_decoder`` is the swappable seam — any
-    picklable ``(payload, frame_ts) -> bytes`` (see ``av_frame_decoder``
-    for the PyAV adapter); it runs inside one Arrow mapInPandas stage
-    over the exploded frame table. Defaults to a deterministic
-    byte-slice stub so plumbing tests need no decodable payloads.
-    Duration comes from the feature extractor.
-    """
-    feats = extract_media_features(media).where(F.col("kind") == "video")
-    with_offsets = feats.join(
-        media.select("media_id", "payload"), "media_id"
-    ).select(
-        "media_id",
-        "duration_s",
-        "payload",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_frames - 1)),
-                lambda i: F.round(
-                    i * F.col("duration_s") / F.lit(n_frames), 2
-                ),
-            )
-        ).alias("frame_ts"),
-    )
-    if frame_decoder is None:
-        # stubbed per-frame decode: a deterministic 32-byte slice keyed
-        # by the frame timestamp
-        return with_offsets.select(
-            "media_id",
-            "frame_ts",
-            F.substring(
-                "payload",
-                F.lit(1) + (F.col("frame_ts") * 10).cast("int") % 32,
-                32,
-            ).alias("frame_bytes"),
-        )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "frame_ts": pdf["frame_ts"].astype("float64"),
-                    "frame_bytes": [
-                        frame_decoder(p, t)
-                        for p, t in zip(pdf["payload"], pdf["frame_ts"])
-                    ],
-                }
-            )
-
-    return with_offsets.select(
-        "media_id", "frame_ts", "payload"
-    ).mapInPandas(process, FRAME_SCHEMA)

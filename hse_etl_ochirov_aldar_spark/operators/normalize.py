@@ -235,11 +235,10 @@ def assemble_trajectories(
 ) -> DataFrame:
     """Assemble per-group ordered item sequences — the SFT/trajectory
     construction step of a training-data pipeline (events → dialog
-    turns → one training example per conversation), and the batch twin
-    of what sessionize does with state. Returns one row per group:
-    ``group_cols`` + ``n_items`` BIGINT + ``trajectory`` (items joined
-    by ``sep`` in ``order_cols`` order, ties broken by the item itself
-    so the output is a pure function of the data).
+    turns → one training example per conversation). Returns one row
+    per group: ``group_cols`` + ``n_items`` BIGINT + ``trajectory``
+    (items joined by ``sep`` in ``order_cols`` order, ties broken by
+    the item itself so the output is a pure function of the data).
 
     Scale shape (100 TB): ONE shuffle on the group key; ordering is
     row-local array_sort over each group's collected items — no global

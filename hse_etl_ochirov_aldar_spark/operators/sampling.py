@@ -647,29 +647,6 @@ def token_budget_mixture_sample(
     )
 
 
-def quota_sample_by(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    quotas: DataFrame,
-    quota_col: str = "quota",
-    skew_safe: bool | None = None,
-) -> DataFrame:
-    """Per-group caps from a CONFIG TABLE: ``quotas`` carries one row
-    per group (``group_col``, ``quota_col``) — the editable mixture
-    spec of a curation pipeline ("en: 3M docs, de: 800k, code: 2M") —
-    and each group contributes its md5-hash-order prefix up to its own
-    cap. The join-strategy tail shared with
-    :func:`temperature_mixture_sample`: quotas attach by equi-join
-    (no driver state, unbounded group count), groups absent from the
-    spec contribute nothing, and membership is a pure function of
-    (key, spec) — recomputable by any engine."""
-    q = quotas.select(
-        group_col, F.col(quota_col).cast("long").alias("__quota")
-    ).where(F.col("__quota") > 0)
-    return _quota_join_sample(df, group_col, key_col, q, skew_safe=skew_safe)
-
-
 def quota_sample(
     df: DataFrame,
     group_col: str,

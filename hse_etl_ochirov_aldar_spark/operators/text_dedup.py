@@ -821,8 +821,6 @@ def incremental_minhash_dedup(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int = 1024,
-    corpus_keys: DataFrame | None = None,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """NEAR-duplicate dedup of an ingest batch against a large corpus:
     drop batch docs whose n-gram Jaccard vs ANY corpus doc reaches
@@ -841,19 +839,11 @@ def incremental_minhash_dedup(
     keys — BROADCASTS to semi-join the corpus's banded stream, so only
     colliding corpus docs survive the probe. Their ids (candidate-
     bounded) broadcast back to semi-join the corpus for shingle sets,
-    and Jaccard verification touches candidate pairs only. In steady
-    state the corpus's banded keys are a materialized artifact
-    maintained incrementally (append survivors' keys each batch), so
-    per-batch cost is one corpus-keys scan, not a re-signature of the
-    corpus; pass the materialized frame as ``corpus_keys`` to skip the
-    signature step.
+    and Jaccard verification touches candidate pairs only.
 
     Caching: four batch-bounded intermediates are ``persist()``-ed —
     banded keys, candidate pairs, batch shingle sets, survivors (see
-    inline comments). Long-running callers that invoke this per batch
-    (the streaming ingest wrapper) should pass ``persisted_out=[]`` and
-    ``unpersist()`` its contents after their terminal action, or cached
-    blocks accumulate for the query lifetime.
+    inline comments).
     """
     # Spread the batch ONCE at entry (no-op at real scale): every
     # downstream stage — banding, the shingle verify, and above all the
@@ -867,21 +857,13 @@ def incremental_minhash_dedup(
     # verify AND both sides of the within-batch verify below — persist
     # them once instead of re-shingling the batch per consumer
     bsh = _shingle_sets(new_batch, id_col, text_col, shingle_n).persist()
-    if persisted_out is not None:
-        persisted_out.append(bsh)
     # the batch's banded keys feed BOTH the broadcast probe and the
     # candidate join — batch-bounded, so persist them like `cand` and
     # `fresh` below rather than re-running the signature fold per
     # consumer (r12)
     bkeys = _band_keys(bsh, num_hashes, bands).persist()
-    if persisted_out is not None:
-        persisted_out.append(bkeys)
-    ckeys = (
-        corpus_keys
-        if corpus_keys is not None
-        else banded_minhash_keys(
-            corpus, id_col, text_col, num_hashes, bands, shingle_n
-        )
+    ckeys = banded_minhash_keys(
+        corpus, id_col, text_col, num_hashes, bands, shingle_n
     )
     probe = bkeys.select("band", "bucket").distinct()
     chits = ckeys.join(F.broadcast(probe), ["band", "bucket"], "left_semi")
@@ -898,8 +880,6 @@ def incremental_minhash_dedup(
         .distinct()
         .persist()
     )
-    if persisted_out is not None:
-        persisted_out.append(cand)
     matched = cand.select(F.col("id_b").alias(id_col)).distinct()
     # spread the corpus SCAN (file leaf), not the joined frame: the
     # probe only trusts all-file-leaf plans, and `matched` rides on the
@@ -929,8 +909,6 @@ def incremental_minhash_dedup(
         .distinct()
     )
     fresh = new_batch.join(F.broadcast(dup_ids), id_col, "left_anti").persist()
-    if persisted_out is not None:
-        persisted_out.append(fresh)
     # Within-batch near-dedup of the survivors. Equivalent to
     # minhash_dedup(fresh, ...) — banded keys and shingle sets are
     # deterministic per-doc functions, so restricting the PERSISTED
@@ -1020,128 +998,6 @@ def duplicate_span_stats(
             F.expr("CAST(n_dup_spans * 1000000 DIV n_spans AS BIGINT)"),
         )
     )
-
-
-# --- steady-state ingest with materialized corpus keys ----------------------
-
-
-def relation_scan_count(df: DataFrame, path: str) -> int:
-    """How many scan leaves of ``df``'s ANALYZED logical plan read the
-    dataset rooted at ``path``. The analyzed plan (pre cache
-    substitution, pre pushdown) preserves full lineage, so this counts
-    STRUCTURAL references — the honest form of "does this plan re-read
-    the corpus text", independent of whether a cache absorbed the scan
-    at execution time."""
-    jplan = df._jdf.queryExecution().analyzed()
-    leaves = jplan.collectLeaves()
-    n = 0
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        try:
-            roots = leaf.relation().location().rootPaths()
-        except Exception:  # non-file leaf (LocalRelation, stream, ...)
-            continue
-        for j in range(roots.size()):
-            p = roots.apply(j).toUri().getPath()
-            if p.rstrip("/") == path.rstrip("/"):
-                n += 1
-                break
-    return n
-
-
-def minhash_ingest_step(
-    batch: DataFrame,
-    corpus_path: str,
-    keys_path: str,
-    threshold: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_n: int = 3,
-    max_bucket_size: int = 1024,
-) -> dict:
-    """One steady-state near-dup ingest step over MATERIALIZED corpus
-    keys: dedup ``batch`` against the corpus using the banded-key table
-    at ``keys_path`` (never re-signaturing corpus text), then append
-    the survivors' text to ``corpus_path`` and their keys to
-    ``keys_path`` so the next step stays O(batch) signature work.
-
-    This is the pipeline form of incremental_minhash_dedup's
-    ``corpus_keys`` seam (the 400k-vs-1M scale check showed corpus
-    re-signature dominating at 64.6s without it). Corpus text is read
-    exactly once per step — the candidate-bounded Jaccard verification
-    semi-join — and that count is returned for callers/tests to assert
-    (``corpus_text_scans``).
-
-    Bootstrap/migration: no corpus -> within-batch dedup only; corpus
-    without keys (adopting this seam over an existing corpus) -> one
-    full key backfill, subsequent steps are incremental.
-
-    Both appends happen before the caller's checkpoint commits; on an
-    at-least-once replay the step is re-run against the already-updated
-    corpus, so replayed docs dedup against themselves (same contract as
-    the keyless streaming path). A crash BETWEEN the two appends leaves
-    keys under-covering by one batch — strictly under-dedup (a near-dup
-    of that batch may survive), never corruption; re-running the step
-    repairs nothing retroactively but resumes exact forward behavior.
-
-    Returns ``{"n_kept": int, "corpus_text_scans": int}``.
-    """
-    spark = batch.sparkSession
-    from ..sources.sinks import _hadoop_fs
-
-    lshkw = dict(num_hashes=num_hashes, bands=bands, shingle_n=shingle_n)
-    fs, jcorpus = _hadoop_fs(spark, corpus_path)
-    _, jkeys = _hadoop_fs(spark, keys_path)
-    persisted: list = []
-    if fs.exists(jcorpus):
-        corpus = spark.read.parquet(corpus_path).select(*batch.columns)
-        if fs.exists(jkeys):
-            ckeys = spark.read.parquet(keys_path)
-        else:  # adopt the seam over a pre-existing corpus: backfill once
-            banded_minhash_keys(corpus, id_col, text_col, **lshkw).write.parquet(
-                keys_path
-            )
-            ckeys = spark.read.parquet(keys_path)
-        kept = incremental_minhash_dedup(
-            batch,
-            corpus,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
-            max_bucket_size=max_bucket_size,
-            corpus_keys=ckeys,
-            persisted_out=persisted,
-            **lshkw,
-        )
-    else:
-        kept = minhash_dedup(
-            batch,
-            id_col,
-            text_col,
-            threshold=threshold,
-            max_bucket_size=max_bucket_size,
-            **lshkw,
-        )
-    scans = relation_scan_count(kept, corpus_path)
-    kept = kept.persist()
-    persisted.append(kept)
-    try:
-        # count BEFORE the corpus append (r12): appending to
-        # corpus_path fires recacheByPath on the cached ``kept`` plan
-        # (it reads that path), so a count afterwards re-evaluates
-        # against the just-updated corpus and the batch self-dedups —
-        # n_kept reported 0 for every non-bootstrap batch
-        n_kept = kept.count()
-        kept.write.mode("append").parquet(corpus_path)
-        banded_minhash_keys(kept, id_col, text_col, **lshkw).write.mode(
-            "append"
-        ).parquet(keys_path)
-    finally:
-        for d in persisted:
-            d.unpersist()
-    return {"n_kept": n_kept, "corpus_text_scans": scans}
 
 
 def minhash_dedup_keep_best(

@@ -5,8 +5,6 @@ features, behavioral analytics, and the ANN family.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -22,32 +20,13 @@ from ..functions.exact import (
     units,
     units_sum,
 )
-from ..functions.text import (
-    BPE_TOKEN_REGEX,
-    STOPWORDS,
-    bpe_token_count,
-    char_fingerprint,
-    predicted_lang,
-    stopword_count,
-    token_count,
-    whitespace_tokens,
-)
-from ..operators.aggregates import conditional_count, daily_avg, mode_by_group
-from ..operators.dedup import dedup_keep_first
-from ..operators.percentile import percentile_trim
+from ..functions.text import token_count, whitespace_tokens
+from ..operators.aggregates import conditional_count, daily_avg
 from ..operators.similarity import brute_force_topk, ivf_topk
-from ..operators.text_dedup import (
-    exact_dedup,
-    minhash_dedup,
-    minhash_lsh_candidates,
-    ngram_jaccard_pairs,
-    segment_boilerplate_removal,
-    simhash_near_pairs,
-)
-from ..operators.topk import topk_extremes
+from ..operators.text_dedup import minhash_lsh_candidates, ngram_jaccard_pairs
 from ..sources.readers import load_table
 
-from ._base import (  # noqa: F401  (shared helpers re-used across modules)
+from ._base import (
     _DECONTAM_CLEAN_PROMPTS,
     _EVENT_KINDS,
     _ORACLE_DAILY_SELECT,
@@ -2821,10 +2800,9 @@ GROUP BY 1, 2, 3
 
 def q_ewma_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online per-user EWMA z-score anomaly screen, batch flavor
-    (streaming/anomaly.ewma_scores_batch — the applyInPandasWithState
-    stream twin is equivalence-pinned in the streaming suite): each
-    value is judged against the exponentially weighted mean/variance of
-    its user's PAST values only (warmup 5, |z| >= 3), the constant-state
+    (streaming/anomaly.ewma_scores_batch): each value is judged against
+    the exponentially weighted mean/variance of its user's PAST values
+    only (warmup 5, |z| >= 3), the constant-state
     monitoring fold that windowed stddev cannot match at stream scale.
 
     Oracle-checkable because the fold is a sequential chain of IEEE

@@ -5,8 +5,6 @@ training-data prep (SURVEY Q1-Q10 spine).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,34 +28,27 @@ from ..functions.text import (
     predicted_lang,
     stopword_count,
     token_count,
-    whitespace_tokens,
 )
-from ..operators.aggregates import conditional_count, daily_avg, mode_by_group
+from ..operators.aggregates import conditional_count, daily_avg
 from ..operators.dedup import dedup_keep_first
 from ..operators.percentile import percentile_trim
-from ..operators.similarity import brute_force_topk, ivf_topk
 from ..operators.text_dedup import (
     exact_dedup,
     minhash_dedup,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
-    segment_boilerplate_removal,
     simhash_near_pairs,
 )
 from ..operators.topk import topk_extremes
 from ..sources.readers import load_table
 
-from ._base import (  # noqa: F401  (shared helpers re-used across modules)
-    _DECONTAM_CLEAN_PROMPTS,
+from ._base import (
     _EVENT_KINDS,
     _ORACLE_DAILY_SELECT,
-    _SHINGLE8,
     _ORACLE_EVENTS_BASE,
     _docs_with_near_dups,
     _events_base,
-    _kmeans_label_ctes,
     _oracle_hash32,
-    embeddings_centroids,
 )
 
 # ---------------------------------------------------------------------------

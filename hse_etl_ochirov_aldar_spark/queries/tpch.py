@@ -4,60 +4,17 @@ derivatives), all money math in exact integer units.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.cleaning import month_of
 from ..functions.exact import (
     as_value,
-    avg_units_expr,
-    oracle_avg_units,
-    oracle_avg_value,
-    oracle_sum_value,
     oracle_units,
     oracle_units_sum,
     units,
     units_sum,
 )
-from ..functions.text import (
-    BPE_TOKEN_REGEX,
-    STOPWORDS,
-    bpe_token_count,
-    char_fingerprint,
-    predicted_lang,
-    stopword_count,
-    token_count,
-    whitespace_tokens,
-)
-from ..operators.aggregates import conditional_count, daily_avg, mode_by_group
-from ..operators.dedup import dedup_keep_first
-from ..operators.percentile import percentile_trim
-from ..operators.similarity import brute_force_topk, ivf_topk
-from ..operators.text_dedup import (
-    exact_dedup,
-    minhash_dedup,
-    minhash_lsh_candidates,
-    ngram_jaccard_pairs,
-    segment_boilerplate_removal,
-    simhash_near_pairs,
-)
-from ..operators.topk import topk_extremes
 from ..sources.readers import load_table
-
-from ._base import (  # noqa: F401  (shared helpers re-used across modules)
-    _DECONTAM_CLEAN_PROMPTS,
-    _EVENT_KINDS,
-    _ORACLE_DAILY_SELECT,
-    _SHINGLE8,
-    _ORACLE_EVENTS_BASE,
-    _docs_with_near_dups,
-    _events_base,
-    _kmeans_label_ctes,
-    _oracle_hash32,
-    embeddings_centroids,
-)
 
 # ---------------------------------------------------------------------------
 # TPC-H-class analytic shapes (Q3/Q4/Q10/Q18 re-hosted on the testdata).

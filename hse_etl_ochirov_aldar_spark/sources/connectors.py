@@ -1,193 +1,21 @@
-"""External-source connectors (SURVEY §2.1 S2/S5 — the reference's live
-Postgres and MongoDB reads).
+"""Mongo-source reads (SURVEY §2.1 S5 — the reference's live MongoDB
+reads).
 
-Reference behavior being mapped:
+Reference behavior being mapped: Mongo collection scans via full
+``find()`` plus aggregation-pipeline dedup at source
+(final-module-3/airflow/dags/mongo_to_postgres_replication.py:35-39,
+118,149,185).
 
-- Postgres table reads via PostgresHook cursors, whole table through
-  one connection (HW-2/airflow/dags/sources_to_linear.py:22-33).
-- Mongo collection scans via full ``find()`` plus aggregation-pipeline
-  dedup at source
-  (final-module-3/airflow/dags/mongo_to_postgres_replication.py:35-39,
-  118,149,185).
-
-Spark-first mapping: the built-in JDBC datasource and the Mongo Spark
-connector, both configured for PARALLEL reads — the part the reference's
-single-cursor loop fundamentally cannot do. The sandbox has neither a
-Postgres JDBC driver jar nor the Mongo connector package, so the
-``read_*`` entry points probe availability and raise a clear error
-naming the missing artifact; the option-building and partition-planning
-logic (where the 100 TB correctness lives) is pure and fully unit
-tested. The JDBC path IS executed for real against embedded Apache
-Derby (bundled with Spark): tests/test_connectors.py round-trips a
-table through the JDBC sink and reads it back with bounds-sharded,
-predicate-sharded, and filter-pushdown reads. The parquet stand-ins
-behind plans/reference_pipelines.py's ``load_table`` seam remain the
-execution path for reference pipelines.
-
-Scale notes (what makes a JDBC read survive a big table):
-
-- ``partitionColumn`` + bounds + ``numPartitions`` shard the scan into
-  range-predicate queries executed by separate tasks. Without them the
-  whole table streams through ONE task.
-- Bounds need not be tight — rows outside them still load (Spark's
-  first/last stride predicates are open-ended) — but skewed bounds skew
-  tasks.
-- For non-numeric sharding (e.g. by month), explicit ``predicates``
-  give one task per predicate; they must be disjoint and covering or
-  rows duplicate/vanish (``month_predicates`` below generates them
-  correctly).
-- ``fetchsize`` bounds driver-side row buffering per round trip
-  (Postgres default streams everything without it).
+Spark mapping: a ``mongoexport`` JSON-lines dump read with a declared
+schema (:func:`read_mongo_export`), with the reference's aggregation
+pipeline executed as DataFrame operations
+(:func:`apply_mongo_pipeline`). The reference pipelines and the
+benchmark's medallion workload read their landing data this way.
 """
 
 from __future__ import annotations
 
-from datetime import date
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-def jdbc_read_options(
-    url: str,
-    table: str,
-    user: str,
-    password: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int | None = None,
-    fetchsize: int = 10_000,
-) -> dict[str, str]:
-    """Option map for a parallel JDBC read (pure; unit-testable without
-    a driver jar). Partitioning options are all-or-nothing: Spark
-    requires column+bounds+count together."""
-    opts = {
-        "url": url,
-        "dbtable": table,
-        "user": user,
-        "password": password,
-        "fetchsize": str(fetchsize),
-    }
-    part = (partition_column, lower_bound, upper_bound, num_partitions)
-    if any(p is not None for p in part):
-        if any(p is None for p in part):
-            raise ValueError(
-                "partition_column, lower_bound, upper_bound, num_partitions "
-                "must be provided together"
-            )
-        if upper_bound <= lower_bound:
-            raise ValueError("upper_bound must exceed lower_bound")
-        opts.update(
-            {
-                "partitionColumn": partition_column,
-                "lowerBound": str(lower_bound),
-                "upperBound": str(upper_bound),
-                "numPartitions": str(num_partitions),
-            }
-        )
-    return opts
-
-
-def month_predicates(
-    ts_col: str, start: date, end_exclusive: date
-) -> list[str]:
-    """Disjoint, covering month-range predicates for predicate-sharded
-    JDBC reads (one task per month) — the reference's monthly partition
-    layout (final-module-3/init/init.sql:94-107) turned into a read
-    plan. Half-open ranges: no row is read twice, none is skipped, and
-    each predicate is sargable against a ``ts_col`` index."""
-    if end_exclusive <= start:
-        raise ValueError("end_exclusive must be after start")
-    preds = []
-    y, m = start.year, start.month
-    cur = date(y, m, 1)
-    while cur < end_exclusive:
-        ny, nm = (cur.year + 1, 1) if cur.month == 12 else (cur.year, cur.month + 1)
-        nxt = date(ny, nm, 1)
-        preds.append(
-            f"{ts_col} >= '{cur.isoformat()}' AND {ts_col} < '{nxt.isoformat()}'"
-        )
-        cur = nxt
-    return preds
-
-
-def read_jdbc_table(
-    spark: SparkSession,
-    options: dict[str, str],
-    predicates: list[str] | None = None,
-) -> DataFrame:
-    """S2: parallel JDBC table read from an option map built by
-    ``jdbc_read_options``. With ``predicates``, each predicate becomes
-    one partition (mutually exclusive with the bounds-based options).
-
-    Raises a RuntimeError naming the missing driver when the JVM has no
-    JDBC driver for the URL (this sandbox) instead of a ClassNotFound
-    stack — the execution path in tests is the parquet stand-in seam
-    (plans/reference_pipelines.load_table).
-    """
-    reader = spark.read.format("jdbc")
-    if predicates:
-        for k in ("partitionColumn", "lowerBound", "upperBound", "numPartitions"):
-            if k in options:
-                raise ValueError(
-                    "predicates and bounds-based partitioning are mutually "
-                    "exclusive"
-                )
-        # the public predicate API lives on DataFrameReader.jdbc()
-        try:
-            return spark.read.jdbc(
-                url=options["url"],
-                table=options["dbtable"],
-                predicates=list(predicates),
-                properties={
-                    k: v
-                    for k, v in options.items()
-                    if k not in ("url", "dbtable")
-                },
-            )
-        except Exception as exc:  # driver probe below for a clear error
-            _raise_if_missing_driver(exc, options["url"])
-            raise
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as exc:
-        _raise_if_missing_driver(exc, options["url"])
-        raise
-
-
-def _raise_if_missing_driver(exc: Exception, url: str) -> None:
-    msg = str(exc)
-    if "No suitable driver" in msg or "ClassNotFoundException" in msg:
-        raise RuntimeError(
-            f"no JDBC driver on the classpath for {url!r}: add the driver "
-            "jar (e.g. org.postgresql:postgresql) via spark.jars.packages"
-        ) from exc
-
-
-def mongo_read_options(
-    uri: str,
-    database: str,
-    collection: str,
-    pipeline: list[dict] | None = None,
-) -> dict[str, str]:
-    """Option map for the Mongo Spark connector (format 'mongodb').
-    ``pipeline`` pushes an aggregation stage INTO mongod — the
-    reference's dedup-at-source $sort/$group/$first pipeline
-    (mongo_to_postgres_replication.py:35-39) runs server-side, so the
-    duplicate rows never cross the wire. The connector shards the scan
-    by collection partitions server-side (SamplePartitioner default)."""
-    import json
-
-    opts = {
-        "connection.uri": uri,
-        "database": database,
-        "collection": collection,
-    }
-    if pipeline is not None:
-        opts["aggregation.pipeline"] = json.dumps(pipeline)
-    return opts
 
 
 def apply_mongo_pipeline(df: DataFrame, pipeline: list[dict]) -> DataFrame:
@@ -196,13 +24,10 @@ def apply_mongo_pipeline(df: DataFrame, pipeline: list[dict]) -> DataFrame:
     ``$first`` — dedup at source — plus ``$match``/``$project``/
     ``$limit``) as DataFrame operations.
 
-    Two jobs: (a) the executable twin that lets tests run the EXACT
-    pipeline dict that ``mongo_read_options`` serializes server-side,
-    against a seeded export, so the semantics are pinned by an executed
-    assertion rather than an option-string contract; (b) the degraded-
-    mode path when a deployment can only hand over a ``mongoexport``
-    dump (read_mongo_export) — the pipeline then runs in Spark instead
-    of mongod, same results, just without the wire-size win.
+    It runs the reference's pipeline dict over a ``mongoexport`` dump
+    (read_mongo_export): the same results mongod would return, computed
+    in Spark instead, just without the wire-size win of running it
+    server-side.
 
     Mongo semantics notes: ``$group``+``$first`` picks the first doc in
     the PRECEDING ``$sort`` order — with no upstream sort the choice is
@@ -349,14 +174,12 @@ def read_mongo_export(
     schema=None,
     pipeline: list[dict] | None = None,
 ) -> DataFrame:
-    """S5 degraded mode, fully executable here: read a ``mongoexport``
-    JSON-lines dump with a DECLARED schema (skipping inference's extra
-    scan, same philosophy as read_csv_all_string) and run the same
-    aggregation pipeline ``mongo_read_options`` would push server-side
-    via :func:`apply_mongo_pipeline`. JSON files split per line, so the
-    scan parallelizes like any file source; the declared schema also
-    prunes parsing to the referenced fields (Jackson skips unrequested
-    tokens)."""
+    """S5: read a ``mongoexport`` JSON-lines dump with a DECLARED
+    schema (skipping inference's extra scan) and run the reference's
+    aggregation pipeline over it via :func:`apply_mongo_pipeline`.
+    JSON files split per line, so the scan parallelizes like any file
+    source; the declared schema also prunes parsing to the referenced
+    fields (Jackson skips unrequested tokens)."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -364,71 +187,3 @@ def read_mongo_export(
     if pipeline:
         df = apply_mongo_pipeline(df, pipeline)
     return df
-
-
-def read_mongo(
-    spark: SparkSession,
-    uri: str,
-    database: str,
-    collection: str,
-    pipeline: list[dict] | None = None,
-    schema=None,
-    export_path: str | None = None,
-) -> DataFrame:
-    """S5 as ONE entry point (r8 verdict task #3): the reference's live
-    Mongo collection read (mongo_to_postgres_replication.py:118,149,185)
-    mapped to ``spark.read.format("mongodb")`` options, with the
-    documented degraded mode as an explicit fallback.
-
-    Resolution order:
-
-    1. **Connector path** — options assembled by ``mongo_read_options``
-       (the ``pipeline`` runs server-side in mongod, so dedup-at-source
-       rows never cross the wire), loaded through the Mongo Spark
-       connector.
-    2. **Fixture fallback** — when the connector package is NOT on the
-       classpath and ``export_path`` names a mongoexport JSON-lines
-       dump, the SAME pipeline dict executes in Spark over the dump
-       via :func:`apply_mongo_pipeline` (semantics pinned by the
-       executed contract tests). The fallback never masks a live-read
-       failure: only the missing-datasource error falls through, any
-       other connector error re-raises.
-
-    With no ``export_path`` the missing connector raises the clear
-    RuntimeError naming the package to add.
-    """
-    opts = mongo_read_options(uri, database, collection, pipeline)
-    try:
-        return read_mongo_collection(spark, opts, schema=schema)
-    except RuntimeError as exc:
-        if "mongodb datasource" not in str(exc) or export_path is None:
-            raise
-        return read_mongo_export(
-            spark, export_path, schema=schema, pipeline=pipeline
-        )
-
-
-def read_mongo_collection(
-    spark: SparkSession, options: dict[str, str], schema=None
-) -> DataFrame:
-    """S5: Mongo collection scan via the Spark connector. An explicit
-    ``schema`` skips the connector's sampling pass (a full extra scan
-    worth of latency on a big collection — same declared-schema
-    philosophy as read_csv_all_string). Raises a clear error when the
-    connector package is absent (this sandbox)."""
-    reader = spark.read.format("mongodb")
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as exc:
-        msg = str(exc)
-        if "Failed to find" in msg or "DATA_SOURCE_NOT_FOUND" in msg:
-            raise RuntimeError(
-                "mongodb datasource not on the classpath: add "
-                "org.mongodb.spark:mongo-spark-connector via "
-                "spark.jars.packages"
-            ) from exc
-        raise

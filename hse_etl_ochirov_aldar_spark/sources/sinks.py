@@ -205,33 +205,6 @@ def overwrite_window(
     _commit(spark, df.write.partitionBy(partition_col), path, partition_col)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed table sink (co-located join layout; no reference
-    analogue — PG has no bucketing, SURVEY §2.1).
-
-    Two fact tables bucketed on their join key with the SAME bucket
-    count join with ZERO shuffle: each task reads matching bucket
-    files from both sides (plan shows SortMergeJoin with no Exchange).
-    At 100 TB this converts the repeated multi-TB join shuffle into a
-    one-time write-side cost — the single highest-leverage layout
-    decision for a fact-to-fact join pipeline. Bucketing requires the
-    table catalog (saveAsTable); ``path`` makes it an external table.
-    """
-    writer = df.write.mode("overwrite").option("path", path).bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
 def _keep_newest(
     merged: DataFrame, key_cols: list[str], version_col: str
 ) -> DataFrame:

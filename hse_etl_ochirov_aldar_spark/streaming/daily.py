@@ -138,123 +138,3 @@ def streaming_sliding_counts(
             "n_events",
         )
     )
-
-
-def hll_daily_state_merge(
-    spark: SparkSession,
-    batch: DataFrame,
-    state_path: str,
-    *,
-    key_col: str = "day",
-    id_col: str = "user_id",
-    lg_k: int = 12,
-) -> None:
-    """Merge one batch into a persisted per-key HLL sketch table —
-    the incremental-uniques state step (PERF.md finding 34 made
-    streaming: per-day DataSketches sketches are MERGEABLE, so
-    arriving data folds into history without ever rescanning it).
-
-    The state table is one binary sketch row per key (days, not rows —
-    tiny); the merge reads it, unions the batch's per-key sketches
-    (``hll_union_agg`` refuses mismatched lgK rather than silently
-    degrading) and commits the merged table as one whole-table unit
-    (the sources/sinks commit protocol, which first rolls forward or
-    discards whatever a crashed merge left behind).
-
-    Replay safety: foreachBatch is AT-LEAST-ONCE, and additive state
-    (counts, sums) double-counts on replay. HLL registers take MAX, so
-    re-merging a replayed batch is a no-op on every estimate — the
-    at-least-once seam is exactly-once for sketch state, with no epoch
-    bookkeeping (pinned in tests/test_streaming_and_incremental.py).
-    """
-    from ..sources.sinks import _commit, _hadoop_fs, _recover
-
-    batch_sk = batch.groupBy(key_col).agg(
-        F.hll_sketch_agg(id_col, F.lit(lg_k)).alias("sk")
-    )
-    _recover(spark, state_path)
-    fs, jpath = _hadoop_fs(spark, state_path)
-    if fs.exists(jpath):
-        merged = (
-            spark.read.parquet(state_path)
-            .unionByName(batch_sk)
-            .groupBy(key_col)
-            .agg(F.hll_union_agg("sk").alias("sk"))
-        )
-    else:
-        merged = batch_sk
-    _commit(spark, merged.write, state_path)
-
-
-def streaming_hll_uniques(
-    spark: SparkSession,
-    source_dir: str,
-    state_path: str,
-    checkpoint: str,
-    *,
-    ts_col: str = "ts",
-    id_col: str = "user_id",
-    lg_k: int = 12,
-    trigger_available_now: bool = True,
-):
-    """Structured-Streaming daily-uniques state: each micro-batch's
-    per-day sketches merge into the table at ``state_path`` via
-    :func:`hll_daily_state_merge`; estimates (daily or trailing-N-day)
-    come from :func:`hll_uniques_estimates` WITHOUT touching raw
-    history. COUNT(DISTINCT) has no mergeable state — streaming exact
-    distinct must keep every id in the state store; this keeps 2^lg_k
-    registers per day, unconditionally.
-
-    Returns the started StreamingQuery (availableNow by default — the
-    scheduled-batch analogue; the checkpoint makes the next run read
-    only new files).
-    """
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-
-    def _merge(batch: DataFrame, _epoch: int) -> None:
-        days = batch.where(F.col(ts_col).isNotNull()).select(
-            F.col(ts_col).cast("date").alias("day"), id_col
-        )
-        hll_daily_state_merge(
-            batch.sparkSession, days, state_path, id_col=id_col, lg_k=lg_k
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def hll_uniques_estimates(
-    spark: SparkSession, state_path: str, window_days: int = 1
-) -> DataFrame:
-    """(day, n_users_est) from the sketch table — per-day for
-    ``window_days=1``, else trailing-N-day via the calendar cover
-    union (same shape as the rolling_unique_users_hll catalog entry:
-    the sketch of day d joins every window ending in [d, d+N-1]).
-    Operates on ≤ n_days tiny rows; raw data is never read."""
-    sk = spark.read.parquet(state_path)
-    if window_days == 1:
-        return sk.select(
-            "day", F.hll_sketch_estimate("sk").alias("n_users_est")
-        )
-    cover = F.explode(
-        F.sequence(F.col("day"), F.date_add(F.col("day"), window_days - 1))
-    ).alias("wday")
-    est = (
-        sk.select(cover, "sk")
-        .groupBy("wday")
-        .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("n_users_est"))
-    )
-    observed = sk.select(F.col("day").alias("wday"))
-    return est.join(observed, "wday", "left_semi").select(
-        F.col("wday").alias("day"), "n_users_est"
-    )

@@ -1,181 +1,11 @@
-"""External-connector surface (S2/S5): the option-building and
-partition-planning logic is pure and tested here; actual loads are
-probed for the clear-missing-artifact error in this driverless sandbox
-(the execution path for reference pipelines remains the parquet
-stand-in seam, plans/reference_pipelines.load_table)."""
+"""Mongo-export reads (S5): the reference's aggregation pipeline
+(``$sort`` + ``$group``/``$first`` dedup at source, plus ``$match``/
+``$project``/``$limit``) executed by ``apply_mongo_pipeline`` over a
+seeded mongoexport-style dump."""
 
 from __future__ import annotations
 
-from datetime import date
-
 import pytest
-
-from hse_etl_ochirov_aldar_spark.sources.connectors import (
-    jdbc_read_options,
-    mongo_read_options,
-    month_predicates,
-    read_jdbc_table,
-    read_mongo_collection,
-)
-
-
-def test_jdbc_options_partitioned():
-    opts = jdbc_read_options(
-        "jdbc:postgresql://db:5432/app", "public.events", "u", "p",
-        partition_column="event_id", lower_bound=0, upper_bound=1_000_000,
-        num_partitions=64,
-    )
-    assert opts["partitionColumn"] == "event_id"
-    assert opts["numPartitions"] == "64"
-    assert opts["lowerBound"] == "0" and opts["upperBound"] == "1000000"
-    assert opts["fetchsize"] == "10000"
-
-
-def test_jdbc_options_partition_args_all_or_nothing():
-    with pytest.raises(ValueError, match="together"):
-        jdbc_read_options("jdbc:postgresql://db/app", "t", "u", "p",
-                          partition_column="id")
-    with pytest.raises(ValueError, match="exceed"):
-        jdbc_read_options("jdbc:postgresql://db/app", "t", "u", "p",
-                          partition_column="id", lower_bound=5,
-                          upper_bound=5, num_partitions=2)
-
-
-def test_month_predicates_disjoint_and_covering():
-    preds = month_predicates("session_date", date(2024, 11, 15), date(2025, 2, 1))
-    # months of the half-open range [2024-11-15, 2025-02-01)
-    assert len(preds) == 3
-    assert preds[0] == (
-        "session_date >= '2024-11-01' AND session_date < '2024-12-01'"
-    )
-    assert preds[1].startswith("session_date >= '2024-12-01'")
-    assert preds[2] == (
-        "session_date >= '2025-01-01' AND session_date < '2025-02-01'"
-    )
-    # boundaries chain exactly: predicate i's upper == i+1's lower
-    for a, b in zip(preds, preds[1:]):
-        assert a.split("< '")[1].rstrip("'") == b.split(">= '")[1].split("'")[0]
-    with pytest.raises(ValueError):
-        month_predicates("d", date(2024, 1, 1), date(2024, 1, 1))
-
-
-def test_jdbc_read_missing_driver_is_a_clear_error(spark):
-    opts = jdbc_read_options("jdbc:postgresql://nohost:5432/app", "t", "u", "p")
-    with pytest.raises(RuntimeError, match="JDBC driver"):
-        read_jdbc_table(spark, opts)
-
-
-def test_jdbc_predicates_exclusive_with_bounds(spark):
-    opts = jdbc_read_options(
-        "jdbc:postgresql://db/app", "t", "u", "p",
-        partition_column="id", lower_bound=0, upper_bound=10, num_partitions=2,
-    )
-    with pytest.raises(ValueError, match="mutually"):
-        read_jdbc_table(spark, opts, predicates=["id < 5", "id >= 5"])
-
-
-def test_mongo_options_push_pipeline_serverside():
-    pipeline = [
-        {"$sort": {"updated_at": -1}},
-        {"$group": {"_id": "$natural_key", "doc": {"$first": "$$ROOT"}}},
-    ]
-    opts = mongo_read_options(
-        "mongodb://m:27017", "app", "user_sessions", pipeline
-    )
-    assert opts["database"] == "app" and opts["collection"] == "user_sessions"
-    assert '"$first"' in opts["aggregation.pipeline"]
-
-
-def test_mongo_read_missing_connector_is_a_clear_error(spark):
-    opts = mongo_read_options("mongodb://nohost:27017", "app", "c")
-    with pytest.raises(RuntimeError, match="mongodb datasource"):
-        read_mongo_collection(spark, opts)
-
-
-# ---------------------------------------------------------------------------
-# REAL JDBC round-trip against embedded Apache Derby (bundled with Spark):
-# the options built by jdbc_read_options are EXECUTED, not just
-# constructed — partitioned parallel read, predicate-sharded read, and
-# filter pushdown all run against a live JDBC database.
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def derby_people(spark, tmp_path_factory):
-    """A 100-row Derby table written through Spark's JDBC sink."""
-    db = str(tmp_path_factory.mktemp("derby") / "peopledb")
-    url = f"jdbc:derby:{db};create=true"
-    (
-        spark.range(100)
-        .selectExpr("id", "cast(id * 2 as double) as v")
-        .write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "people")
-        .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        .mode("overwrite")
-        .save()
-    )
-    return url
-
-
-def test_jdbc_partitioned_read_executes(spark, derby_people):
-    """Bounds-based sharding must produce numPartitions real partitions
-    and the full row set (stride predicates are open-ended, so rows on
-    the bound edges are not lost)."""
-    opts = jdbc_read_options(derby_people, "people", "", "")
-    opts.update(
-        {
-            "driver": "org.apache.derby.jdbc.EmbeddedDriver",
-            "partitionColumn": "id",
-            "lowerBound": "10",   # deliberately not covering [0, 100)
-            "upperBound": "90",
-            "numPartitions": "3",
-        }
-    )
-    df = read_jdbc_table(spark, opts)
-    assert df.rdd.getNumPartitions() == 3
-    rows = {(r.id, r.v) for r in df.collect()}
-    assert rows == {(i, float(i * 2)) for i in range(100)}
-
-
-def test_jdbc_predicate_read_executes(spark, derby_people):
-    """Explicit predicates: one partition per predicate; disjoint +
-    covering predicates reconstruct the table exactly."""
-    opts = jdbc_read_options(derby_people, "people", "", "")
-    opts["driver"] = "org.apache.derby.jdbc.EmbeddedDriver"
-    # predicates are injected verbatim into the remote WHERE clause:
-    # quote identifiers to match the DDL Spark's JDBC sink generated
-    # (Derby folds unquoted names to uppercase)
-    df = read_jdbc_table(
-        spark,
-        opts,
-        predicates=['"id" < 40', '"id" >= 40 AND "id" < 70', '"id" >= 70'],
-    )
-    assert df.rdd.getNumPartitions() == 3
-    assert df.count() == 100
-    assert df.agg({"id": "sum"}).collect()[0][0] == sum(range(100))
-
-
-def test_jdbc_filter_pushdown_reaches_the_database(spark, derby_people):
-    """A .where() on the JDBC frame must appear as PushedFilters in the
-    scan — the predicate runs IN the database, not post-transfer."""
-    opts = jdbc_read_options(derby_people, "people", "", "")
-    opts["driver"] = "org.apache.derby.jdbc.EmbeddedDriver"
-    df = read_jdbc_table(spark, opts).where("id < 10").select("id")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
-    assert "PushedFilters" in plan and "LessThan(id,10)" in plan
-    assert df.count() == 10
-
-
-# ---------------------------------------------------------------------------
-# REAL Mongo-path execution (the connector jar is absent, so the wire
-# read can't run here — instead the EXACT pipeline dict that
-# mongo_read_options serializes server-side is executed by the
-# apply_mongo_pipeline twin over a seeded mongoexport-style dump,
-# mirroring the Derby round-trip's options-are-executed philosophy).
-# ---------------------------------------------------------------------------
 
 
 @pytest.fixture(scope="module")
@@ -230,23 +60,6 @@ def test_mongo_pipeline_executes_on_export(spark, mongo_export):
     assert rows == {
         f"s{i}": (1020 + i, "mobile" if i % 2 else "web") for i in range(10)
     }
-
-
-def test_mongo_pipeline_is_what_the_options_serialize(spark, mongo_export):
-    """The executed pipeline and the server-side option string are the
-    SAME object — the executed test therefore pins the semantics of
-    what a live connector would push into mongod."""
-    import json as _json
-
-    from hse_etl_ochirov_aldar_spark.sources.connectors import (
-        mongo_read_options,
-    )
-
-    opts = mongo_read_options(
-        "mongodb://m:27017", "app", "user_sessions",
-        _REFERENCE_DEDUP_PIPELINE,
-    )
-    assert _json.loads(opts["aggregation.pipeline"]) == _REFERENCE_DEDUP_PIPELINE
 
 
 def test_mongo_export_declared_schema_prunes_and_matches(spark, mongo_export):
@@ -391,37 +204,3 @@ def test_mongo_match_null_semantics(spark):
             [{"$sort": {"id": 1}},
              {"$group": {"_id": "$tag", "x": {"$first": 1}}}],
         )
-
-
-def test_read_mongo_falls_back_to_export_fixture(spark, mongo_export):
-    """The unified read_mongo seam: connector absent here, so the SAME
-    pipeline the options would push server-side executes over the
-    export fixture — one survivor per natural key, newest doc."""
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    from hse_etl_ochirov_aldar_spark.sources.connectors import read_mongo
-
-    schema = StructType([
-        StructField("_id", StringType()),
-        StructField("natural_key", StringType()),
-        StructField("updated_at", LongType()),
-        StructField("device", StringType()),
-    ])
-    df = read_mongo(
-        spark, "mongodb://nohost:27017", "app", "user_sessions",
-        pipeline=_REFERENCE_DEDUP_PIPELINE, schema=schema,
-        export_path=mongo_export,
-    )
-    rows = {r["_id"]: (r.updated_at, r.device) for r in df.collect()}
-    assert rows == {
-        f"s{i}": (1020 + i, "mobile" if i % 2 else "web") for i in range(10)
-    }
-
-
-def test_read_mongo_without_fallback_raises_clear_error(spark):
-    from hse_etl_ochirov_aldar_spark.sources.connectors import read_mongo
-
-    with pytest.raises(RuntimeError, match="mongodb datasource"):
-        read_mongo(spark, "mongodb://nohost:27017", "app", "c")

@@ -905,32 +905,6 @@ def test_chunk_text_windows_and_edges(spark):
         chunk_text(df, "text", size=0, stride=10)
 
 
-def test_quota_sample_by_config_table(spark):
-    """quota_sample_by: per-group caps from a spec table; groups absent
-    from the spec or with non-positive quota contribute nothing, and a
-    uniform spec equals quota_sample exactly."""
-    from hse_etl_ochirov_aldar_spark.operators.sampling import (
-        quota_sample,
-        quota_sample_by,
-    )
-
-    df = spark.range(1000).select(
-        (F.col("id") % 4).cast("string").alias("g"), F.col("id").alias("k")
-    )
-    spec = spark.createDataFrame(
-        [("0", 10), ("1", 3), ("2", 0), ("9", 5)], ["g", "quota"]
-    )
-    out = quota_sample_by(df, "g", "k", spec)
-    counts = {r.g: r.n for r in out.groupBy("g").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts == {"0": 10, "1": 3}
-    uniform = spark.createDataFrame(
-        [(str(i), 7) for i in range(4)], ["g", "quota"]
-    )
-    a = {r.k for r in quota_sample_by(df, "g", "k", uniform).collect()}
-    b = {r.k for r in quota_sample(df, "g", 7, "k").collect()}
-    assert a == b and len(a) == 28
-
-
 def test_two_stage_rank_and_prefix_equal_single_window(spark):
     """The salted two-stage draws must equal the naive single-window
     definitions EXACTLY — including _hash_prefix_take's subtle case

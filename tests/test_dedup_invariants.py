@@ -435,10 +435,8 @@ def test_duplicate_span_stats_fixture(spark):
 def test_incremental_minhash_dedup_semantics(spark):
     """Batch-vs-corpus near-dedup: re-crawls with trailing chrome drop
     against the corpus, fresh docs survive, within-batch near-dup
-    chains keep one doc, and a pre-materialized corpus key frame gives
-    identical results (the steady-state ingest path)."""
+    chains keep one doc."""
     from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
-        banded_minhash_keys,
         incremental_minhash_dedup,
     )
 
@@ -458,12 +456,6 @@ def test_incremental_minhash_dedup_semantics(spark):
     )
     kept = incremental_minhash_dedup(batch, corpus, threshold=0.6)
     assert {r.doc_id for r in kept.collect()} == {102}
-    # steady-state: corpus keys materialized once, passed back in
-    ckeys = banded_minhash_keys(corpus)
-    kept2 = incremental_minhash_dedup(
-        batch, corpus, threshold=0.6, corpus_keys=ckeys
-    )
-    assert {r.doc_id for r in kept2.collect()} == {102}
 
 
 def test_remove_duplicate_spans_rewrites_token_precisely(spark):
@@ -495,94 +487,6 @@ def test_remove_duplicate_spans_rewrites_token_precisely(spark):
     assert out[3].n_tokens_removed == 0
     assert out[4].n_tokens_removed == 0  # repeats live in ONE doc
     assert out[5].text == "" and out[5].n_tokens_removed == 0
-
-
-def test_minhash_ingest_step_steady_state_keys(spark, tmpdir):
-    """Steady-state corpus_keys materialization (VERDICT r2 #5): batch 2
-    signatures only ITSELF — corpus text appears in its plan exactly
-    once (the candidate-bounded Jaccard verification semi-join, the
-    exactness-preserving minimum; exact Jaccard needs candidate text),
-    and never for signature generation. The keyless operator, by
-    contrast, re-signatures the corpus (2 corpus text scans)."""
-    from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
-        incremental_minhash_dedup,
-        minhash_ingest_step,
-        relation_scan_count,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    b1 = [
-        (1, base),
-        (2, "first batch unique content with several words inside"),
-    ]
-    b2 = [
-        (11, base + " trailing chrome"),  # near-dup of doc 1
-        (12, "second batch fresh content entirely new words here"),
-        (13, "second batch fresh content entirely new words here x"),
-    ]
-    cols = ["doc_id", "text"]
-    corpus_path = f"{tmpdir}/ingest_corpus"
-    keys_path = f"{tmpdir}/ingest_keys"
-
-    s1 = minhash_ingest_step(
-        spark.createDataFrame(b1, cols), corpus_path, keys_path, threshold=0.6
-    )
-    assert s1["n_kept"] == 2
-    s2 = minhash_ingest_step(
-        spark.createDataFrame(b2, cols), corpus_path, keys_path, threshold=0.6
-    )
-    assert s2["corpus_text_scans"] == 1  # zero signature scans of corpus text
-    assert s2["n_kept"] == 1
-
-    got = {r.doc_id for r in spark.read.parquet(corpus_path).collect()}
-    assert got == {1, 2, 12}
-    # the key table covers exactly the corpus survivors
-    kids = {
-        r.id for r in spark.read.parquet(keys_path).select("id").distinct().collect()
-    }
-    assert kids == got
-
-    # exactness: the keyed path kept the same survivors as the keyless
-    # operator; the keyless plan pays >= 2 corpus text scans
-    keyless = incremental_minhash_dedup(
-        spark.createDataFrame(b2, cols),
-        spark.createDataFrame(b1, cols).sparkSession.read.parquet(corpus_path).where(
-            F.col("doc_id") < 10
-        ),
-        threshold=0.6,
-    )
-    assert {r.doc_id for r in keyless.collect()} == {12}
-    assert relation_scan_count(keyless, corpus_path) >= 2
-
-
-def test_minhash_ingest_step_backfills_keys_over_existing_corpus(spark, tmpdir):
-    """Adopting the seam over a corpus that predates it: the first step
-    backfills the key table once, then proceeds incrementally."""
-    from hse_etl_ochirov_aldar_spark.operators.text_dedup import (
-        minhash_ingest_step,
-    )
-
-    corpus_path = f"{tmpdir}/legacy_corpus"
-    keys_path = f"{tmpdir}/legacy_keys"
-    spark.createDataFrame(
-        [(1, "pre existing corpus document with a number of words")],
-        ["doc_id", "text"],
-    ).write.parquet(corpus_path)
-
-    s = minhash_ingest_step(
-        spark.createDataFrame(
-            [(2, "pre existing corpus document with a number of words extra")],
-            ["doc_id", "text"],
-        ),
-        corpus_path,
-        keys_path,
-        threshold=0.6,
-    )
-    assert s["n_kept"] == 0  # near-dup of the legacy doc
-    kids = {
-        r.id for r in spark.read.parquet(keys_path).select("id").distinct().collect()
-    }
-    assert kids == {1}
 
 
 def test_semantic_dedup_drops_coclustered_copies(spark, sf_dir):

@@ -52,53 +52,6 @@ def test_jsonl_roundtrip_with_explicit_schema(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_csv_all_string_staging_roundtrip(spark, sf_dir, tmp_path):
-    """S1: CSV staged all-string (the reference's TEXT staging), typed
-    downstream — header + explicit column list."""
-    from hse_etl_ochirov_aldar_spark.sources.readers import read_csv_all_string
-
-    ev = _clean_events(spark, sf_dir).limit(100)
-    path = str(tmp_path / "ev_csv")
-    ev.select(
-        F.col("event_id").cast("string"),
-        F.col("value").cast("string"),
-        "event_type",
-    ).write.option("header", True).csv(path)
-    staged = read_csv_all_string(
-        spark, path, ["event_id", "value", "event_type"]
-    )
-    assert staged.count() == 100
-    assert all(t == "string" for _, t in staged.dtypes)
-    typed = staged.select(
-        F.col("event_id").cast("long"), F.col("value").cast("double")
-    )
-    assert typed.where(F.col("event_id").isNull()).count() == 0
-
-
-def test_fetch_csv_to_staging_streams_chunks(spark, sf_dir, tmp_path):
-    """S1: URL fetch (file:// here; same code path as HTTP) streamed in
-    bounded chunks into staging, then loaded all-string."""
-    from hse_etl_ochirov_aldar_spark.sources.readers import (
-        fetch_csv_to_staging,
-        read_csv_all_string,
-    )
-
-    src_dir = tmp_path / "csv_src"
-    ev = _clean_events(spark, sf_dir).limit(50)
-    ev.select(
-        F.col("event_id").cast("string"), F.col("value").cast("string")
-    ).coalesce(1).write.option("header", True).csv(str(src_dir))
-    csv_file = next(p for p in src_dir.iterdir() if p.suffix == ".csv")
-
-    staged = tmp_path / "staged.csv"
-    n = fetch_csv_to_staging(csv_file.as_uri(), str(staged), chunk_bytes=64)
-    assert n == staged.stat().st_size > 0
-
-    df = read_csv_all_string(spark, str(staged), ["event_id", "value"])
-    assert df.count() == 50
-    assert all(t == "string" for _, t in df.dtypes)
-
-
 def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
     from pathlib import Path
 

@@ -137,24 +137,6 @@ def test_range_join_left_keeps_unmatched_probes(spark):
     }
 
 
-def test_bucketed_sorted_write(spark, sf_dir, tmp_path):
-    from hse_etl_ochirov_aldar_spark.sources.readers import load_table
-    from hse_etl_ochirov_aldar_spark.sources.sinks import write_bucketed
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    try:
-        write_bucketed(
-            li, "b_li_sorted", str(tmp_path / "ls"), ["l_orderkey"], 4,
-            sort_cols=["l_orderkey"],
-        )
-        agg = spark.table("b_li_sorted").groupBy("l_orderkey").count()
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        assert agg.count() == li.select("l_orderkey").distinct().count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_li_sorted")
-
-
 def test_line_dedup_no_cartesian_partial_census(spark, sf_dir):
     plan = _plan(spark, sf_dir, "line_dedup_docs")
     # boilerplate census and reassembly are hash joins/aggregates on

@@ -18,6 +18,9 @@ Resolution is by name, so a local variable that shadows a top-level
 name keeps that definition alive: the guard can miss dead code. It
 would flag a definition reached only through a name string (getattr,
 importlib); the package reaches none of its own code that way.
+
+The same parsed trees also check that no package module other than an
+``__init__`` imports a name it never uses.
 """
 
 from __future__ import annotations
@@ -54,41 +57,6 @@ ALLOWLIST: dict[str, str] = {
         "tests pin the tokeniser, which porting would copy into tests"
     ),
 }
-
-# Reached only by the tests named, which go with them. Each change
-# deletes a few tests, so these leave in later changes; the entry is
-# removed with the code and nothing may be added here.
-PENDING: dict[str, str] = {
-    "operators.cdc.cdc_apply_versioned": "test_streaming_cdc_*",
-    "operators.cdc.streaming_cdc_apply_versioned": "test_streaming_cdc_*",
-    "operators.multimodal.av_frame_decoder": "test_multimodal: av tests",
-    "operators.multimodal.documents_as_media": "test_multimodal fixtures",
-    "operators.multimodal.resize_images": "test_multimodal: resize tests",
-    "operators.multimodal.resize_ppm": "test_multimodal: resize tests",
-    "operators.multimodal.sample_frames": "test_multimodal: frame tests",
-    "operators.sampling.quota_sample_by": "test_quota_sample_by_config_table",
-    "operators.text_dedup.minhash_ingest_step": "test_minhash_ingest_step_*",
-    "operators.text_dedup.relation_scan_count": "test_minhash_ingest_step_*",
-    "sources.connectors._raise_if_missing_driver": "test_connectors: jdbc",
-    "sources.connectors.jdbc_read_options": "test_connectors: jdbc",
-    "sources.connectors.month_predicates": "test_connectors: jdbc",
-    "sources.connectors.read_jdbc_table": "test_connectors: jdbc",
-    "sources.connectors.mongo_read_options": "test_connectors: mongo",
-    "sources.connectors.read_mongo": "test_connectors: mongo",
-    "sources.connectors.read_mongo_collection": "test_connectors: mongo",
-    "sources.readers.fetch_csv_to_staging": "test_formats: csv staging",
-    "sources.readers.read_csv_all_string": "test_formats: csv staging",
-    "sources.sinks.write_bucketed": "test_bucketed_*",
-    "streaming.daily.hll_daily_state_merge": "test_*hll_*",
-    "streaming.daily.hll_uniques_estimates": "test_*hll_*",
-    "streaming.daily.streaming_hll_uniques": "test_*hll_*",
-    "streaming.sessionize._make_sessionizer": "test_tws_*",
-    "streaming.sessionize._make_tws_processor": "test_tws_*",
-    "streaming.sessionize.sessionize_native": "test_native_session_window_*",
-    "streaming.sessionize.sessionize_stream": "test_stateful_sessionize_*",
-    "streaming.sessionize.sessionize_stream_tws": "test_tws_*",
-}
-
 
 def _module_name(path: Path) -> str:
     parts = list(path.relative_to(ROOT).with_suffix("").parts)
@@ -264,18 +232,63 @@ class _Graph:
 
 
 @functools.cache
+def _graph() -> _Graph:
+    return _Graph()
+
+
+@functools.cache
 def _unreachable() -> tuple[str, ...]:
-    return tuple(_Graph().unreachable())
+    return tuple(_graph().unreachable())
+
+
+def _unused_imports(tree: ast.Module) -> list[str]:
+    """Top-level import bindings the module never uses. A use is any
+    name load (including the head of an attribute chain) outside the
+    imports, or an ``__all__`` entry."""
+    bound: list[str] = []
+    used: set[str] = set()
+    for stmt in tree.body:
+        if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+            continue
+        if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            for alias in stmt.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name != "*":
+                    bound.append(name)
+        elif _Graph._is_all(stmt):
+            used |= {
+                elt.value
+                for elt in ast.walk(stmt.value)
+                if isinstance(elt, ast.Constant) and isinstance(elt.value, str)
+            }
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+    return [name for name in bound if name not in used]
 
 
 def test_every_package_definition_is_reachable_from_an_entry_point():
-    dead = [d for d in _unreachable() if d not in ALLOWLIST | PENDING]
+    dead = [d for d in _unreachable() if d not in ALLOWLIST]
     assert not dead, (
         "reached only by tests/tools (delete them with their tests, or "
         "allowlist with a reason):\n  " + "\n  ".join(dead)
     )
 
 
-def test_allowlists_name_only_live_unreachable_definitions():
-    stale = sorted((set(ALLOWLIST) | set(PENDING)) - set(_unreachable()))
+def test_allowlist_names_only_live_unreachable_definitions():
+    stale = sorted(set(ALLOWLIST) - set(_unreachable()))
     assert not stale, f"listed but reachable or gone: {stale}"
+
+
+def test_package_modules_use_every_name_they_import():
+    """``__init__`` modules are exempt: their imports are re-exports."""
+    g = _graph()
+    unused = [
+        f"{mod[len(PKG) + 1:]}: {name}"
+        for mod, tree in g.trees.items()
+        if mod.startswith(PKG) and not g.is_pkg[mod]
+        for name in _unused_imports(tree)
+    ]
+    assert not unused, (
+        f"{len(unused)} imported names never used:\n  " + "\n  ".join(unused)
+    )

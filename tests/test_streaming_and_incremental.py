@@ -199,61 +199,6 @@ def test_upsert_propagates_target_read_errors(spark, tmpdir):
     assert os.path.exists(os.path.join(path, "part-00000.parquet"))
 
 
-def test_stateful_sessionize_stream_equals_batch(spark, sf_dir, tmpdir):
-    """Closed sessions emitted by the applyInPandasWithState operator
-    must equal the batch sessionizer's output minus each user's open
-    (last) session."""
-    from pyspark.sql import types as T
-    from pyspark.sql import Window
-    from hse_etl_ochirov_aldar_spark.streaming.sessionize import (
-        sessionize_batch,
-        sessionize_stream,
-    )
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select("user_id", "ts", "value")
-    )
-    src = f"{tmpdir}/sess_src"
-    ev.repartition(1).sortWithinPartitions("ts").write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        sessionize_stream(stream, gap_seconds=7200)
-        .writeStream.format("memory")
-        .queryName("t_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmpdir}/sess_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in spark.table("t_sessions").collect()
-    }
-
-    batch = sessionize_batch(ev, gap_seconds=7200)
-    w_last = Window.partitionBy("user_id").orderBy(F.desc("session_start"))
-    closed_batch = (
-        batch.withColumn("_rn", F.row_number().over(w_last)).where(F.col("_rn") > 1)
-    )
-    expected = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in closed_batch.collect()
-    }
-    assert streamed == expected
-    assert len(streamed) > 0
-
-
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmpdir):
     """Streaming keyed dedup (S9 ON CONFLICT DO NOTHING, stream flavor):
     dropDuplicates on event_id over a watermarked stream must reproduce
@@ -434,87 +379,6 @@ def test_watermark_drops_late_data_in_append_mode(spark, tmpdir):
     assert second.get("2024-01-01 08:00:00") == (3.0, 2)
     # the 12:00 window closes once the watermark passes 13:00
     assert second.get("2024-01-01 12:00:00") == (10.0, 1)
-
-
-def test_stateful_sessionize_state_across_microbatches(spark, tmpdir):
-    """applyInPandasWithState must carry the open session across
-    micro-batches: two time-ordered files processed one per trigger,
-    with a session spanning the file boundary."""
-    from pyspark.sql import types as T
-    from hse_etl_ochirov_aldar_spark.streaming.sessionize import sessionize_stream
-
-    src = f"{tmpdir}/mb_src"
-
-    def write_file(rows):
-        spark.createDataFrame(rows, ["user_id", "ts_s", "value"]).select(
-            "user_id", F.to_timestamp("ts_s").alias("ts"), "value"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    # file 1: user 1 session A (2 events) ending 10:05
-    write_file([(1, "2024-01-01 10:00:00", 1.0), (1, "2024-01-01 10:05:00", 2.0)])
-    # file 2: continuation within gap (10:20, gap 30 min) then a jump
-    # that closes the session, all in a later batch
-    write_file([(1, "2024-01-01 10:20:00", 3.0), (1, "2024-01-01 15:00:00", 9.0)])
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        sessionize_stream(stream, gap_seconds=1800)
-        .writeStream.format("memory")
-        .queryName("t_mb_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmpdir}/mb_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("t_mb_sessions").collect()
-    # exactly one CLOSED session: 10:00-10:20 with 3 events spanning
-    # both micro-batches (state carried the open session across)
-    assert len(rows) == 1
-    r = rows[0]
-    assert (str(r.session_start), str(r.session_end), r.n_events) == (
-        "2024-01-01 10:00:00",
-        "2024-01-01 10:20:00",
-        3,
-    )
-
-
-def test_native_session_window_equals_lag_based(spark, sf_dir):
-    """F.session_window (built-in) and the lag-based sessionizer agree
-    when no inter-event gap exactly ties the threshold (their only
-    semantic difference; gap=7201s cannot tie second-granular data)."""
-    from hse_etl_ochirov_aldar_spark.streaming.sessionize import (
-        sessionize_batch,
-        sessionize_native,
-    )
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select("user_id", "ts", "value")
-    )
-    gap = 7201
-    a = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events, r.total_value)
-        for r in sessionize_batch(ev, gap_seconds=gap).collect()
-    }
-    b = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events, r.total_value)
-        for r in sessionize_native(ev, gap_seconds=gap).collect()
-    }
-    assert a == b
-    assert len(a) > 0
 
 
 def test_versioned_upsert_atomic_merge(spark, tmpdir):
@@ -965,110 +829,6 @@ def test_streaming_ivm_replayed_epoch_is_noop(spark, tmpdir):
     assert (got.n_rows, got.sum_value) == (1, 10.0)
 
 
-def test_streaming_cdc_apply_maintains_snapshot(spark, tmpdir):
-    """A CDC change stream (I/U/D with versions) applied availableNow
-    must leave the snapshot one full batch cdc_apply would produce."""
-    from pyspark.sql import types as T
-
-    from hse_etl_ochirov_aldar_spark.operators.cdc import (
-        cdc_apply,
-        streaming_cdc_apply_versioned,
-    )
-    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
-
-    changes = [
-        (1, "a", 10, 1, "I"),
-        (2, "b", 20, 1, "I"),
-        (1, "a2", 11, 2, "U"),
-        (2, "b", 20, 2, "D"),
-        (3, "c", 30, 1, "I"),
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("v", T.LongType()),
-            T.StructField("ver", T.LongType()),
-            T.StructField("op", T.StringType()),
-        ]
-    )
-    src = f"{tmpdir}/cdc_src"
-    # several files -> several micro-batches, order by version groups
-    spark.createDataFrame(changes[:2], schema).write.parquet(src)
-    spark.createDataFrame(changes[2:], schema).write.mode("append").parquet(src)
-
-    snap = f"{tmpdir}/cdc_snap"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = streaming_cdc_apply_versioned(stream, snap, f"{tmpdir}/cdc_ckpt", ["k"])
-    q.awaitTermination()
-    got = {(r.k, r.name, r.v) for r in read_versioned(spark, snap).collect()}
-
-    full = cdc_apply(
-        spark.createDataFrame([], "k LONG, name STRING, v LONG"),
-        spark.createDataFrame(changes, schema),
-        ["k"],
-    )
-    want = {(r.k, r.name, r.v) for r in full.collect()}
-    assert got == want
-    assert got == {(1, "a2", 11), (3, "c", 30)}
-
-
-def test_streaming_cdc_replayed_epoch_repairs_crashed_swap(spark, tmpdir, monkeypatch):
-    """A REPLAYED (already committed) epoch arriving after a different
-    epoch crashed mid-commit must clean up the crashed writer's
-    unpublished data dir before its no-op return, and leave readers on
-    the last committed snapshot."""
-    import os
-    import shutil
-
-    from pyspark.sql import types as T
-
-    from hse_etl_ochirov_aldar_spark.operators.cdc import (
-        cdc_apply_versioned,
-        streaming_cdc_apply_versioned,
-    )
-    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("v", T.LongType()),
-            T.StructField("ver", T.LongType()),
-            T.StructField("op", T.StringType()),
-        ]
-    )
-    src = f"{tmpdir}/cdc_rsrc"
-    spark.createDataFrame([(1, 10, 1, "I"), (2, 20, 1, "I")], schema).write.parquet(src)
-    snap = f"{tmpdir}/cdc_rsnap"
-    stream = spark.readStream.schema(schema).parquet(src)
-    streaming_cdc_apply_versioned(
-        stream, snap, f"{tmpdir}/cdc_rckpt1", ["k"]
-    ).awaitTermination()
-    want = {(r.k, r.v) for r in read_versioned(spark, snap).collect()}
-    assert want == {(1, 10), (2, 20)}
-    # a later epoch dies just before its marker rename
-    later = spark.createDataFrame([(1, None, 2, "D")], schema)
-    crash(
-        monkeypatch,
-        lambda: cdc_apply_versioned(spark, snap, later, ["k"], epoch=1),
-        2,
-    )
-    assert os.path.exists(f"{snap}/v00000002")
-    # fresh checkpoint replays epoch 0, which is already committed
-    shutil.rmtree(f"{tmpdir}/cdc_rckpt1")
-    stream2 = spark.readStream.schema(schema).parquet(src)
-    streaming_cdc_apply_versioned(
-        stream2, snap, f"{tmpdir}/cdc_rckpt2", ["k"]
-    ).awaitTermination()
-    got = {(r.k, r.v) for r in read_versioned(spark, snap).collect()}
-    assert got == want
-    assert not os.path.exists(f"{snap}/v00000002")
-
-
 def test_streaming_ivm_replayed_epoch_repairs_crashed_swap(spark, tmpdir, monkeypatch):
     """Same for the additive mart: the replayed epoch removes the
     crashed refresh's unpublished data dir, and stays a no-op for the
@@ -1186,7 +946,7 @@ def test_leakage_safe_split_tolerates_existing_rep_column(spark):
     assert "_rep" in out.columns  # caller metadata untouched
 
 
-def test_streaming_decontaminate_epoch_replay_idempotent(spark, sf_dir, tmpdir):
+def test_overwrite_window_epoch_replay_idempotent(spark, sf_dir, tmpdir):
     """A foreachBatch sink that writes each epoch's partition through
     overwrite_window rewrites that partition when a batch is replayed
     (at-least-once foreachBatch) instead of appending duplicates."""
@@ -1194,7 +954,7 @@ def test_streaming_decontaminate_epoch_replay_idempotent(spark, sf_dir, tmpdir):
 
     from hse_etl_ochirov_aldar_spark.sources.readers import load_table
 
-    out = f"{tmpdir}/decon_replay_out"
+    out = f"{tmpdir}/replay_out"
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 30)
@@ -1206,377 +966,6 @@ def test_streaming_decontaminate_epoch_replay_idempotent(spark, sf_dir, tmpdir):
             spark, docs.withColumn("batch_epoch", F.lit(7)), out, "batch_epoch"
         )
     assert spark.read.parquet(out).count() == 30
-
-
-def test_streaming_hll_uniques_incremental_and_replay_safe(spark, sf_dir, tmpdir):
-    """Two-wave availableNow runs build the sketch state incrementally
-    (second run reads only new files via the checkpoint); estimates
-    track the exact per-day distinct within the lgK=12 bound; and
-    re-merging a replayed batch (the at-least-once seam) changes no
-    estimate — HLL registers take max, so replay is a no-op."""
-    from hse_etl_ochirov_aldar_spark.streaming.daily import (
-        hll_daily_state_merge,
-        hll_uniques_estimates,
-        streaming_hll_uniques,
-    )
-
-    ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    ev = ev.select("event_id", "ts", "user_id", "event_type", "value",
-                   F.lit(None).cast("string").alias("props"))
-    waves = [
-        ev.where(F.pmod(F.col("event_id"), 2) == i).cache() for i in (0, 1)
-    ]
-    src = f"{tmpdir}/events_src"
-    state = f"{tmpdir}/hll_state"
-    ckpt = f"{tmpdir}/ckpt"
-
-    for i, wave in enumerate(waves):
-        wave.write.mode("append").parquet(src)
-        q = streaming_hll_uniques(spark, src, state, ckpt)
-        q.awaitTermination(120)
-        # after wave 0 the state must already cover exactly wave 0
-        if i == 0:
-            est0 = {
-                str(r.day): r.n_users_est
-                for r in hll_uniques_estimates(spark, state).collect()
-            }
-            exact0 = {
-                str(r.day): r.n
-                for r in waves[0]
-                .select(F.col("ts").cast("date").alias("day"), "user_id")
-                .groupBy("day")
-                .agg(F.count_distinct("user_id").alias("n"))
-                .collect()
-            }
-            assert set(est0) == set(exact0)
-
-    est = {
-        str(r.day): r.n_users_est
-        for r in hll_uniques_estimates(spark, state).collect()
-    }
-    exact = {
-        str(r.day): r.n
-        for r in ev.select(F.col("ts").cast("date").alias("day"), "user_id")
-        .groupBy("day")
-        .agg(F.count_distinct("user_id").alias("n"))
-        .collect()
-    }
-    assert set(est) == set(exact)
-    for day, n in exact.items():
-        assert abs(est[day] - n) <= max(2, 0.05 * n), (day, est[day], n)
-
-    # trailing-7-day reader: never touches raw data, must cover the
-    # union of the window's users within the same bound
-    exact7 = {
-        str(r.wday): r.n
-        for r in ev.select(F.col("ts").cast("date").alias("day"), "user_id")
-        .distinct()
-        .select(
-            F.explode(
-                F.sequence(F.col("day"), F.date_add(F.col("day"), 6))
-            ).alias("wday"),
-            "user_id",
-        )
-        .groupBy("wday")
-        .agg(F.count_distinct("user_id").alias("n"))
-        .collect()
-    }
-    for r in hll_uniques_estimates(spark, state, window_days=7).collect():
-        n = exact7[str(r.day)]
-        assert abs(r.n_users_est - n) <= max(2, 0.05 * n), (str(r.day), r.n_users_est, n)
-
-    # replay: merge wave 1 AGAIN directly (simulating a foreachBatch
-    # retry after a crash-after-write) — estimates must not move
-    days1 = waves[1].select(F.col("ts").cast("date").alias("day"), "user_id")
-    hll_daily_state_merge(spark, days1, state)
-    replayed = {
-        str(r.day): r.n_users_est
-        for r in hll_uniques_estimates(spark, state).collect()
-    }
-    assert replayed == est
-    for w in waves:
-        w.unpersist()
-
-
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_tws_processor_fold_matches_apply_in_pandas_fold(spark):
-    """Executable everywhere: drive the transformWithStateInPandas
-    processor's fold directly with injected fake state handles and
-    assert it emits exactly what the applyInPandasWithState fold emits
-    on the same batches, leaving identical state — the two streaming
-    sessionizers are one algorithm behind two engine APIs."""
-    import pandas as pd
-
-    from hse_etl_ochirov_aldar_spark.streaming.sessionize import (
-        _make_sessionizer,
-        _make_tws_processor,
-    )
-
-    batches = [
-        pd.DataFrame(
-            {"ts_us": [0, 10_000_000, 9_000_000_000], "value": [1.0, 2.5, None]}
-        ),
-        pd.DataFrame(
-            {"ts_us": [9_050_000_000, 20_000_000_000], "value": [4.0, 0.5]}
-        ),
-    ]
-
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-    class FakeGroupState:
-        def __init__(self):
-            self.v = None
-
-        @property
-        def exists(self):
-            return self.v is not None
-
-        @property
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    proc = _make_tws_processor(gap_seconds=1800)
-    handle = FakeHandle()
-    proc.init(handle)
-    old_fold = _make_sessionizer(gap_seconds=1800)
-    gs = FakeGroupState()
-
-    for batch in batches:
-        tws_out = list(proc.handleInputRows((7,), iter([batch.copy()]), None))
-        old_out = list(old_fold((7,), iter([batch.copy()]), gs))
-        tws_rows = [tuple(r) for df in tws_out for r in df.itertuples(index=False)]
-        old_rows = [tuple(r) for df in old_out for r in df.itertuples(index=False)]
-        assert tws_rows == old_rows
-        assert handle.state.v == gs.v  # identical state tuple after each batch
-    assert handle.state.v is not None
-    # three sessions total: two closed across the batches, one open in state
-    assert handle.state.v[2] > 0
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas execution needs google.protobuf "
-    "(Spark's TWS state protocol); not installed in this container",
-)
-def test_tws_sessionize_equals_apply_in_pandas_and_batch(spark, sf_dir, tmpdir):
-    """The transformWithStateInPandas sessionizer (Spark 4 stateful
-    API) must emit exactly the same closed sessions as the
-    applyInPandasWithState twin and the batch sessionizer minus each
-    user's open tail session — one contract, three implementations.
-    Requires the RocksDB state store provider + protobuf (see the
-    sessionize_stream_tws docstring gate)."""
-    from pyspark.sql import types as T
-    from pyspark.sql import Window
-    from hse_etl_ochirov_aldar_spark.streaming.sessionize import (
-        sessionize_batch,
-        sessionize_stream_tws,
-    )
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select("user_id", "ts", "value")
-    )
-    src = f"{tmpdir}/tws_src"
-    ev.repartition(1).sortWithinPartitions("ts").write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(src)
-    # TWS runs only on the RocksDB state store; scope the provider to
-    # this query and restore the session default afterwards.
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            sessionize_stream_tws(stream, gap_seconds=7200)
-            .writeStream.format("memory")
-            .queryName("t_tws_sessions")
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmpdir}/tws_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-    streamed = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events,
-         r.total_value)
-        for r in spark.table("t_tws_sessions").collect()
-    }
-
-    batch = sessionize_batch(ev, gap_seconds=7200)
-    w_last = Window.partitionBy("user_id").orderBy(F.desc("session_start"))
-    closed_batch = (
-        batch.withColumn("_rn", F.row_number().over(w_last)).where(F.col("_rn") > 1)
-    )
-    expected = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events,
-         r.total_value)
-        for r in closed_batch.collect()
-    }
-    assert streamed == expected
-    assert len(streamed) > 0
-
-
-def test_hll_state_merge_recovers_from_leftover_staging(spark, tmpdir, monkeypatch):
-    """A merge that died after staging its result but before the marker
-    rename must not leak into the state: the next merge discards the
-    unpublished staging dir and commits its own batch on the old
-    history."""
-    from hse_etl_ochirov_aldar_spark.streaming.daily import (
-        hll_daily_state_merge,
-        hll_uniques_estimates,
-    )
-    import datetime as dt
-    import os
-
-    state = f"{tmpdir}/hll_state"
-    d0 = dt.date(2024, 1, 1)
-
-    def merge(lo, hi):
-        hll_daily_state_merge(
-            spark,
-            spark.createDataFrame(
-                [(d0, i) for i in range(lo, hi)], "day date, user_id long"
-            ),
-            state,
-        )
-
-    def estimate():
-        return {
-            str(r.day): r.n_users_est
-            for r in hll_uniques_estimates(spark, state).collect()
-        }[str(d0)]
-
-    merge(0, 600)
-    # commit mutations: marker create, marker rename <- crash
-    crash(monkeypatch, lambda: merge(5000, 6000), 1)
-    assert os.path.exists(state + ".staged")
-    merge(600, 900)
-    assert abs(estimate() - 900) <= max(2, 0.05 * 900)
-    assert sorted(os.listdir(tmpdir)) == ["hll_state"]
-
-
-def test_hll_state_merge_recovers_from_crash_mid_swap(spark, tmpdir, monkeypatch):
-    """Crash after the commit was published and the old state deleted,
-    before the staged state was renamed in: the state path is missing
-    and the only copy of the merged history is the staging dir. The
-    next merge must roll the commit forward — not rebuild state from
-    its own batch."""
-    from hse_etl_ochirov_aldar_spark.streaming.daily import (
-        hll_daily_state_merge,
-        hll_uniques_estimates,
-    )
-    import datetime as dt
-    import os
-
-    state = f"{tmpdir}/hll_state"
-    d0 = dt.date(2024, 1, 1)
-
-    def merge(lo, hi):
-        hll_daily_state_merge(
-            spark,
-            spark.createDataFrame(
-                [(d0, i) for i in range(lo, hi)], "day date, user_id long"
-            ),
-            state,
-        )
-
-    def estimate():
-        return {
-            str(r.day): r.n_users_est
-            for r in hll_uniques_estimates(spark, state).collect()
-        }[str(d0)]
-
-    merge(0, 600)
-    # commit mutations: marker create, marker rename, delete old state,
-    # rename staged state <- crash
-    crash(monkeypatch, lambda: merge(600, 900), 3)
-    assert not os.path.exists(state)
-    merge(0, 100)  # already-counted ids: a no-op on the estimate
-    assert abs(estimate() - 900) <= max(2, 0.05 * 900)
-    assert sorted(os.listdir(tmpdir)) == ["hll_state"]
-
-
-def test_hll_state_merge_recovers_from_old_aside(spark, tmpdir, monkeypatch):
-    """Crash right after the commit was published, with the old state
-    still in place: a plain reader sees the old history, and the next
-    merge rolls the published commit forward before reading."""
-    from hse_etl_ochirov_aldar_spark.streaming.daily import (
-        hll_daily_state_merge,
-        hll_uniques_estimates,
-    )
-    import datetime as dt
-    import os
-
-    state = f"{tmpdir}/hll_state"
-    d0 = dt.date(2024, 1, 1)
-
-    def merge(lo, hi):
-        hll_daily_state_merge(
-            spark,
-            spark.createDataFrame(
-                [(d0, i) for i in range(lo, hi)], "day date, user_id long"
-            ),
-            state,
-        )
-
-    def estimate():
-        return {
-            str(r.day): r.n_users_est
-            for r in hll_uniques_estimates(spark, state).collect()
-        }[str(d0)]
-
-    merge(0, 600)
-    crash(monkeypatch, lambda: merge(600, 900), 2)
-    assert abs(estimate() - 600) <= max(2, 0.05 * 600)
-    merge(0, 100)
-    assert abs(estimate() - 900) <= max(2, 0.05 * 900)
-    assert sorted(os.listdir(tmpdir)) == ["hll_state"]
 
 
 def test_ivm_mart_recovers_from_crash_mid_swap(spark, tmpdir, monkeypatch):
@@ -1808,29 +1197,6 @@ def test_streaming_versioned_mart_equals_batch_aggregate(spark, sf_dir, tmpdir):
         for r in read_versioned(spark, f"{tmpdir}/vivm_root").collect()
     }
     assert got2 == want
-
-
-def test_streaming_cdc_versioned_exactly_once(spark, tmpdir):
-    """cdc_apply_versioned: the delete-resurrection replay the
-    epoch-dir variant cannot fully rule out is impossible — replaying
-    an earlier epoch whose 'I' was later deleted is a committed-epoch
-    no-op, and readers only ever see committed snapshots."""
-    from hse_etl_ochirov_aldar_spark.operators.cdc import cdc_apply_versioned
-    from hse_etl_ochirov_aldar_spark.sources.sinks import read_versioned
-
-    root = f"{tmpdir}/vcdc"
-    cols = ["k", "val", "ver", "op"]
-    b0 = spark.createDataFrame([("x", 1.0, 1, "I"), ("y", 2.0, 1, "I")], cols)
-    b1 = spark.createDataFrame([("x", None, 2, "D"), ("z", 3.0, 2, "I")], cols)
-
-    assert cdc_apply_versioned(spark, root, b0, ["k"], epoch=0) == 1
-    assert cdc_apply_versioned(spark, root, b1, ["k"], epoch=1) == 2
-    snap = {(r.k, r.val) for r in read_versioned(spark, root).collect()}
-    assert snap == {("y", 2.0), ("z", 3.0)}
-    # replay of epoch 0 after epoch 1: must NOT resurrect the deleted 'x'
-    assert cdc_apply_versioned(spark, root, b0, ["k"], epoch=0) is None
-    snap2 = {(r.k, r.val) for r in read_versioned(spark, root).collect()}
-    assert snap2 == snap
 
 
 def test_chunk_text_is_streaming_composable(spark, tmpdir):

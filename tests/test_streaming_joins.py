@@ -1,5 +1,5 @@
-"""foreachBatch upsert sinks (plain and versioned), native session
-windows over a stream, and the EWMA scorer's hot-key cost."""
+"""foreachBatch upsert sinks (plain and versioned) and the EWMA
+scorer's hot-key cost."""
 
 from __future__ import annotations
 
@@ -73,61 +73,6 @@ def test_foreach_batch_upsert_sink(spark, sf_dir, tmpdir):
     q.awaitTermination()
     rows = {(r.user_id, r.ver) for r in spark.read.parquet(target).collect()}
     assert rows == {(100, 2), (200, 3)}  # newest per user kept
-
-
-def test_native_session_window_streaming(spark, sf_dir, tmpdir):
-    """F.session_window in Structured Streaming: watermarked append-mode
-    session aggregation emits closed sessions; totals match the batch
-    native form for every emitted session."""
-    from pyspark.sql import types as T
-
-    from hse_etl_ochirov_aldar_spark.sources.readers import load_table
-    from hse_etl_ochirov_aldar_spark.streaming.sessionize import sessionize_native
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select("user_id", "ts", "value")
-    )
-    src = f"{tmpdir}/ns_src"
-    ev.write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema).parquet(src).withWatermark("ts", "1 day")
-    )
-    q = (
-        stream.groupBy(
-            "user_id", F.session_window("ts", "7201 seconds").alias("sw")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("sw.start").alias("w_start"), "n_events")
-        .writeStream.format("memory")
-        .queryName("t_native_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmpdir}/ns_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = {
-        (r.user_id, str(r.w_start)): r.n_events
-        for r in spark.table("t_native_sessions").collect()
-    }
-    batch = {
-        (r.user_id, str(r.session_start)): r.n_events
-        for r in sessionize_native(ev, gap_seconds=7201).collect()
-    }
-    # every emitted (closed) session matches its batch twin
-    assert len(streamed) > 0
-    for key, n in streamed.items():
-        assert batch.get(key) == n, key
 
 
 def test_write_stream_versioned_upsert(spark, tmp_path):
