@@ -117,19 +117,19 @@ def main(argv: list[str] | None = None) -> int:
     from .plans.quality import expect_nonempty
     from .queries import _events_base
     from .operators.percentile import percentile_trim
-    from .sources.sinks import write_overwrite, write_partitioned
+    from .sources.sinks import read_table, write_overwrite, write_partitioned
 
     base = _events_base(spark, args.sf_dir)
     clean = percentile_trim(base, "value").withColumn(
         "month", F.date_format("day", "yyyy-MM")
     )
     write_partitioned(expect_nonempty(clean, "clean"), f"{args.out}/clean_events", "month")
-    daily = daily_avg(spark.read.parquet(f"{args.out}/clean_events"))
+    daily = daily_avg(read_table(spark, f"{args.out}/clean_events"))
     write_overwrite(expect_nonempty(daily, "daily"), f"{args.out}/daily_avg")
-    extremes = topk_extremes(spark.read.parquet(f"{args.out}/daily_avg"))
+    extremes = topk_extremes(read_table(spark, f"{args.out}/daily_avg"))
     write_overwrite(expect_nonempty(extremes, "extremes"), f"{args.out}/daily_extremes")
     for layer in ("clean_events", "daily_avg", "daily_extremes"):
-        n = spark.read.parquet(f"{args.out}/{layer}").count()
+        n = read_table(spark, f"{args.out}/{layer}").count()
         print(f"{layer}: {n} rows")
     return 0
 

@@ -123,7 +123,8 @@ def stage_parquet(
     path = f"{stage_root(spark)}/{_unique_name(prefix)}"
     w = df.coalesce(coalesce) if coalesce else df
     w.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    # the frame's own schema: the read-back starts no inference job
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def purge_stage_root() -> None:

@@ -81,9 +81,18 @@ def global_percentile_bounds(
                 F.col(value_col), F.lit(upper), F.lit(accuracy)
             ).alias("p_hi"),
         )
-    return df.agg(
-        F.percentile(F.col(value_col), F.lit(lower)).alias("p_lo"),
-        F.percentile(F.col(value_col), F.lit(upper)).alias("p_hi"),
+    return _exact_bounds(df, value_col, [], lower, upper)
+
+
+def _exact_bounds(
+    df: DataFrame, value_col: str, group_cols: list[str], lower: float, upper: float
+) -> DataFrame:
+    """Exact ``p_lo``/``p_hi`` per group from ONE ``percentile`` aggregate
+    over both percentages: one value-count map per group instead of
+    two, with the same values as two single-percentage aggregates."""
+    pair = F.percentile(F.col(value_col), F.array(F.lit(lower), F.lit(upper)))
+    return df.groupBy(*group_cols).agg(pair.alias("__p")).select(
+        *group_cols, F.col("__p")[0].alias("p_lo"), F.col("__p")[1].alias("p_hi")
     )
 
 
@@ -180,10 +189,7 @@ def grouped_percentile_trim(
         else:
             bounds_j = F.broadcast(bounds)
     elif strategy == "buffer":
-        bounds = df.groupBy(*group_cols).agg(
-            F.percentile(F.col(value_col), F.lit(lower)).alias("p_lo"),
-            F.percentile(F.col(value_col), F.lit(upper)).alias("p_hi"),
-        )
+        bounds = _exact_bounds(df, value_col, group_cols, lower, upper)
         bounds_j = F.broadcast(bounds)
     else:
         raise ValueError(f"unknown strategy {strategy!r} (buffer|rank)")
@@ -226,10 +232,7 @@ def grouped_percentile_clamp(
         else:
             bounds_j = F.broadcast(bounds)
     elif strategy == "buffer":
-        bounds = df.groupBy(*group_cols).agg(
-            F.percentile(F.col(value_col), F.lit(lower)).alias("p_lo"),
-            F.percentile(F.col(value_col), F.lit(upper)).alias("p_hi"),
-        )
+        bounds = _exact_bounds(df, value_col, group_cols, lower, upper)
         bounds_j = F.broadcast(bounds)
     else:
         raise ValueError(f"unknown strategy {strategy!r} (buffer|rank)")

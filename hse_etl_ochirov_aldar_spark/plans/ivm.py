@@ -5,11 +5,17 @@ The reference rebuilds marts by re-aggregating history every run
 re-scans the window). For distributive aggregates — SUM and COUNT, and
 anything derived from them downstream (AVG = sum/count, rates, shares)
 — the mart can instead absorb each new fact batch WITHOUT touching
-fact history: aggregate the delta alone, combine it with the existing
-mart by per-group addition, commit atomically. Cost per refresh is
-O(delta + mart), not O(history) — at 100 TB of facts with a
-groups-sized mart, that is the difference between a per-batch job and
-an impossible one.
+fact history: add the delta to the existing mart per group, commit
+atomically. Cost per refresh is O(delta + mart), not O(history) — at
+100 TB of facts with a groups-sized mart, that is the difference
+between a per-batch job and an impossible one.
+
+One aggregation per refresh: each delta row is projected to the mart's
+shape (``n_rows`` = weight, ``sum_<c>`` = c × weight), unioned with the
+mart and summed per group, so the refresh shuffles once. For integer
+measures the sums are those of aggregating the delta first; a
+floating-point measure may differ in the last ulp, since the order of
+additions changes.
 
 Retractions come free from the algebra: a delta row with ``weight=-1``
 subtracts its measures (late-arriving corrections, GDPR deletes,
@@ -40,36 +46,6 @@ from pyspark.sql import functions as F
 from ..sources.sinks import _commit_versioned
 
 
-def aggregate_delta(
-    delta: DataFrame,
-    group_cols: Sequence[str],
-    sum_cols: Sequence[str],
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Partial-aggregate one fact batch into mart shape: per group,
-    ``n_rows`` (sum of weights) and ``sum_<c>`` per measure (measure ×
-    weight). ``weight_col=None`` means every row weighs +1."""
-    w = F.col(weight_col) if weight_col else F.lit(1)
-    aggs = [F.sum(w.cast("long")).alias("n_rows")] + [
-        F.sum(F.col(c) * w).alias(f"sum_{c}") for c in sum_cols
-    ]
-    return delta.groupBy(*group_cols).agg(*aggs)
-
-
-def combine_marts(
-    mart: DataFrame, delta_agg: DataFrame, group_cols: Sequence[str]
-) -> DataFrame:
-    """Per-group addition of two mart-shaped relations; groups whose
-    combined ``n_rows`` is zero (fully retracted) drop out."""
-    meas = [c for c in mart.columns if c not in group_cols]
-    combined = (
-        mart.unionByName(delta_agg)
-        .groupBy(*group_cols)
-        .agg(*[F.sum(c).alias(c) for c in meas])
-    )
-    return combined.where(F.col("n_rows") != 0)
-
-
 def maintain_additive_mart_versioned(
     spark: SparkSession,
     root: str,
@@ -80,24 +56,31 @@ def maintain_additive_mart_versioned(
     epoch: int | None = None,
     keep_versions: int = 2,
 ) -> int | None:
-    """EXACTLY-ONCE additive-mart refresh: aggregate one delta batch,
-    add it to the current committed mart (the first call bootstraps)
-    and commit the result with ``epoch`` in the same marker. If
-    ``epoch`` <= the committed epoch the batch is a replay: it is not
-    applied and None is returned. A crash before the marker
-    rename leaves only an unpublished data dir, so the replayed batch
+    """EXACTLY-ONCE additive-mart refresh: add one delta batch to the
+    current committed mart in one aggregation (the first call
+    bootstraps from the batch alone) and commit the result with
+    ``epoch`` in the same marker. If ``epoch`` <= the committed epoch
+    the batch is a replay: it is not applied and None is returned. A
+    crash before the marker rename leaves only an unpublished data dir, so the replayed batch
     recomputes from the last COMMITTED mart and applies exactly once
     wherever the crash lands. Returns the committed version, or None
     on replay. O(delta + mart) per refresh. A Structured Streaming
     ``foreachBatch`` sink passes its batch id as ``epoch``, so a
     replayed micro-batch is a no-op.
     """
-    delta_agg = aggregate_delta(delta, group_cols, sum_cols, weight_col)
+    w = F.col(weight_col) if weight_col else F.lit(1)
+    rows = delta.select(
+        *group_cols,
+        w.cast("long").alias("n_rows"),
+        *[(F.col(c) * w).alias(f"sum_{c}") for c in sum_cols],
+    )
 
     def combine(mart: DataFrame | None) -> DataFrame:
-        if mart is None:
-            return delta_agg.where(F.col("n_rows") != 0)
-        return combine_marts(mart, delta_agg, group_cols)
+        both = rows if mart is None else mart.unionByName(rows)
+        combined = both.groupBy(*group_cols).agg(
+            *[F.sum(c).alias(c) for c in rows.columns if c not in group_cols]
+        )
+        return combined.where(F.col("n_rows") != 0)
 
     return _commit_versioned(
         spark, root, combine, epoch=epoch, keep_versions=keep_versions

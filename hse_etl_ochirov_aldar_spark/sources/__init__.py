@@ -3,6 +3,7 @@ from .views import register_views, sql_query
 from .sinks import (
     compact_parquet,
     overwrite_window,
+    read_table,
     upsert_keep_newest,
     write_overwrite,
     write_partitioned,
@@ -15,6 +16,7 @@ __all__ = [
     "load_table",
     "compact_parquet",
     "overwrite_window",
+    "read_table",
     "upsert_keep_newest",
     "write_overwrite",
     "write_partitioned",

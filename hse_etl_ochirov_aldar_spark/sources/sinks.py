@@ -48,6 +48,20 @@ and data dirs older than ``keep_versions`` are garbage-collected.
 Markers, staging dirs and the log all live outside the data
 directories, which hold only live files once each call returns.
 
+Schema record. Each commit also records the table's schema, as
+``_schema.json``, inside the committed unit, so the record becomes
+visible atomically with the data: in the staging dir of a whole-table
+commit, in ``v<n+1>`` of a versioned one (written before the marker),
+and, for a partition-unit commit, in the marker, from which the apply
+step writes it to the table root. A partition-unit record is the union
+of the recorded and the new schema and is rewritten only when that
+union changes; a table that has data but no record keeps none, since
+its untouched units may hold columns the write does not know.
+:func:`read_table` reads with the record, so re-reading a table the
+engine wrote costs no schema-inference job; without a record it infers.
+Spark skips ``_``-prefixed files and ``*.parquet`` globs do not match
+the record.
+
 Scale: a window rebuild or partition-scoped upsert never rewrites
 untouched partitions; the commit costs a handful of metadata calls per
 replaced unit, never a second copy of the data.
@@ -58,8 +72,11 @@ from __future__ import annotations
 import json
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+SCHEMA_RECORD = "_schema.json"
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -89,6 +106,47 @@ def _read_text(fs, jpath) -> str:
         stream.close()
 
 
+def _write_text(fs, jpath, text: str) -> None:
+    out = fs.create(jpath, True)
+    out.write(bytearray(text, "utf-8"))
+    out.close()
+
+
+def _table_schema(df: DataFrame, partition_cols=()) -> dict:
+    """``df``'s schema in its written layout, as JSON: partition
+    columns last, as a read of the table returns them. (A Parquet read
+    makes every column nullable, recorded or not.)"""
+    fields = [f for f in df.schema.fields if f.name not in partition_cols]
+    fields += [df.schema[c] for c in partition_cols]
+    return StructType(fields).jsonValue()
+
+
+def _schema_union(old: dict, new: dict) -> dict:
+    """``old``'s fields in order, each with its type in ``new`` if it is
+    there, then the fields only ``new`` has."""
+    by_name = {f["name"]: f for f in new["fields"]}
+    fields = [by_name.pop(f["name"], f) for f in old["fields"]]
+    return {**new, "fields": fields + list(by_name.values())}
+
+
+def _recorded_schema(fs, jrecord) -> dict | None:
+    return json.loads(_read_text(fs, jrecord)) if fs.exists(jrecord) else None
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read a table these sinks wrote, with the schema its commit
+    recorded, so the read starts no schema-inference job. A table
+    without a record (written by something else, or before records
+    existed) is read by inference."""
+    record = _recorded_schema(
+        *_hadoop_fs(spark, f"{path.rstrip('/')}/{SCHEMA_RECORD}")
+    )
+    reader = spark.read
+    if record is not None:
+        reader = reader.schema(StructType.fromJson(record))
+    return reader.parquet(path)
+
+
 def _publish(fs, jmarker, payload: str) -> None:
     """Step 2: write ``<marker>.tmp`` carrying ``payload`` and rename it
     to ``jmarker``. Rename-to-a-NEW-NAME is atomic on HDFS/local (and
@@ -96,9 +154,7 @@ def _publish(fs, jmarker, payload: str) -> None:
     not, never half-written. Raises if the marker already exists
     (single-writer contract)."""
     jtmp = jmarker.suffix(".tmp")
-    out = fs.create(jtmp, True)
-    out.write(bytearray(payload, "utf-8"))
-    out.close()
+    _write_text(fs, jtmp, payload)
     if not fs.rename(jtmp, jmarker):
         fs.delete(jtmp, False)
         raise RuntimeError(
@@ -109,7 +165,8 @@ def _publish(fs, jmarker, payload: str) -> None:
 
 def _apply(spark: SparkSession, fs, jtable, commit: dict) -> None:
     """Step 3: replace each unit named by ``commit`` with its staged
-    copy, then retire the marker and the staging dir. Idempotent: a
+    copy, then retire the marker and the staging dir. A partition-unit
+    commit writes the schema record it carries first. Idempotent: a
     unit whose staged copy is gone was already moved into place."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
     jstaged = Path(jtable.getParent(), commit["staged"])
@@ -119,6 +176,8 @@ def _apply(spark: SparkSession, fs, jtable, commit: dict) -> None:
     else:
         if not fs.exists(jtable):
             fs.mkdirs(jtable)
+        if commit.get("schema") is not None:
+            _write_text(fs, Path(jtable, SCHEMA_RECORD), json.dumps(commit["schema"]))
         moves = [(Path(jstaged, u), Path(jtable, u)) for u in commit["units"]]
     for src, dst in moves:
         if fs.exists(src):
@@ -145,26 +204,40 @@ def _recover(spark: SparkSession, table: str) -> None:
 
 
 def _commit(
-    spark: SparkSession,
-    writer: DataFrameWriter,
+    df: DataFrame,
     table: str,
-    partition_col: str | None = None,
+    partition_cols: tuple[str, ...] = (),
+    partition_units: bool = False,
 ) -> None:
-    """Steps 1-3 for a plain-layout table: ``writer`` (a configured
-    ``df.write``) stages the new content, one marker publishes it, and
-    the units are moved into place. With ``partition_col`` the units
-    are the partition dirs the write produced; otherwise the unit is
-    the whole table. The caller has already run :func:`_recover`."""
+    """Steps 1-3 for a plain-layout table: ``df``, laid out by
+    ``partition_cols``, is staged with its schema record, one marker
+    publishes it, and the units are moved into place. With
+    ``partition_units`` the units are the ``partition_cols[0]`` dirs
+    the write produced; otherwise the unit is the whole table. The
+    caller has already run :func:`_recover`."""
+    spark = df.sparkSession
     table = table.rstrip("/")
     fs, jtable = _hadoop_fs(spark, table)
-    writer.mode("overwrite").parquet(table + ".staged")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(table + ".staged")
     jstaged = jtable.suffix(".staged")
-    units = None
-    if partition_col is not None:
+    schema = _table_schema(df, partition_cols)
+    commit = {"staged": jstaged.getName(), "units": None}
+    if partition_units:
         # listStatus preserves Spark's partition-value escaping
         names = [st.getPath().getName() for st in fs.listStatus(jstaged)]
-        units = sorted(n for n in names if n.startswith(f"{partition_col}="))
-    commit = {"staged": jstaged.getName(), "units": units}
+        prefix = f"{partition_cols[0]}="
+        commit["units"] = sorted(n for n in names if n.startswith(prefix))
+        if fs.exists(jtable):
+            old = _recorded_schema(fs, Path(jtable, SCHEMA_RECORD))
+            union = None if old is None else _schema_union(old, schema)
+            schema = None if union == old else union
+        commit["schema"] = schema
+    else:
+        _write_text(fs, Path(jstaged, SCHEMA_RECORD), json.dumps(schema))
     _publish(fs, jtable.suffix(".commit"), json.dumps(commit))
     _apply(spark, fs, jtable, commit)
 
@@ -174,9 +247,8 @@ def write_overwrite(df: DataFrame, path: str) -> None:
     whole-table unit. Spark's own ``mode("overwrite")`` deletes the
     target before its write job runs; staging first means a failed
     write leaves the previous table in place."""
-    spark = df.sparkSession
-    _recover(spark, path)
-    _commit(spark, df.write, path)
+    _recover(df.sparkSession, path)
+    _commit(df, path)
 
 
 def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:
@@ -188,9 +260,8 @@ def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:
     ``__HIVE_DEFAULT_PARTITION__`` directory — the analogue of the
     reference's DEFAULT partition (init.sql:107).
     """
-    spark = df.sparkSession
-    _recover(spark, path)
-    _commit(spark, df.write.partitionBy(*partition_cols), path)
+    _recover(df.sparkSession, path)
+    _commit(df, path, partition_cols)
 
 
 def overwrite_window(
@@ -202,7 +273,7 @@ def overwrite_window(
     HW-4/airflow/dags/iot_temperature.py:160-216). Each partition of
     ``df`` is one committed unit; the session conf is never touched."""
     _recover(spark, path)
-    _commit(spark, df.write.partitionBy(partition_col), path, partition_col)
+    _commit(df, path, (partition_col,), partition_units=True)
 
 
 def _keep_newest(
@@ -234,26 +305,31 @@ def upsert_keep_newest(
     With ``partition_col`` the upsert is PARTITION-SCOPED: only target
     partitions present in ``df`` are read and replaced — upserting one
     day into a 100 TB table touches that day, not the table. Requires
-    the target to be laid out by ``partition_col``. Without it the
-    whole table is the committed unit.
+    the target to be laid out by ``partition_col``. Contract: a key
+    never moves between partitions. The newest row is kept per
+    ``(partition_col, *key_cols)``, so a batch row whose key already
+    lives in another partition is a second row, whether or not that
+    partition is touched. The merged rows are hashed by
+    ``partition_col`` into at most one task per touched partition
+    (one shuffle), so the partitions are written in parallel, one file
+    each. Without ``partition_col`` the whole table is the committed
+    unit.
 
-    The merged result is shuffled and written once, to the staging dir
-    of the commit protocol; all touched partitions commit under one
-    marker. Target existence is checked explicitly via the Hadoop FS
-    API: a transient read error (permissions, corrupt footer)
-    propagates instead of being mistaken for "first write" and
-    silently discarding the table.
+    All touched partitions commit under one marker, with the schema
+    of the merged rows (a batch may add columns). Target existence is
+    checked explicitly via the Hadoop FS API: a transient read error
+    (permissions, corrupt footer) propagates instead of being mistaken
+    for "first write" and silently discarding the table.
     """
     path = path.rstrip("/")
     _recover(spark, path)
     fs, jpath = _hadoop_fs(spark, path)
     merged = df
+    if partition_col is not None:
+        touched = [r[0] for r in df.select(partition_col).distinct().collect()]
     if fs.exists(jpath):
-        existing = spark.read.parquet(path)
+        existing = read_table(spark, path)
         if partition_col is not None:
-            touched = [
-                r[0] for r in df.select(partition_col).distinct().collect()
-            ]
             # NULL partition values need an explicit isNull branch:
             # `col IN (..., NULL)` is NULL (never true) in SQL, so the
             # existing __HIVE_DEFAULT_PARTITION__ rows would be left
@@ -268,10 +344,13 @@ def upsert_keep_newest(
                 pred = pred | F.col(partition_col).isNull()
             existing = existing.where(pred)
         merged = existing.unionByName(df, allowMissingColumns=True)
-    writer = _keep_newest(merged, key_cols, version_col).write
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    _commit(spark, writer, path, partition_col)
+    if partition_col is None:
+        _commit(_keep_newest(merged, key_cols, version_col), path)
+        return
+    tasks = max(1, min(len(touched), spark.sparkContext.defaultParallelism))
+    merged = merged.repartition(tasks, partition_col)
+    newest = _keep_newest(merged, [partition_col, *key_cols], version_col)
+    _commit(newest, path, (partition_col,), partition_units=True)
 
 
 def compact_parquet(
@@ -308,7 +387,7 @@ def compact_parquet(
     _recover(spark, path)
     fs, jpath = _hadoop_fs(spark, path)
     size_bytes = fs.getContentSummary(jpath).getLength()
-    df = spark.read.parquet(path)
+    df = read_table(spark, path)
     n_files = max(1, math.ceil(size_bytes / (target_file_mb * 1024 * 1024)))
     if zorder_cols:
         if sort_col:
@@ -333,7 +412,7 @@ def compact_parquet(
         )
     else:
         out = df.repartition(n_files)
-    _commit(spark, out.write, path)
+    _commit(out, path)
     return n_files
 
 
@@ -405,12 +484,13 @@ def _commit_versioned(
 ) -> int | None:
     """The commit protocol for a versioned table. ``build`` maps the
     current committed snapshot (None before the first commit) to the
-    next one, which is staged in ``v<n+1>`` and published by the
-    ``_log/<n+1>.commit`` rename, with ``epoch`` recorded in the same
-    marker. Recovery is deleting the unpublished ``v<n+1>`` a crashed
-    writer may have left; it runs first, even for a replay. Returns the
-    committed version, or None when ``epoch`` <= the committed epoch
-    (a replayed batch whose effect is already committed)."""
+    next one, which is staged in ``v<n+1>`` with its schema record and
+    published by the ``_log/<n+1>.commit`` rename, with ``epoch``
+    recorded in the same marker. Recovery is deleting the unpublished
+    ``v<n+1>`` a crashed writer may have left; it runs first, even for
+    a replay. Returns the committed version, or None when ``epoch`` <=
+    the committed epoch (a replayed batch whose effect is already
+    committed)."""
     cur = current_version(spark, root)
     nxt = (cur or 0) + 1
     staged = _versioned_data_dir(root, nxt)
@@ -422,8 +502,11 @@ def _commit_versioned(
             return None
     snapshot = None
     if cur is not None:
-        snapshot = spark.read.parquet(_versioned_data_dir(root, cur))
-    build(snapshot).write.parquet(staged)
+        snapshot = read_table(spark, _versioned_data_dir(root, cur))
+    out = build(snapshot)
+    out.write.parquet(staged)
+    jrecord = spark._jvm.org.apache.hadoop.fs.Path(jstaged, SCHEMA_RECORD)
+    _write_text(fs, jrecord, json.dumps(_table_schema(out)))
     payload = f"v{nxt:08d}\n" + (f"epoch={epoch}\n" if epoch is not None else "")
     _, jmarker = _hadoop_fs(spark, f"{_versioned_log_dir(root)}/{nxt:08d}.commit")
     _publish(fs, jmarker, payload)
@@ -456,7 +539,7 @@ def read_versioned(
                 f"version {version} of {root} is not committed+retained "
                 f"(available: {available})"
             )
-    return spark.read.parquet(_versioned_data_dir(root, version))
+    return read_table(spark, _versioned_data_dir(root, version))
 
 
 def versioned_upsert(

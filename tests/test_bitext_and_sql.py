@@ -4,7 +4,6 @@ facade (sources/views.py)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_margin_mining_mutual_top1_and_hub_suppression(spark):

@@ -5,8 +5,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import functions as F
-
 
 def _bucket(key, k: int) -> int:
     return int(hashlib.md5(str(key).encode()).hexdigest()[:8], 16) % k

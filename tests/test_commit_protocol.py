@@ -6,8 +6,11 @@ way the next writer would. A DuckDB scan of the Parquet files must then
 show EXACTLY the previous snapshot (crash before the marker rename) or
 EXACTLY the new one (crash after it): never a mix, never a lost
 partition, and no staging dir or marker left beside the table. The
-versioned commit replays its epoch instead, which must apply the batch
-exactly once; a second replay must be a no-op.
+schema record is one of the steps, so a crash also lands between the
+data and the record: ``read_table`` must then see the old schema with
+the old data or the new schema with the new data. The versioned commit
+replays its epoch instead, which must apply the batch exactly once; a
+second replay must be a no-op.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from hse_etl_ochirov_aldar_spark.sources.sinks import (
     _recover,
     compact_parquet,
     overwrite_window,
+    read_table,
     upsert_keep_newest,
     write_partitioned,
 )
@@ -55,6 +59,19 @@ WRITERS = {
         ),
         10,
     ),
+    # adds a column: the apply step rewrites the root's schema record
+    "upsert_widening": (
+        _prepare_facts,
+        lambda spark, t: upsert_keep_newest(
+            spark,
+            spark.createDataFrame(
+                [(1, "a", 2, "x"), (7, "d", 1, "y")],
+                FACT + ", note STRING",
+            ),
+            t, ["k"], "ver", partition_col="day",
+        ),
+        9,
+    ),
     "upsert_whole_table": (
         lambda spark, t: upsert_keep_newest(
             spark, _facts(spark, [(1, "a", 1), (2, "b", 1)]), t, ["k"], "ver"
@@ -62,7 +79,7 @@ WRITERS = {
         lambda spark, t: upsert_keep_newest(
             spark, _facts(spark, [(2, "b", 2), (3, "c", 1)]), t, ["k"], "ver"
         ),
-        5,
+        6,
     ),
     "overwrite_window": (
         _prepare_facts,
@@ -76,13 +93,13 @@ WRITERS = {
         lambda spark, t: write_partitioned(
             _facts(spark, [(10, "b", 1), (11, "e", 1)]), t, "day"
         ),
-        5,
+        6,
     ),
     "compact_parquet": (
         lambda spark, t: spark.range(40).selectExpr("id", "id * 2 AS v")
         .repartition(4).write.parquet(t),
         lambda spark, t: compact_parquet(spark, t),
-        5,
+        6,
     ),
 }
 
@@ -96,7 +113,7 @@ def _snapshot(table: str, old_files: frozenset):
     )
     rows = duckdb.sql(
         f"SELECT * FROM read_parquet('{table}/**/*.parquet', "
-        "hive_partitioning = true) ORDER BY ALL"
+        "hive_partitioning = true, union_by_name = true) ORDER BY ALL"
     ).fetchall()
     return rows, files
 
@@ -116,8 +133,9 @@ def _siblings(table: str) -> list[str]:
 
 @pytest.fixture(scope="module")
 def baselines(spark, tmp_path_factory):
-    """Per writer: the prepared table, its snapshot, the snapshot after
-    a fault-free write, and the mutations that write made."""
+    """Per writer: the prepared table, its snapshot and schema, the
+    snapshot and schema after a fault-free write, and the index of the
+    marker rename among the mutations that write made."""
     cache = {}
 
     def get(name):
@@ -135,7 +153,8 @@ def baselines(spark, tmp_path_factory):
                 i for i, s in enumerate(plan.steps) if s == "rename t.commit.tmp"
             )
             old_files = _data_files(base)
-            old, new = _snapshot(base, old_files), _snapshot(ok, old_files)
+            old = _snapshot(base, old_files), read_table(spark, base).schema
+            new = _snapshot(ok, old_files), read_table(spark, ok).schema
             assert old != new
             cache[name] = base, old_files, old, new, publish
         return cache[name]
@@ -156,7 +175,8 @@ def test_crash_at_every_commit_step(
     shutil.copytree(base, t)
     steps = crash(monkeypatch, lambda: write(spark, t), step)
     _recover(spark, t)
-    assert _snapshot(t, old_files) == (old if step <= publish else new)
+    got = _snapshot(t, old_files), read_table(spark, t).schema
+    assert got == (old if step <= publish else new)
     assert _siblings(t) == ["t"]
     if writer == "upsert_partitioned" and step == publish + 2:
         # the window in which a delete-then-rename loop loses a
@@ -166,7 +186,7 @@ def test_crash_at_every_commit_step(
         # nothing.
         assert steps[-1].startswith("delete day=")
         write(spark, t)
-        assert _snapshot(t, old_files)[0] == new[0]
+        assert _snapshot(t, old_files)[0] == new[0][0]
 
 
 def _mart_rows(root: str):
@@ -193,7 +213,7 @@ def mart_base(spark, tmp_path_factory):
     return root
 
 
-@pytest.mark.parametrize("step", range(4))
+@pytest.mark.parametrize("step", range(5))
 def test_versioned_commit_crash_then_epoch_replay(
     spark, mart_base, monkeypatch, tmp_path, step
 ):
@@ -204,11 +224,12 @@ def test_versioned_commit_crash_then_epoch_replay(
     steps = crash(monkeypatch, lambda: _refresh(spark, root, batch, 2), step)
     assert steps == [
         "delete v00000003",  # a crashed writer's unpublished data dir
+        "create _schema.json",  # the schema record, inside v00000003
         "create 00000003.commit.tmp",
         "rename 00000003.commit.tmp",
         "delete v00000001",  # keep_versions GC
     ][:step]
-    published = step > 2
+    published = step > 3
     assert _mart_rows(root) == (new if published else [("a", 2, 4), ("b", 1, 2)])
     # the source redelivers epoch 2: applied exactly once either way
     assert _refresh(spark, root, batch, 2) == (None if published else 3)

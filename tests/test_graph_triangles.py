@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import functions as F
-
 from hse_etl_ochirov_aldar_spark.operators.graph import triangle_counts
 
 

@@ -3,7 +3,6 @@ hitters, RRF hybrid retrieval, and bucketed-decay trending."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hse_etl_ochirov_aldar_spark.operators.percentile import (
+    _exact_bounds,
     global_percentile_bounds,
     grouped_percentile_bounds_ranked,
     grouped_percentile_trim,
@@ -71,6 +72,38 @@ def test_ranked_bounds_bit_identical_to_aggregate(spark, seed, lower, upper):
     assert not all_null & set(ranked)
     assert ranked == {g: b for g, b in buffer.items() if g not in all_null}
     # float == above: bit-identity, not approx
+
+
+@pytest.mark.parametrize("lower,upper", [(0.05, 0.95), (1.0 / 3.0, 0.75)])
+def test_one_aggregate_bounds_bit_identical_to_two(spark, lower, upper):
+    """The buffer strategy computes both bounds from one
+    ``percentile(v, array(lo, hi))``; on ties, NULLs and an all-NULL
+    group it returns exactly what two single-percentage aggregates do."""
+    df = _mixed_frame(spark, 5)
+    two = {
+        r["grp"]: (r["p_lo"], r["p_hi"])
+        for r in df.groupBy("grp")
+        .agg(
+            F.percentile("v", F.lit(lower)).alias("p_lo"),
+            F.percentile("v", F.lit(upper)).alias("p_hi"),
+        )
+        .collect()
+    }
+    assert two["only_nulls"] == (None, None)
+    one = {
+        r["grp"]: (r["p_lo"], r["p_hi"])
+        for r in _exact_bounds(df, "v", ["grp"], lower, upper).collect()
+    }
+    assert one == two  # float ==: bit-identity
+    whole = df.agg(
+        F.percentile("v", F.lit(lower)).alias("p_lo"),
+        F.percentile("v", F.lit(upper)).alias("p_hi"),
+    ).collect()
+    assert global_percentile_bounds(df, "v", lower, upper).collect() == whole
+    nulls = df.where(F.col("grp") == "only_nulls")
+    assert global_percentile_bounds(nulls, "v", lower, upper).collect()[0] == (
+        None, None
+    )
 
 
 def test_ranked_bounds_bit_identical_on_heavy_ties(spark):

@@ -20,7 +20,8 @@ would flag a definition reached only through a name string (getattr,
 importlib); the package reaches none of its own code that way.
 
 The same parsed trees also check that no package module other than an
-``__init__`` imports a name it never uses.
+``__init__`` imports a name it never uses; the test modules in
+``tests/`` are held to the same rule.
 """
 
 from __future__ import annotations
@@ -288,6 +289,17 @@ def test_package_modules_use_every_name_they_import():
         for mod, tree in g.trees.items()
         if mod.startswith(PKG) and not g.is_pkg[mod]
         for name in _unused_imports(tree)
+    ]
+    assert not unused, (
+        f"{len(unused)} imported names never used:\n  " + "\n  ".join(unused)
+    )
+
+
+def test_test_modules_use_every_name_they_import():
+    unused = [
+        f"{path.name}: {name}"
+        for path in sorted((ROOT / "tests").glob("*.py"))
+        for name in _unused_imports(ast.parse(path.read_text(), str(path)))
     ]
     assert not unused, (
         f"{len(unused)} imported names never used:\n  " + "\n  ".join(unused)

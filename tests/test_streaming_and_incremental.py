@@ -17,7 +17,6 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from hse_etl_ochirov_aldar_spark.operators.percentile import percentile_trim
 from hse_etl_ochirov_aldar_spark.operators.aggregates import daily_avg
 from hse_etl_ochirov_aldar_spark.queries import (
     _events_base,
@@ -162,8 +161,9 @@ def test_upsert_leftover_staging_contract(spark, tmpdir, monkeypatch):
         )
 
     # no target: the crashed first write's staged rows never appear
+    # (mutations: schema record, marker create <- crash)
     path = f"{tmpdir}/u2"
-    crash(monkeypatch, lambda: upsert(path, [("z", 9, 99.0)]), 0)
+    crash(monkeypatch, lambda: upsert(path, [("z", 9, 99.0)]), 1)
     assert os.path.exists(path + ".staged") and not os.path.exists(path)
     upsert(path, [("a", 1, 10.0)])
     rows = {(r.k, r.ver, r.val) for r in spark.read.parquet(path).collect()}
@@ -173,7 +173,9 @@ def test_upsert_leftover_staging_contract(spark, tmpdir, monkeypatch):
     # target intact, commit published but not applied: rolled forward
     path3 = f"{tmpdir}/u3"
     upsert(path3, [("a", 1, 10.0)])
-    crash(monkeypatch, lambda: upsert(path3, [("b", 1, 20.0)]), 2)
+    # mutations: schema record, marker create, marker rename, delete
+    # target <- crash
+    crash(monkeypatch, lambda: upsert(path3, [("b", 1, 20.0)]), 3)
     assert os.path.exists(path3 + ".commit")
     upsert(path3, [("c", 1, 30.0)])
     rows3 = {(r.k, r.ver, r.val) for r in spark.read.parquet(path3).collect()}
@@ -263,6 +265,113 @@ def test_partition_scoped_upsert(spark, tmpdir):
         ("b", 2, 25.0, "2024-02"),
         ("c", 1, 30.0, "2024-02"),
     }
+
+
+def test_partition_scoped_upsert_keeps_a_key_in_its_partition(spark, tmpdir):
+    """The partition-scoped contract: a key never moves between
+    partitions. A batch row whose key already lives in another
+    partition is kept beside the old row, whether or not the batch
+    also touches the old partition."""
+    path = f"{tmpdir}/pk"
+    cols = ["k", "ver", "val", "month"]
+    upsert_keep_newest(
+        spark,
+        spark.createDataFrame(
+            [("a", 1, 10.0, "2024-01"), ("b", 1, 20.0, "2024-01")], cols
+        ),
+        path, ["k"], "ver", partition_col="month",
+    )
+    # 2024-01 untouched, then touched by the same batch as the move
+    for rows in ([("a", 2, 11.0, "2024-02")],
+                 [("b", 2, 21.0, "2024-03"), ("c", 1, 30.0, "2024-01")]):
+        upsert_keep_newest(
+            spark, spark.createDataFrame(rows, cols), path, ["k"], "ver",
+            partition_col="month",
+        )
+    got = {(r.k, r.ver, r.month) for r in spark.read.parquet(path).collect()}
+    assert got == {
+        ("a", 1, "2024-01"), ("a", 2, "2024-02"),
+        ("b", 1, "2024-01"), ("b", 2, "2024-03"),
+        ("c", 1, "2024-01"),
+    }
+    # one file per partition
+    import os
+
+    for month in ("2024-01", "2024-02", "2024-03"):
+        files = os.listdir(f"{path}/month={month}")
+        assert len([f for f in files if f.endswith(".parquet")]) == 1
+
+
+def test_read_table_without_schema_record_infers(spark, tmpdir):
+    """A table written outside the sinks has no ``_schema.json``:
+    read_table reads it by inference, as a plain parquet read does."""
+    import os
+
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_table
+
+    path = f"{tmpdir}/plain"
+    spark.createDataFrame(
+        [(1, "x", "2024-01"), (2, "y", "2024-02")], "id INT, s STRING, month STRING"
+    ).write.partitionBy("month").parquet(path)
+    assert not os.path.exists(f"{path}/_schema.json")
+    got = read_table(spark, path)
+    assert got.schema == spark.read.parquet(path).schema
+    assert sorted(r.id for r in got.collect()) == [1, 2]
+
+
+def test_read_table_with_schema_record_starts_no_job(spark, tmpdir):
+    """A table the sinks wrote reads with its recorded schema: creating
+    the DataFrame runs no Spark job (a plain read infers the schema
+    from a footer in one job)."""
+    from hse_etl_ochirov_aldar_spark.sources.sinks import (
+        read_table,
+        write_partitioned,
+    )
+
+    path = f"{tmpdir}/recorded"
+    df = spark.createDataFrame(
+        [(1, "x", "2024-01"), (2, "y", "2024-02")], "id INT, s STRING, month STRING"
+    )
+    write_partitioned(df, path, "month")
+    sc = spark.sparkContext
+    sc.setJobGroup("read_table_no_job", "read_table")
+    try:
+        got = read_table(spark, path)
+        assert sc.statusTracker().getJobIdsForGroup("read_table_no_job") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got.schema == spark.read.parquet(path).schema
+    assert sorted(r.id for r in got.collect()) == [1, 2]
+
+
+@pytest.mark.parametrize("partition_col", [None, "month"])
+def test_widening_upsert_records_merged_schema(spark, tmpdir, partition_col):
+    """A batch that adds a column (``allowMissingColumns``) commits the
+    merged schema: read_table sees the old columns and the new one."""
+    import json
+
+    from hse_etl_ochirov_aldar_spark.sources.sinks import read_table
+
+    path = f"{tmpdir}/widen"
+    upsert_keep_newest(
+        spark,
+        spark.createDataFrame([("a", 1, "2024-01")], "k STRING, ver INT, month STRING"),
+        path, ["k"], "ver", partition_col=partition_col,
+    )
+    upsert_keep_newest(
+        spark,
+        spark.createDataFrame(
+            [("b", 1, "2024-02", 2.5)], "k STRING, ver INT, month STRING, score DOUBLE"
+        ),
+        path, ["k"], "ver", partition_col=partition_col,
+    )
+    with open(f"{path}/_schema.json") as f:
+        recorded = [field["name"] for field in json.load(f)["fields"]]
+    assert sorted(recorded) == ["k", "month", "score", "ver"]
+    got = read_table(spark, path)
+    assert sorted(got.columns) == ["k", "month", "score", "ver"]
+    assert {(r.k, r.score) for r in got.collect()} == {("a", None), ("b", 2.5)}
 
 
 def test_approx_percentile_bounds_close_to_exact(spark, sf_dir):
@@ -431,14 +540,15 @@ def test_versioned_upsert_crash_between_write_and_commit(spark, tmpdir, monkeypa
         root, ["k"], "ver",
     )
 
-    # mutations: orphan delete, marker create, marker rename <- crash
+    # mutations: orphan delete, schema record, marker create, marker
+    # rename <- crash
     steps = crash(
         monkeypatch,
         lambda: versioned_upsert(
             spark, spark.createDataFrame([("a", 2, 99)], cols),
             root, ["k"], "ver",
         ),
-        2,
+        3,
     )
     assert steps[-1] == "create 00000002.commit.tmp"
     # reader sees version 1, complete and unchanged — the orphan v2 data
@@ -1050,12 +1160,12 @@ def test_upsert_recovers_from_crash_mid_swap(spark, tmpdir, monkeypatch):
     b1 = spark.createDataFrame([("a", 1, 10.0), ("b", 1, 20.0)], cols)
     upsert_keep_newest(spark, b1, path, ["k"], "ver")
     b2 = spark.createDataFrame([("b", 2, 25.0)], cols)
-    # commit mutations: marker create, marker rename, delete target,
-    # rename staged <- crash
+    # commit mutations: schema record, marker create, marker rename,
+    # delete target, rename staged <- crash
     crash(
         monkeypatch,
         lambda: upsert_keep_newest(spark, b2, path, ["k"], "ver"),
-        3,
+        4,
     )
     assert not os.path.exists(path)
     b3 = spark.createDataFrame([("c", 1, 30.0)], cols)
@@ -1075,7 +1185,9 @@ def test_compact_recovers_from_crash_mid_swap(spark, tmpdir, monkeypatch):
     spark.range(1000).selectExpr("id", "id * 2 AS v").repartition(
         8
     ).write.parquet(path)
-    crash(monkeypatch, lambda: compact_parquet(spark, path), 3)
+    # mutations: schema record, marker create, marker rename, delete
+    # target, rename staged <- crash
+    crash(monkeypatch, lambda: compact_parquet(spark, path), 4)
     assert not os.path.exists(path)
     n = compact_parquet(spark, path)
     assert n >= 1
